@@ -207,11 +207,14 @@ def pq_train(
     deterministic seed/round discipline as :func:`kmeans_assign`) in
     each. Returns ``codebooks[m][k][dim/m]``.
 
-    Scale design: per subspace, training is the k-means loop — points
-    stream through codegen'd distance expressions, driver state is
-    k × (dim/m) doubles. The trained codebooks are ~m·k·(dim/m) = k·dim
-    doubles TOTAL (a few KB) — they broadcast as expression literals
-    into every downstream encode/search, never as a join side.
+    Scale design: the ``m`` Lloyd loops run side by side — one seed
+    collect, then ONE pass per recentering that assigns every subspace
+    (the :func:`pq_encode` expression over the current codebooks) and
+    averages every (subspace, codeword, position) cell, instead of
+    ``m`` separate passes. Driver state is k × dim doubles. The
+    trained codebooks are ~m·k·(dim/m) = k·dim doubles TOTAL (a few
+    KB) — they broadcast as expression literals into every downstream
+    encode/search, never as a join side.
     """
     pts = df.select(
         F.col(id_col).alias("id"),
@@ -221,11 +224,42 @@ def pq_train(
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
     d = dim // m
-    books = []
-    for s in range(m):
-        sub = pts.select("id", F.slice("v", s * d + 1, d).alias("v"))
-        _, cents = _lloyd(sub, k, iters)
-        books.append(cents)
+    # the k lowest-id vectors seed every subspace (rounded to 6, as
+    # _lloyd seeds one subspace)
+    seeds = [
+        [round(x, 6) for x in r["v"]]
+        for r in pts.orderBy("id").limit(k).collect()
+    ]
+    books = [[c[s * d:(s + 1) * d] for c in seeds] for s in range(m)]
+    for _ in range(iters - 1):
+        means = (
+            pq_encode(pts, books, vec_col="v", out="codes")
+            .select(
+                "codes", F.posexplode(F.slice("v", 1, dim)).alias("pos", "x")
+            )
+            .select(
+                F.expr(f"pos div {d}").alias("s"),
+                F.expr(f"element_at(codes, int(pos div {d}) + 1)").alias("cid"),
+                F.expr(f"pos % {d}").alias("p"),
+                "x",
+            )
+            .groupBy("s", "cid", "p")
+            .agg(F.round(F.avg("x"), 6).alias("m"))
+            .collect()
+        )
+        cells: dict[tuple[int, int], dict[int, float]] = {}
+        for r in means:
+            cells.setdefault((r["s"], r["cid"]), {})[r["p"]] = r["m"]
+        # a codeword emptied by reassignment keeps its previous value
+        books = [
+            [
+                [cells[s, cid][p] for p in sorted(cells[s, cid])]
+                if (s, cid) in cells
+                else books[s][cid]
+                for cid in range(k)
+            ]
+            for s in range(m)
+        ]
     return books
 
 

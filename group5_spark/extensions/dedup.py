@@ -1775,12 +1775,13 @@ def connected_components(
 
     Returns ``(id, comp)`` for every id appearing in ``pairs``.
 
-    Scale design: each round is one equi-join (edges × labels) + one
-    min-aggregate — both shuffle on the vertex id, no cross join, no
-    driver-side graph. Rounds needed = component diameter, and
-    near-dup clusters are shallow (dozens of docs, diameter ≤ a few),
-    so convergence is fast; ``localCheckpoint`` truncates the plan
-    lineage each round so the DAG stays O(1) per iteration (on a real
+    Scale design: each round is two equi-joins (edges × labels, and
+    labels × labels for pointer jumping) + one min-aggregate — all
+    shuffle on the vertex id, no cross join, no driver-side graph.
+    Rounds needed grow with log(component diameter), and near-dup
+    clusters are shallow (dozens of docs, diameter ≤ a few), so
+    convergence is fast; the edge set is materialized once and
+    ``localCheckpoint`` truncates the plan lineage each round so the DAG stays O(1) per iteration (on a real
     cluster point ``spark.sparkContext.setCheckpointDir`` at durable
     storage and swap in ``checkpoint`` for executor-loss resilience).
     Convergence is detected with a single scalar aggregate per round
@@ -1790,6 +1791,7 @@ def connected_components(
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .union(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
         .distinct()
+        .localCheckpoint()
     )
     labels = (
         edges.select(F.col("src").alias("id"))
@@ -1809,13 +1811,23 @@ def connected_components(
             .agg(F.min("dst_comp").alias("nbr_comp"))
             .select(F.col("src").alias("id"), "nbr_comp")
         )
+        # pointer jumping: a vertex also takes its label's own label
+        # (a member of the same component, so still sound), which
+        # halves the remaining path each round — rounds grow with
+        # log(diameter), not diameter
+        jumped = labels.select(
+            F.col("id").alias("comp"), F.col("comp").alias("comp_comp")
+        )
         stepped = (
             labels.join(nbr_min, "id", "left")
+            .join(jumped, "comp", "left")
             .select(
                 "id",
                 F.col("comp").alias("comp_prev"),
                 F.least(
-                    F.col("comp"), F.coalesce("nbr_comp", F.col("comp"))
+                    F.col("comp"),
+                    F.coalesce("nbr_comp", F.col("comp")),
+                    F.coalesce("comp_comp", F.col("comp")),
                 ).alias("comp"),
             )
             .localCheckpoint()

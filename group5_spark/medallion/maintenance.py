@@ -1,25 +1,37 @@
-"""Table maintenance: small-file compaction for Parquet tables.
+"""Table maintenance and snapshot DML.
 
-Incremental writers — the streaming upsert sink (`streaming.jobs.
-stream_upsert`), repeated MERGE batches, per-trigger appends — leave
-behind many small files. At scale that is a silent killer: a 100 TB
-table in 1 MB files means ~10⁸ scan tasks, file-listing RPCs, and
-footer reads dominating every query. Compaction rewrites fragmented
-partitions into files near a target size, restoring healthy scan
-parallelism and letting parquet row-group statistics work (each file
-covers a contiguous chunk, so min/max pruning actually prunes).
+Two layers live here.
 
-Only fragmented partitions are rewritten (count > needed-files);
-healthy partitions are never touched — compaction cost tracks the
-write rate, not the table size. Swap-in reuses the staging-rename
-pattern from :mod:`merge` so readers never observe a half-compacted
-partition. Local-filesystem listing here; the list/stat/rename calls
-map 1:1 onto the Hadoop FileSystem API for cluster storage.
+**Snapshot-table DML and maintenance** — DELETE, UPDATE and MERGE
+(:func:`snapshot_delete`, :func:`snapshot_update`,
+:func:`snapshot_merge`), the equality-delete upserts, and the
+compactions that fold small files and masks (:func:`compact_snapshot`,
+:func:`compact_snapshot_partitions`, :func:`compact_snapshot_masks`).
+Every read-modify-write runs in one optimistic-concurrency loop
+(:func:`_retry_on_conflict`) and commits through one core
+(:func:`_dml_commit`): the operation marks each row it read with
+whether its origin stops being visible (``_mask``) and whether it is
+written (``_emit``), and the core turns those marks into a commit —
+copy-on-write (every touched file rewritten) or, with
+``dv_threshold``, merge-on-read (per touched file: rewrite, or carry
+byte-untouched under a deletion vector). Files the manifest proves
+untouched carry into the new version by reference, so DML cost tracks
+the rows it touches, not the table. :func:`table_health` and
+:func:`apply_health` turn the manifest into maintenance decisions.
+
+**Hive-layout Parquet tables** — :func:`compact` rewrites fragmented
+partitions of a plain directory table into files near a target size
+(incremental writers leave many small files; at 100 TB, 1 MB files
+mean ~10⁸ scan tasks and footer reads dominating every query), and
+:func:`write_sorted` / :func:`write_zorder` lay files out so footer
+min/max statistics can skip them. Local-filesystem listing here; the
+list/stat/rename calls map 1:1 onto the Hadoop FileSystem API.
 """
 
 from __future__ import annotations
 
 import math
+import operator
 import shutil
 import uuid
 from pathlib import Path
@@ -28,77 +40,133 @@ from pyspark.sql import SparkSession
 
 __all__ = ["table_file_stats", "compact", "compact_snapshot", "snapshot_delete", "snapshot_update", "snapshot_merge", "snapshot_eq_upsert", "snapshot_eq_delete", "table_health", "compact_snapshot_partitions", "compact_snapshot_masks", "apply_health"]  # plus write_sorted/write_zorder/zorder_arranged/analyze_tables
 
+#: the row markers a DML frame carries beside the table columns
+#: (see :func:`_dml_commit`)
+_MARKERS = ("_file", "_pos", "_mask", "_emit")
 
-def _read_touched_entries(
-    spark: SparkSession,
-    root: Path,
-    head: dict,
-    entries: list[dict],
-    *,
-    with_lineage: bool = False,
-):
-    """Read ONLY the given manifest entries of a snapshot version —
-    the shared scan half of every file-pruned DML (DELETE/UPDATE/
-    MERGE), delegating to ``snapshots.read_entries``: same basePath
-    contract for Hive layouts, and entries carrying a deletion vector
-    are read merge-on-read (masked rows must never re-enter a DML's
-    resolution — a rewrite would resurrect them). ``with_lineage``
-    adds ``_file``/``_pos`` for the DV writer path."""
+_OPS = {
+    "=": operator.eq, "<": operator.lt, "<=": operator.le,
+    ">": operator.gt, ">=": operator.ge,
+}
+
+
+def _retry_on_conflict(attempt):
+    """The one optimistic-concurrency loop under every snapshot
+    read-modify-write (DELETE/UPDATE/MERGE and the three compactions):
+    ``attempt()`` reads the head, derives its rewrite and commits under
+    ``expected_parent``; when a racing commit makes that commit raise
+    :class:`SnapshotConflict`, the whole attempt re-runs against the
+    new head — a concurrent append is never discarded."""
     from group5_spark.medallion import snapshots as snap
 
-    return snap.read_entries(
-        spark, root, head, entries, with_lineage=with_lineage
+    while True:
+        try:
+            return attempt()
+        except snap.SnapshotConflict:
+            continue
+
+
+def _matches(predicates: list[tuple]):
+    """The conjunctive ``[(col, op, value), ...]`` predicate as a
+    NON-NULL boolean column: a row whose predicate evaluates to NULL is
+    not matched (SQL DELETE/UPDATE semantics)."""
+    from pyspark.sql import functions as F
+
+    m = F.lit(True)
+    for col, op, val in predicates:
+        m = m & _OPS[op](F.col(col), F.lit(val))
+    return F.coalesce(m, F.lit(False))
+
+
+def _split_by_predicates(head: dict, predicates: list[tuple]):
+    """``(touched, carried)``: the head's entries whose manifest stats
+    (and blooms, for equalities) may hold a matching row, and the rest,
+    which the DML carries by reference."""
+    from group5_spark.medallion import snapshots as snap
+
+    touched = snap._prune(head["files"], predicates)
+    paths = {e["path"] for e in touched}
+    return touched, [e for e in head["files"] if e["path"] not in paths]
+
+
+def _staged(path: str, version: int, carried: list[dict]) -> list[dict]:
+    """The entries commit ``version`` staged: every entry of its
+    manifest not carried by reference (footer row counts — metadata,
+    no Spark job)."""
+    from group5_spark.medallion import snapshots as snap
+
+    paths = {e["path"] for e in carried}
+    return [
+        e
+        for e in snap.snapshot_manifest(path, version)["files"]
+        if e["path"] not in paths
+    ]
+
+
+def _emit_all(df):
+    """A :func:`_dml_commit` frame that writes every row of ``df`` and
+    masks nothing (a compaction rewrite, or merge's insert-only batch)."""
+    from pyspark.sql import functions as F
+
+    return df.select(
+        "*", F.lit(False).alias("_mask"), F.lit(True).alias("_emit")
     )
 
-def _dv_commit(
+
+def _dml_commit(
     spark: SparkSession,
     root: Path,
     head: dict,
     touched: list[dict],
     carried: list[dict],
     frame,
-    dv_threshold: float,
+    dv_threshold: float | None,
     *,
     note: dict | None = None,
     stats_cols: list[str] | None = None,
     bloom_cols: list[str] | None = None,
     carry_kmv: bool = False,
 ) -> dict:
-    """The merge-on-read write half shared by every DV-mode DML
-    (MERGE/DELETE/UPDATE): decide rewrite-vs-deletion-vector PER
-    TOUCHED FILE, write one union sidecar for the masked positions,
-    stage only the rows that must exist as new bytes, and commit.
+    """The commit core under every snapshot DML and compaction: turn a
+    marked ``frame`` over the ``touched`` entries into one commit that
+    carries ``carried`` by reference, under ``expected_parent`` =
+    ``head``.
 
     ``frame`` carries the table columns (already holding each row's
-    FINAL value) plus four lineage markers from
-    ``_read_touched_entries(with_lineage=True)`` /
-    ``resolve_merge_actions(passthrough_cols=...)``:
+    FINAL value) plus two markers:
 
-    - ``_file``/``_pos`` — the row's physical origin (NULL for rows
-      with no target origin, i.e. inserts);
-    - ``_mask`` — the origin position must stop being visible (the
-      row was deleted, or replaced by an emitted update);
-    - ``_emit`` — the row's final value must be WRITTEN to new files
-      (inserts, updated rows). A row can be both (update: mask old
-      position, emit new value), either, or neither (keep).
+    - ``_mask`` — the row's origin must stop being visible (the row
+      was deleted, replaced by an emitted update, or is a source row
+      the operation drops);
+    - ``_emit`` — the row's final value must be WRITTEN (inserts,
+      updated rows). A row can be both (update: mask old position,
+      emit new value), either, or neither (keep).
 
-    Per-file economics (the Iceberg-v2 / Delta-DV contract): a file
-    whose masked fraction exceeds ``dv_threshold`` — or that died
-    entirely — is REWRITTEN (its keeps are emitted, the file leaves
-    the manifest); a file below the threshold is carried byte-
-    untouched with a ``dv`` reference, so a 10-row match in a 1 GB
-    file costs a 10-position sidecar row-group, not a 1 GB rewrite.
-    Bytes written ∝ emitted rows + masked positions, never ∝ touched
-    file bytes. A file already carrying a DV gets the UNION sidecar
-    (old positions ∪ new) so each entry references exactly one
-    sidecar; positions are disjoint by construction because the read
-    half already masked the old ones.
+    Copy-on-write (``dv_threshold=None``, or nothing touched — an
+    append-shaped commit): every touched file is rewritten; the staged
+    rows are ``_emit | ~_mask``. One write job, no mask counting, and
+    the frame needs no lineage columns.
 
-    Commits under ``expected_parent`` like every read-modify-write;
-    on :class:`SnapshotConflict` the freshly written sidecar is
-    reclaimed before re-raising (the caller's OCC loop re-runs the
-    whole prune-read-resolve). Returns ``{version, files_rewritten,
-    files_masked, files_carried, rows_masked}``.
+    Merge-on-read (``dv_threshold`` set): the frame also carries
+    ``_file``/``_pos``, the row's physical origin (NULL for rows with
+    no target origin), from ``read_entries(with_lineage=True)`` /
+    ``resolve_merge_actions(passthrough_cols=...)``. The masked
+    positions are counted PER TOUCHED FILE (the Iceberg-v2 / Delta-DV
+    contract): a file whose masked fraction exceeds ``dv_threshold`` —
+    or that died entirely — is REWRITTEN (its keeps are emitted, the
+    file leaves the manifest); a file below the threshold is carried
+    byte-untouched with a ``dv`` reference, so a 10-row match in a
+    1 GB file costs a 10-position sidecar row-group, not a 1 GB
+    rewrite. A file already carrying a DV gets the UNION sidecar (old
+    positions ∪ new) so each entry references exactly one sidecar;
+    positions are disjoint because the read half already masked the
+    old ones.
+
+    A :class:`SnapshotConflict` reclaims the fresh sidecar and
+    propagates to :func:`_retry_on_conflict`, which re-runs the whole
+    read-resolve-commit. Returns ``{version, files_rewritten,
+    files_carried}``, plus ``{files_masked, rows_masked,
+    rows_matched}`` for a merge-on-read commit.
     """
     from pyspark.sql import functions as F
 
@@ -107,49 +175,48 @@ def _dv_commit(
     # frame-derived, not head-schema-derived: under schema evolution
     # the frame already carries the WIDENED column set the commit must
     # stage (resolution/read preserved the table-then-appended order)
-    tbl_cols = [
-        c
-        for c in frame.columns
-        if c not in ("_file", "_pos", "_mask", "_emit")
-    ]
-    frame = frame.persist()
+    tbl_cols = [c for c in frame.columns if c not in _MARKERS]
+    mor = dv_threshold is not None and bool(touched)
+    by_path = {e["path"]: e for e in touched}
+    mask_counts: dict[str, int] = {}
+    rewrite, dv_mask, untouched = list(by_path), [], []
+    keep = ~F.col("_mask")
+    dv_dir: str | None = None
+    new_dv_entries: list[dict] = []
+    if mor:
+        frame = frame.persist()
     try:
-        mask_counts = {
-            r["_file"]: int(r["n"])
-            for r in frame.filter(
-                F.col("_mask") & F.col("_file").isNotNull()
+        if mor:
+            mask_counts = {
+                r["_file"]: int(r["n"])
+                for r in frame.filter(
+                    F.col("_mask") & F.col("_file").isNotNull()
+                )
+                .groupBy("_file")
+                .agg(F.count(F.lit(1)).alias("n"))
+                .collect()
+            }
+            rewrite = []
+            for f, n in sorted(mask_counts.items()):
+                live = snap.entry_rows(by_path[f])
+                # a fully-dead file always rewrites (to nothing):
+                # carrying a 100%-masked file would pay its sidecar
+                # forever
+                if not live or n >= live or n / live > dv_threshold:
+                    rewrite.append(f)
+                else:
+                    dv_mask.append(f)
+            untouched = [e for e in touched if e["path"] not in mask_counts]
+            keep = keep & (
+                F.col("_file").isin(rewrite) if rewrite else F.lit(False)
             )
-            .groupBy("_file")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        by_path = {e["path"]: e for e in touched}
-        rewrite: list[str] = []
-        dv_mask: list[str] = []
-        for f, n in sorted(mask_counts.items()):
-            live = snap.entry_rows(by_path[f])
-            # a fully-dead file always rewrites (to nothing): carrying
-            # a 100%-masked file would pay its sidecar forever
-            if not live or n >= live or n / live > dv_threshold:
-                rewrite.append(f)
-            else:
-                dv_mask.append(f)
-        untouched = [e for e in touched if e["path"] not in mask_counts]
-
-        rewrite_pred = (
-            F.col("_file").isin(rewrite) if rewrite else F.lit(False)
-        )
-        out = frame.filter(
-            F.col("_emit") | ((~F.col("_mask")) & rewrite_pred)
-        ).select(*tbl_cols)
-        if not rewrite and out.isEmpty():
+        out = frame.filter(F.col("_emit") | keep).select(*tbl_cols)
+        if mor and not rewrite and out.isEmpty():
             # a pure-DV commit (e.g. a small delete) stages NO bytes;
             # without this, every CDC batch would litter the table with
             # empty part files (cheap on the persisted frame)
             out = spark.createDataFrame([], out.schema)
 
-        dv_dir: str | None = None
-        new_dv_entries: list[dict] = []
         if dv_mask:
             dv_dir = f"dv-{uuid.uuid4().hex[:8]}"
             masks = frame.filter(
@@ -157,9 +224,7 @@ def _dv_commit(
             ).select(
                 F.col("_file").alias("file"), F.col("_pos").alias("pos")
             )
-            prior_dv_files = [
-                f for f in dv_mask if by_path[f].get("dv")
-            ]
+            prior_dv_files = [f for f in dv_mask if by_path[f].get("dv")]
             if prior_dv_files:
                 olds = sorted(
                     {by_path[f]["dv"]["sidecar"] for f in prior_dv_files}
@@ -185,13 +250,12 @@ def _dv_commit(
                 }
                 new_dv_entries.append(ne)
 
-        carry = list(carried) + untouched + new_dv_entries
         try:
             v = snap.snapshot_commit(
                 out,
                 str(root),
                 mode="overwrite",
-                carry_files=carry,
+                carry_files=list(carried) + untouched + new_dv_entries,
                 expected_parent=head["version"],
                 partition_by=head.get("partition_by"),
                 stats_cols=stats_cols,
@@ -203,16 +267,19 @@ def _dv_commit(
             if dv_dir is not None:
                 shutil.rmtree(root / dv_dir, ignore_errors=True)
             raise
-        return {
-            "version": v,
-            "files_rewritten": len(rewrite),
-            "files_masked": len(dv_mask),
-            "files_carried": len(carried) + len(untouched),
-            "rows_masked": sum(mask_counts[f] for f in dv_mask),
-            "rows_matched": sum(mask_counts.values()),
-        }
     finally:
-        frame.unpersist()
+        if mor:
+            frame.unpersist()
+    res = {
+        "version": v,
+        "files_rewritten": len(rewrite),
+        "files_carried": len(carried) + len(untouched),
+    }
+    if mor:
+        res["files_masked"] = len(dv_mask)
+        res["rows_masked"] = sum(mask_counts[f] for f in dv_mask)
+        res["rows_matched"] = sum(mask_counts.values())
+    return res
 
 
 DEFAULT_TARGET_BYTES = 128 * 1024 * 1024
@@ -365,7 +432,9 @@ def compact_snapshot(
     cluster_cols = list(sort_cols or zorder_cols or [])
     if cluster_cols:
         stats_cols = sorted(set(stats_cols or []) | set(cluster_cols))
-    while True:
+    root = Path(path)
+
+    def attempt() -> dict:
         manifest = snap.snapshot_manifest(path)
         files = manifest["files"]
         nbytes = sum(e.get("bytes", 0) for e in files)
@@ -374,14 +443,14 @@ def compact_snapshot(
             not cluster_cols
             and not force
             # pending equality-delete masks always warrant a rewrite:
-            # the full overwrite below FOLDS them (reads run masked,
+            # the full rewrite below FOLDS them (reads run masked,
             # the new manifest drops the sidecars — see the eq GC in
             # snapshot_commit), ending the per-read anti-join rent
             and not manifest.get("eq_deletes")
             and len(files) <= max(needed, min_files_to_compact)
         ):
             return {}
-        before = snap.snapshot_read(spark, path, version=manifest["version"])
+        before = snap.read_entries(spark, root, manifest, files)
         if sort_cols:
             arranged = before.repartitionByRange(
                 needed, *sort_cols
@@ -390,43 +459,31 @@ def compact_snapshot(
             arranged = zorder_arranged(before, zorder_cols, n_files=needed)
         else:
             arranged = before.coalesce(needed)
-        try:
-            version = snap.snapshot_commit(
-                arranged,
-                path,
-                mode="overwrite",
-                stats_cols=stats_cols,
-                bloom_cols=bloom_cols,
-                # preserve the table's partition layout: an overwrite
-                # without partition_by would silently DE-PARTITION a
-                # partitioned table (and lose its manifest partition
-                # pruning) — compaction must change file sizes, never
-                # the table contract
-                partition_by=manifest.get("partition_by"),
-                note={
-                    "compaction": True,
-                    "files_before": len(files),
-                    **(
-                        {"clustered_by": cluster_cols}
-                        if cluster_cols
-                        else {}
-                    ),
-                },
-                expected_parent=manifest["version"],
-                carry_kmv=True,  # same logical rows, new layout
-            )
-        except snap.SnapshotConflict:
-            continue  # head moved mid-rewrite; re-read and retry
+        # every file is touched and nothing carries; the core keeps
+        # the table's partition layout (a rewrite without it would
+        # silently DE-PARTITION the table) — compaction changes file
+        # sizes, never the table contract
+        res = _dml_commit(
+            spark, root, manifest, files, [], _emit_all(arranged), None,
+            stats_cols=stats_cols,
+            bloom_cols=bloom_cols,
+            note={
+                "compaction": True,
+                "files_before": len(files),
+                **({"clustered_by": cluster_cols} if cluster_cols else {}),
+            },
+            carry_kmv=True,  # same logical rows, new layout
+        )
         return {
             "files_before": len(files),
             # actual count from the committed manifest: a partitioned
             # rewrite fans each task across its partition dirs, so
             # the file count is NOT simply `needed`
-            "files_after": len(
-                snap.snapshot_manifest(path, version)["files"]
-            ),
-            "version": version,
+            "files_after": len(_staged(path, res["version"], [])),
+            "version": res["version"],
         }
+
+    return _retry_on_conflict(attempt)
 
 
 def write_sorted(
@@ -605,93 +662,59 @@ def snapshot_delete(
     kilobyte sidecar. ``compact_snapshot`` folds DVs back into plain
     files. The result dict gains ``files_masked``/``rows_masked``.
 
+    SQL semantics in both modes: a row whose predicate evaluates to
+    NULL (a NULL in a predicate column) is not matched and survives.
+
     Returns ``{version, files_rewritten, files_carried, rows_deleted}``
     (no-op dict with ``version`` = current head when no file can
     match).
     """
-    import operator as _op
-
     from pyspark.sql import functions as F
 
     from group5_spark.medallion import snapshots as snap
 
-    ops = {
-        "=": _op.eq, "<": _op.lt, "<=": _op.le, ">": _op.gt, ">=": _op.ge,
-    }
     root = Path(path)
-    while True:
+    note = {"delete_where": [list(p) for p in predicates]}
+
+    def attempt() -> dict:
         head = snap.snapshot_manifest(path)
-        version = head["version"]
-        touched, total = snap.prune_entries(path, predicates, version)
+        touched, carried = _split_by_predicates(head, predicates)
         if not touched:
             return {
-                "version": version,
+                "version": head["version"],
                 "files_rewritten": 0,
-                "files_carried": total,
+                "files_carried": len(carried),
                 "rows_deleted": 0,
             }
-        touched_paths = {e["path"] for e in touched}
-        carried = [
-            e for e in head["files"] if e["path"] not in touched_paths
-        ]
-        note = {"delete_where": [list(p) for p in predicates]}
-
-        matches = F.lit(True)
-        for col, op, val in predicates:
-            matches = matches & ops[op](F.col(col), F.lit(val))
-
-        if dv_threshold is not None:
-            df = _read_touched_entries(
-                spark, root, head, touched, with_lineage=True
-            )
-            frame = df.withColumn(
-                "_mask", F.coalesce(matches, F.lit(False))
-            ).withColumn("_emit", F.lit(False))
-            try:
-                out = _dv_commit(
-                    spark, root, head, touched, carried, frame,
-                    dv_threshold, note=note,
-                    # deletion only shrinks the key population: the
-                    # parent's NDV sketch stays a sound upper bound
-                    carry_kmv=True,
-                )
-            except snap.SnapshotConflict:
-                continue
-            # in a delete, every matched (masked-or-rewritten-away)
-            # row is a deletion
-            out["rows_deleted"] = out.pop("rows_matched")
-            return out
-
-        touched_rows = sum(snap.entry_rows(e) for e in touched)
-        df = _read_touched_entries(spark, root, head, touched)
-        survivors = df.filter(~matches)
-
-        try:
-            new_v = snap.snapshot_commit(
-                survivors,
-                path,
-                mode="overwrite",
-                carry_files=carried,
-                expected_parent=version,
-                partition_by=head.get("partition_by"),
-                note=note,
-                carry_kmv=True,  # deletion: NDV can only shrink
-            )
-        except snap.SnapshotConflict:
-            continue  # a commit raced the read; re-derive on the new head
-        new_files = snap.snapshot_manifest(path, new_v)["files"]
-        carried_paths = {e["path"] for e in carried}
-        staged_rows = sum(
-            int(e.get("rows", 0))
-            for e in new_files
-            if e["path"] not in carried_paths
+        df = snap.read_entries(
+            spark, root, head, touched, with_lineage=dv_threshold is not None
         )
-        return {
-            "version": new_v,
-            "files_rewritten": len(touched),
-            "files_carried": len(carried),
-            "rows_deleted": touched_rows - staged_rows,
-        }
+        frame = df.withColumn("_mask", _matches(predicates)).withColumn(
+            "_emit", F.lit(False)
+        )
+        out = _dml_commit(
+            spark, root, head, touched, carried, frame, dv_threshold,
+            note=note,
+            # deletion only shrinks the key population: the parent's
+            # NDV sketch stays a sound upper bound
+            carry_kmv=True,
+        )
+        # every matched (masked or rewritten-away) row is a deletion;
+        # a copy-on-write commit counts them from footers instead of a
+        # counting job: touched live rows minus the rows it staged
+        matched = out.pop("rows_matched", None)
+        out["rows_deleted"] = (
+            matched
+            if matched is not None
+            else sum(snap.entry_rows(e) for e in touched)
+            - sum(
+                int(e.get("rows", 0))
+                for e in _staged(path, out["version"], carried)
+            )
+        )
+        return out
+
+    return _retry_on_conflict(attempt)
 
 
 def _stats_overlap_fraction(files: list[dict], col: str) -> float | None:
@@ -979,99 +1002,54 @@ def snapshot_update(
     changed is not knowable from footers — an update preserves
     counts).
     """
-    import operator as _op
-
     from pyspark.sql import functions as F
 
     from group5_spark.medallion import snapshots as snap
 
-    ops = {
-        "=": _op.eq, "<": _op.lt, "<=": _op.le, ">": _op.gt, ">=": _op.ge,
-    }
     root = Path(path)
-    while True:
+    note = {
+        "update_where": [list(p) for p in predicates],
+        "set_cols": sorted(set_exprs),
+    }
+
+    def attempt() -> dict:
         head = snap.snapshot_manifest(path)
-        version = head["version"]
-        touched, total = snap.prune_entries(path, predicates, version)
+        touched, carried = _split_by_predicates(head, predicates)
         if not touched:
             return {
-                "version": version,
+                "version": head["version"],
                 "files_rewritten": 0,
-                "files_carried": total,
+                "files_carried": len(carried),
             }
-        touched_paths = {e["path"] for e in touched}
-        carried = [
-            e for e in head["files"] if e["path"] not in touched_paths
-        ]
-        note = {"update_where": [list(p) for p in predicates],
-                "set_cols": sorted(set_exprs)}
-
-        matches = F.lit(True)
-        for col, op, val in predicates:
-            matches = matches & ops[op](F.col(col), F.lit(val))
-
-        if dv_threshold is not None:
-            df = _read_touched_entries(
-                spark, root, head, touched, with_lineage=True
-            )
-            m = F.coalesce(matches, F.lit(False))
-            # an updated row masks its old position AND emits its new
-            # value; non-matching rows are pure keeps
-            frame = df.select(
-                *[
-                    F.when(m, set_exprs[c]).otherwise(F.col(c)).alias(c)
-                    if c in set_exprs
-                    else F.col(c)
-                    for c in df.columns
-                    if c not in ("_file", "_pos")
-                ],
-                "_file",
-                "_pos",
-                m.alias("_mask"),
-                m.alias("_emit"),
-            )
-            try:
-                out = _dv_commit(
-                    spark, root, head, touched, carried, frame,
-                    dv_threshold, note=note,
-                    # an UPDATE keeps every row; the sketch stays
-                    # honest unless a sketched column is rewritten
-                    carry_kmv=not (
-                        set(set_exprs) & set(head.get("kmv") or {})
-                    ),
-                )
-            except snap.SnapshotConflict:
-                continue
-            out["rows_updated"] = out.pop("rows_matched")
-            out.pop("rows_masked")
-            return out
-
-        df = _read_touched_entries(spark, root, head, touched)
-        updated = df.select(
+        df = snap.read_entries(
+            spark, root, head, touched, with_lineage=dv_threshold is not None
+        )
+        m = _matches(predicates)
+        # an updated row masks its old position AND emits its new
+        # value; non-matching rows are pure keeps
+        frame = df.select(
             *[
-                F.when(matches, set_exprs[c]).otherwise(F.col(c)).alias(c)
+                F.when(m, set_exprs[c]).otherwise(F.col(c)).alias(c)
                 if c in set_exprs
                 else F.col(c)
                 for c in df.columns
-            ]
+            ],
+            m.alias("_mask"),
+            m.alias("_emit"),
         )
-        try:
-            new_v = snap.snapshot_commit(
-                updated,
-                path,
-                mode="overwrite",
-                carry_files=carried,
-                expected_parent=version,
-                partition_by=head.get("partition_by"),
-                note=note,
-            )
-        except snap.SnapshotConflict:
-            continue
-        return {
-            "version": new_v,
-            "files_rewritten": len(touched),
-            "files_carried": len(carried),
-        }
+        out = _dml_commit(
+            spark, root, head, touched, carried, frame, dv_threshold,
+            note=note,
+            # an UPDATE keeps every row; the sketch stays honest
+            # unless a sketched column is rewritten
+            carry_kmv=not (set(set_exprs) & set(head.get("kmv") or {})),
+        )
+        if "rows_matched" in out:
+            out["rows_updated"] = out.pop("rows_matched")
+            out.pop("rows_masked")
+        return out
+
+    return _retry_on_conflict(attempt)
 
 
 def snapshot_merge(
@@ -1149,7 +1127,7 @@ def snapshot_merge(
     untouched by construction).
 
     ``dv_threshold`` routes the write through the merge-on-read path
-    (see :func:`_dv_commit`): sub-threshold matched files carry
+    (see :func:`_dml_commit`): sub-threshold matched files carry
     byte-untouched with a deletion-vector sidecar over the replaced
     rows' positions, and only inserts + updated values stage as new
     bytes. ``schema_evolution=True`` accepts SOURCE columns absent
@@ -1180,24 +1158,25 @@ def snapshot_merge(
     if validate_source_keys:
         _validate_unique_keys(source, keys)
 
-    def _clause_kwargs() -> dict:
-        return dict(
-            when_matched=when_matched,
-            when_not_matched=when_not_matched,
-            sequence_col=sequence_col,
-            matched_condition=matched_condition,
-            update_set=update_set,
-            matched_clauses=matched_clauses,
-            insert_values=insert_values,
-            when_not_matched_by_source=when_not_matched_by_source,
-            not_matched_by_source_condition=not_matched_by_source_condition,
-            not_matched_by_source_set=not_matched_by_source_set,
-        )
+    clauses = dict(
+        when_matched=when_matched,
+        when_not_matched=when_not_matched,
+        sequence_col=sequence_col,
+        matched_condition=matched_condition,
+        update_set=update_set,
+        matched_clauses=matched_clauses,
+        insert_values=insert_values,
+        when_not_matched_by_source=when_not_matched_by_source,
+        not_matched_by_source_condition=not_matched_by_source_condition,
+        not_matched_by_source_set=not_matched_by_source_set,
+    )
     # the key columns are the prune axis of every future merge: record
     # their min/max on each commit unconditionally (commit-time
     # coverage inheritance keeps them on the table from then on)
     stats_cols = sorted(set(keys) | set(stats_cols or []))
     root = Path(path)
+    lineage = dv_threshold is not None
+    merge_note = {"op": "merge", **(note or {})}
 
     def _zero(version: int) -> dict:
         return {
@@ -1212,7 +1191,7 @@ def snapshot_merge(
 
     def _as_inserts(df, out_cols: list[str]):
         """Source rows shaped as INSERT rows for the no-join fast
-        paths: full source rows by default; with ``insert_values``
+        path: full source rows by default; with ``insert_values``
         the listed expressions evaluate over a ``src`` struct and
         unlisted columns become typed NULLs — the same rows the full
         resolver would produce for unmatched source rows."""
@@ -1231,81 +1210,79 @@ def snapshot_merge(
             ]
         )
 
-    try:
-        snap.snapshot_manifest(path)
-    except FileNotFoundError:
-        # absent table: the merge IS the initial load
-        if when_not_matched != "insert":
-            return _zero(0)
-        v = snap.snapshot_commit(
-            _as_inserts(source, source.columns),
-            path,
-            mode="overwrite",
-            partition_by=partition_by,
-            stats_cols=stats_cols,
-            bloom_cols=bloom_cols,
-            note={"op": "merge", **(note or {})},
-        )
-        out = _zero(v)
-        # inserted count from the committed manifest's footers —
-        # metadata-priced, no extra Spark job
-        out["inserted"] = sum(
-            int(e.get("rows", 0))
-            for e in snap.snapshot_manifest(path, v)["files"]
-        )
-        return out
+    # The source probe, computed once the table exists (an absent
+    # table's merge is its initial load and needs none): ONE aggregate
+    # over the source — per-key min/max (range pruning), exact
+    # distinct-key count (bloom-probe eligibility) and row count (the
+    # genuinely-empty-batch test — key min/max alone can't tell "no
+    # rows" from "rows whose keys are all NULL", and the latter still
+    # INSERT under when_not_matched='insert'). The source is a change
+    # batch — this job is priced by the batch.
+    src: dict = {}
 
-    # ONE aggregate over the source: per-key min/max (range pruning)
-    # + exact distinct-key count (bloom-probe eligibility) + row count
-    # (the genuinely-empty-batch test — key min/max alone can't tell
-    # "no rows" from "rows whose keys are all NULL", and the latter
-    # still INSERT under when_not_matched='insert'). The source is a
-    # change batch — this job is priced by the batch.
-    aggs = []
-    for k in keys:
-        aggs += [F.min(k).alias(f"_min_{k}"), F.max(k).alias(f"_max_{k}")]
-    aggs.append(F.count_distinct(*[F.col(k) for k in keys]).alias("_ndk"))
-    aggs.append(F.count(F.lit(1)).alias("_cnt"))
-    b = source.agg(*aggs).first()
-    if int(b["_cnt"] or 0) == 0:
-        return _zero(snap.snapshot_manifest(path)["version"])  # empty batch
-    # every key column entirely NULL ⇒ no source row can equi-match
-    # any target row; the rows are pure inserts (the no-touch fast
-    # path below handles insert vs ignore) — but a by-source clause
-    # still has to visit every file, so only short-circuit without one
-    all_null_keys = all(b[f"_min_{k}"] is None for k in keys)
-    probe_tuples: list[tuple] | None = None
-    if not all_null_keys and int(b["_ndk"] or 0) <= key_probe_limit:
-        probe_tuples = [
-            tuple(r)
-            for r in source.select(*keys).distinct().collect()
-            if all(v is not None for v in r)  # NULL never equi-matches
-        ]
-    # pre-hash each probe's bloom bit positions ONCE — the prune loop
-    # probes |files| × |keys| times and md5 per probe-per-file adds up
-    comp_bloom_key = (
-        snap.composite_bloom_name(keys) if len(keys) > 1 else keys[0]
-    )
-    sorted_pos = [keys.index(k) for k in sorted(keys)]
-    probe_pos: list[tuple[tuple, list[int]]] | None = None
-    if probe_tuples is not None:
-        probe_pos = [
-            (
-                t,
-                snap._bloom_hashes(
-                    t[0]
-                    if len(keys) == 1
-                    else snap._COMPOSITE_SEP.join(
-                        str(t[i]) for i in sorted_pos
-                    )
-                ),
+    def _probe_source() -> None:
+        aggs = []
+        for k in keys:
+            aggs += [F.min(k).alias(f"_min_{k}"), F.max(k).alias(f"_max_{k}")]
+        aggs.append(F.count_distinct(*[F.col(k) for k in keys]).alias("_ndk"))
+        aggs.append(F.count(F.lit(1)).alias("_cnt"))
+        b = source.agg(*aggs).first()
+        src["b"] = b
+        src["empty"] = int(b["_cnt"] or 0) == 0
+        # every key column entirely NULL ⇒ no source row can equi-match
+        # any target row; the rows are pure inserts (the no-touch fast
+        # path handles insert vs ignore) — but a by-source clause
+        # still has to visit every file, so only short-circuit without
+        # one
+        src["all_null"] = all(b[f"_min_{k}"] is None for k in keys)
+        # pre-hash each probe tuple's bloom bit positions ONCE — the
+        # prune loop probes |files| × |keys| times
+        src["probe"] = (
+            snap._key_probe(
+                keys,
+                [
+                    tuple(r)
+                    for r in source.select(*keys).distinct().collect()
+                    if all(v is not None for v in r)  # NULL never equi-matches
+                ],
             )
-            for t in probe_tuples
-        ]
+            if not src["all_null"] and int(b["_ndk"] or 0) <= key_probe_limit
+            else None
+        )
 
-    while True:
-        head = snap.snapshot_manifest(path)
+    def may_match(e: dict) -> bool:
+        if int(e.get("rows", 0)) == 0:
+            return False  # an empty file (no stats either) never matches
+        st = e.get("stats") or {}
+        b = src["b"]
+        # range test: every key's file range must intersect the
+        # source batch's [min, max] (missing stats → must read)
+        if not all(
+            snap._overlaps(st, k, ">=", b[f"_min_{k}"])
+            and snap._overlaps(st, k, "<=", b[f"_max_{k}"])
+            for k in keys
+        ):
+            return False
+        # point sharpening: keep the file only if at least one source
+        # key tuple may be present (stats, then bloom)
+        return src["probe"] is None or snap._may_hold_key(
+            e, keys, src["probe"]
+        )
+
+    def attempt() -> dict:
+        try:
+            head = snap.snapshot_manifest(path)
+        except FileNotFoundError:
+            # absent table: the merge IS the initial load (every row
+            # inserts); committing on parent 0 makes a racing creator
+            # a conflict, and the retry merges into what it created
+            head = {"version": 0, "files": [], "partition_by": partition_by}
         version = head["version"]
+        if version and not src:
+            _probe_source()
+        if src.get("empty"):
+            return _zero(version)  # empty batch
+        tbl_cols = source.columns
         evo_cols: list[tuple[str, str]] = []
         if head.get("schema") is not None:
             tbl_cols = [f["name"] for f in head["schema"]["fields"]]
@@ -1337,45 +1314,15 @@ def snapshot_merge(
                 f"merge partition_by must agree (got {partition_by!r})"
             )
 
-        def may_match(e: dict) -> bool:
-            if int(e.get("rows", 0)) == 0:
-                return False  # an empty file (no stats either) never matches
-            st = e.get("stats") or {}
-            # range test: every key's file range must intersect the
-            # source batch's [min, max] (missing stats → must read)
-            for k in keys:
-                if not (
-                    snap._overlaps(st, k, ">=", b[f"_min_{k}"])
-                    and snap._overlaps(st, k, "<=", b[f"_max_{k}"])
-                ):
-                    return False
-            if probe_pos is None:
-                return True
-            # point sharpening: keep the file only if at least one
-            # source key (tuple) may be present — every key's min/max
-            # must contain its component, then the bloom (single-column
-            # or canonical composite) when the file has one. A file
-            # with neither stats nor bloom passes via _overlaps'
-            # missing-stats=True on the first probe.
-            bloom = (e.get("bloom") or {}).get(comp_bloom_key)
-            for t, pos in probe_pos:
-                ok = all(
-                    snap._overlaps(st, k, "=", v) for k, v in zip(keys, t)
-                )
-                if ok and bloom is not None:
-                    ok = snap._bloom_might_contain_positions(bloom, pos)
-                if ok:
-                    return True
-            return False
-
         if when_not_matched_by_source is not None:
             # a by-source action can land in ANY file regardless of
             # the source's keys (the rows it deletes/updates are
             # exactly the ones the source does NOT name) — pruning is
             # unsound; only genuinely empty files stay carried
             flags = [int(e.get("rows", 0)) > 0 for e in head["files"]]
-        elif all_null_keys:
-            flags = [False] * len(head["files"])  # pure-insert batch
+        elif src.get("all_null", True):
+            # pure-insert batch (or an absent table: nothing to match)
+            flags = [False] * len(head["files"])
         else:
             flags = [may_match(e) for e in head["files"]]
         touched = [e for e, f in zip(head["files"], flags) if f]
@@ -1387,92 +1334,29 @@ def snapshot_merge(
             # append-shaped fast path: nothing can match, so every
             # source row inserts — no join, no table read (aligned to
             # the table's declared column order)
-            inserts = _as_inserts(
-                source,
-                tbl_cols if head.get("schema") is not None else source.columns,
+            out = _dml_commit(
+                spark, root, head, [], carried,
+                _emit_all(_as_inserts(source, tbl_cols)), dv_threshold,
+                note=merge_note, stats_cols=stats_cols, bloom_cols=bloom_cols,
             )
-            try:
-                v = snap.snapshot_commit(
-                    inserts,
-                    path,
-                    mode="overwrite",
-                    carry_files=carried,
-                    expected_parent=version,
-                    partition_by=head.get("partition_by"),
-                    stats_cols=stats_cols,
-                    bloom_cols=bloom_cols,
-                    note={"op": "merge", **(note or {})},
-                )
-            except snap.SnapshotConflict:
-                continue
-            out = _zero(v)
-            carried_paths = {e["path"] for e in carried}
-            out["inserted"] = sum(
+            res = _zero(out["version"])
+            res["inserted"] = sum(
                 int(e.get("rows", 0))
-                for e in snap.snapshot_manifest(path, v)["files"]
-                if e["path"] not in carried_paths
+                for e in _staged(path, out["version"], carried)
             )
-            out["files_carried"] = len(carried)
-            return out
+            res["files_carried"] = len(carried)
+            return res
 
-        if dv_threshold is not None:
-            # merge-on-read write path: resolve with row lineage, mask
-            # the OLD positions of updated/deleted rows, emit only
-            # inserts + updated values; _dv_commit decides rewrite-vs-
-            # DV per file and keeps sub-threshold files byte-untouched
-            target_df = _read_touched_entries(
-                spark, root, head, touched, with_lineage=True
-            )
-            for c, t in evo_cols:
-                target_df = target_df.withColumn(c, F.lit(None).cast(t))
-            resolved = resolve_merge_actions(
-                target_df, source, keys,
-                **_clause_kwargs(),
-                passthrough_cols=["_file", "_pos"],
-            ).persist()
-            try:
-                counts = {
-                    r["_action"]: r["n"]
-                    for r in resolved.groupBy("_action")
-                    .agg(F.count(F.lit(1)).alias("n"))
-                    .collect()
-                }
-                frame = resolved.withColumn(
-                    "_mask",
-                    F.col("_action").isin("update", "delete")
-                    & F.col("_file").isNotNull(),
-                ).withColumn(
-                    "_emit", F.col("_action").isin("insert", "update")
-                ).drop("_action")
-                try:
-                    dv_out = _dv_commit(
-                        spark, root, head, touched, carried, frame,
-                        dv_threshold,
-                        note={"op": "merge", **(note or {})},
-                        stats_cols=stats_cols,
-                        bloom_cols=bloom_cols,
-                    )
-                except snap.SnapshotConflict:
-                    continue  # head moved mid-merge; re-prune and retry
-            finally:
-                resolved.unpersist()
-            return {
-                "version": dv_out["version"],
-                "inserted": counts.get("insert", 0),
-                "updated": counts.get("update", 0),
-                "deleted": counts.get("delete", 0),
-                "kept": counts.get("keep", 0),
-                "files_rewritten": dv_out["files_rewritten"],
-                "files_masked": dv_out["files_masked"],
-                "files_carried": dv_out["files_carried"],
-                "rows_masked": dv_out["rows_masked"],
-            }
-
-        target_df = _read_touched_entries(spark, root, head, touched)
+        # resolve against the touched files only; with dv_threshold the
+        # rows keep their lineage so the core can mask old positions
+        target_df = snap.read_entries(
+            spark, root, head, touched, with_lineage=lineage
+        )
         for c, t in evo_cols:
             target_df = target_df.withColumn(c, F.lit(None).cast(t))
         resolved = resolve_merge_actions(
-            target_df, source, keys, **_clause_kwargs()
+            target_df, source, keys, **clauses,
+            passthrough_cols=["_file", "_pos"] if lineage else None,
         ).persist()
         try:
             counts = {
@@ -1481,34 +1365,31 @@ def snapshot_merge(
                 .agg(F.count(F.lit(1)).alias("n"))
                 .collect()
             }
-            survivors = resolved.filter(
-                ~F.col("_action").isin("delete", "drop")
+            # updated/deleted target rows mask their origin; dropped
+            # source rows (unmatched under 'ignore') are never written
+            action = F.col("_action")
+            frame = resolved.select(
+                "*",
+                action.isin("update", "delete", "drop").alias("_mask"),
+                action.isin("insert", "update").alias("_emit"),
             ).drop("_action")
-            try:
-                v = snap.snapshot_commit(
-                    survivors,
-                    path,
-                    mode="overwrite",
-                    carry_files=carried,
-                    expected_parent=version,
-                    partition_by=head.get("partition_by"),
-                    stats_cols=stats_cols,
-                    bloom_cols=bloom_cols,
-                    note={"op": "merge", **(note or {})},
-                )
-            except snap.SnapshotConflict:
-                continue  # head moved mid-merge; re-prune and retry
+            out = _dml_commit(
+                spark, root, head, touched, carried, frame, dv_threshold,
+                note=merge_note, stats_cols=stats_cols, bloom_cols=bloom_cols,
+            )
         finally:
             resolved.unpersist()
+        out.pop("rows_matched", None)
         return {
-            "version": v,
+            "version": out.pop("version"),
             "inserted": counts.get("insert", 0),
             "updated": counts.get("update", 0),
             "deleted": counts.get("delete", 0),
             "kept": counts.get("keep", 0),
-            "files_rewritten": len(touched),
-            "files_carried": len(carried),
+            **out,
         }
+
+    return _retry_on_conflict(attempt)
 
 
 def snapshot_eq_upsert(
@@ -1740,10 +1621,13 @@ def compact_snapshot_partitions(
     volume. Only rewritten partitions change layout; pass no
     ``sort_cols`` for a plain coalesce.
     """
+    from pyspark.sql.types import StructType
+
     from group5_spark.medallion import snapshots as snap
 
     root = Path(path)
-    while True:
+
+    def attempt() -> dict:
         head = snap.snapshot_manifest(path)
         part_col = head.get("partition_by")
         if not part_col:
@@ -1793,8 +1677,6 @@ def compact_snapshot_partitions(
             if part not in fragmented
             for e in entries
         ]
-        from pyspark.sql.types import StructType
-
         schema = (
             StructType.fromJson(head["schema"])
             if head.get("schema") is not None
@@ -1832,39 +1714,28 @@ def compact_snapshot_partitions(
             rewritten = rewritten.unionByName(p)
         if schema is not None:
             rewritten = rewritten.select(*[f.name for f in schema.fields])
-        try:
-            v = snap.snapshot_commit(
-                rewritten,
-                path,
-                mode="overwrite",
-                carry_files=carried,
-                expected_parent=head["version"],
-                partition_by=part_col,
-                # sort_cols=None leaves stats to parent-coverage
-                # inheritance; a clustering rewrite must record stats
-                # on its sort key or the tight layout is invisible
-                stats_cols=sorted(sort_cols) if sort_cols else None,
-                note={
-                    "compaction": "partitions",
-                    "partitions": sorted(map(str, fragmented)),
-                    **({"clustered_by": sorted(sort_cols)} if sort_cols else {}),
-                },
-                carry_kmv=True,  # layout migration: same logical rows
-            )
-        except snap.SnapshotConflict:
-            continue
-        files_before = sum(len(e) for e, _ in fragmented.values())
-        new_files = snap.snapshot_manifest(path, v)["files"]
-        carried_paths = {e["path"] for e in carried}
-        files_after = sum(
-            1 for e in new_files if e["path"] not in carried_paths
-        )
+        touched = [e for entries, _ in fragmented.values() for e in entries]
+        v = _dml_commit(
+            spark, root, head, touched, carried, _emit_all(rewritten), None,
+            # sort_cols=None leaves stats to parent-coverage
+            # inheritance; a clustering rewrite must record stats on
+            # its sort key or the tight layout is invisible
+            stats_cols=sorted(sort_cols) if sort_cols else None,
+            note={
+                "compaction": "partitions",
+                "partitions": sorted(map(str, fragmented)),
+                **({"clustered_by": sorted(sort_cols)} if sort_cols else {}),
+            },
+            carry_kmv=True,  # layout migration: same logical rows
+        )["version"]
         return {
             "version": v,
             "partitions_compacted": len(fragmented),
-            "files_before": files_before,
-            "files_after": files_after,
+            "files_before": len(touched),
+            "files_after": len(_staged(path, v, carried)),
         }
+
+    return _retry_on_conflict(attempt)
 
 
 def compact_snapshot_masks(
@@ -1915,7 +1786,8 @@ def compact_snapshot_masks(
     from group5_spark.medallion import snapshots as snap
 
     root = Path(path)
-    while True:
+
+    def attempt() -> dict:
         head = snap.snapshot_manifest(path)
         eq_all = sorted(
             head.get("eq_deletes") or [],
@@ -1930,7 +1802,7 @@ def compact_snapshot_masks(
         # (the ops loop folds at 3) can never accumulate unbounded
         # driver state — capped-out sidecars just lose their proof and
         # their covered files rewrite.
-        probes: list[list[tuple] | None] = []
+        probes: list[list | None] = []
         collected = 0
         for d in eq_all:
             n = int(d.get("rows", 0))
@@ -1945,46 +1817,19 @@ def compact_snapshot_masks(
             )
             collected += len(rows)
             probes.append(
-                [
-                    tuple(r)
-                    for r in rows
-                    if all(v is not None for v in r)
-                ]
+                snap._key_probe(
+                    list(d["keys"]),
+                    [r for r in rows if all(v is not None for v in r)],
+                )
             )
 
         def _proven_eq_clean(e: dict) -> bool:
-            es = e.get("seq", 0)
-            st = e.get("stats") or {}
-            for d, tuples in zip(eq_all, probes):
-                if d["seq"] <= es:
-                    continue
-                if tuples is None:
-                    return False
-                keys = list(d["keys"])
-                bloom_key = (
-                    snap.composite_bloom_name(keys)
-                    if len(keys) > 1
-                    else keys[0]
-                )
-                bloom = (e.get("bloom") or {}).get(bloom_key)
-                sorted_pos = [keys.index(k) for k in sorted(keys)]
-                for t in tuples:
-                    may = all(
-                        snap._overlaps(st, k, "=", v)
-                        for k, v in zip(keys, t)
-                    )
-                    if may and bloom is not None:
-                        may = snap._bloom_might_contain(
-                            bloom,
-                            t[0]
-                            if len(keys) == 1
-                            else snap._COMPOSITE_SEP.join(
-                                str(t[i]) for i in sorted_pos
-                            ),
-                        )
-                    if may:
-                        return False
-            return True
+            # no sidecar committed after the entry may hold its keys
+            return not any(
+                probe is None or snap._may_hold_key(e, list(d["keys"]), probe)
+                for d, probe in zip(eq_all, probes)
+                if d["seq"] > e.get("seq", 0)
+            )
 
         masked, clean, restamp = [], [], []
         for e in head["files"]:
@@ -2019,26 +1864,18 @@ def compact_snapshot_masks(
         carried = clean + [
             {**e, "seq": snap._last_seq(head) + 1} for e in restamp
         ]
-        try:
-            v = snap.snapshot_commit(
-                df,
-                path,
-                mode="overwrite",
-                carry_files=carried,
-                expected_parent=head["version"],
-                partition_by=part_col,
-                note={
-                    "compaction": "masks",
-                    "files_folded": len(masked),
-                    "files_restamped": len(restamp),
-                    "eq_sidecars_folded": len(eq_all),
-                },
-                # fold applies masks: live rows unchanged, NDV of the
-                # pre-fold sketch stays a sound upper bound
-                carry_kmv=True,
-            )
-        except snap.SnapshotConflict:
-            continue  # head moved mid-rewrite; re-read and retry
+        v = _dml_commit(
+            spark, root, head, masked, carried, _emit_all(df), None,
+            note={
+                "compaction": "masks",
+                "files_folded": len(masked),
+                "files_restamped": len(restamp),
+                "eq_sidecars_folded": len(eq_all),
+            },
+            # fold applies masks: live rows unchanged, NDV of the
+            # pre-fold sketch stays a sound upper bound
+            carry_kmv=True,
+        )["version"]
         return {
             "version": v,
             "files_folded": len(masked),
@@ -2050,6 +1887,8 @@ def compact_snapshot_masks(
                 int((e.get("dv") or {}).get("deleted", 0)) for e in masked
             ),
         }
+
+    return _retry_on_conflict(attempt)
 
 
 def apply_health(

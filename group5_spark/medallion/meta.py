@@ -23,7 +23,6 @@ free.
 
 from __future__ import annotations
 
-import json
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -186,11 +185,7 @@ def snapshot_history_df(spark: SparkSession, path: str) -> DataFrame:
     root = Path(path)
     head = _current_version(root)
     rows = []
-    for v in _lineage(root, head):
-        try:
-            m = json.loads(_manifest_path(root, v).read_text())
-        except (OSError, ValueError, json.JSONDecodeError):
-            continue
+    for _, m in _lineage(root, head):
         note = m.get("note") or {}
         # DML commits mark themselves with operation-specific note
         # keys rather than a uniform "op"; derive the display tag

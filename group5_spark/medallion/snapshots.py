@@ -110,22 +110,23 @@ def _current_version(root: Path) -> int:
     return v
 
 
-def _lineage(root: Path, head: int) -> list[int]:
-    """Published versions, newest first, by following each manifest's
-    recorded parent from ``head`` down. This — not filename order — is
-    the table's history: a manifest outside the lineage is an orphan
-    from a commit that lost its chain-claim race or crashed."""
-    out: list[int] = []
+def _lineage(root: Path, head: int):
+    """Published ``(version, manifest)`` pairs, newest first, by
+    following each manifest's recorded parent from ``head`` down. This
+    — not filename order — is the table's history: a manifest outside
+    the lineage is an orphan from a commit that lost its chain-claim
+    race or crashed. A generator that parses each manifest once, so a
+    caller that stops early (``last_committed_batch``) never reads the
+    older history."""
     v = head
-    while v > 0 and _manifest_path(root, v).exists():
-        out.append(v)
+    while v > 0:
         try:
-            v = int(
-                json.loads(_manifest_path(root, v).read_text()).get("parent", 0)
-            )
-        except (ValueError, json.JSONDecodeError):
-            break
-    return out
+            m = json.loads(_manifest_path(root, v).read_text())
+            parent = int(m.get("parent", 0))
+        except (OSError, ValueError):
+            return
+        yield v, m
+        v = parent
 
 
 def _file_rows(path: Path) -> int:
@@ -397,16 +398,44 @@ def _file_bloom(path: Path, col: str) -> str | None:
     return bytes(bits).hex()
 
 
-def _bloom_might_contain(hex_bits: str, value) -> bool:
-    return _bloom_might_contain_positions(hex_bits, _bloom_hashes(value))
+def _key_probe(keys: list[str], tuples) -> list[tuple[tuple, list[int]]]:
+    """Point probe for key TUPLES over ``keys``: each tuple paired with
+    its bloom bit positions, hashed ONCE — callers probing many files
+    with the same key set never re-hash per (key, file) pair. A
+    composite tuple hashes its values in SORTED-column order joined by
+    :data:`_COMPOSITE_SEP`, exactly as :func:`_file_bloom` wrote them."""
+    order = [keys.index(k) for k in sorted(keys)]
+    return [
+        (
+            tuple(t),
+            _bloom_hashes(
+                t[0]
+                if len(keys) == 1
+                else _COMPOSITE_SEP.join(str(t[i]) for i in order)
+            ),
+        )
+        for t in tuples
+    ]
 
 
-def _bloom_might_contain_positions(hex_bits: str, positions: list[int]) -> bool:
-    """Probe with PRE-HASHED bit positions — callers probing many
-    files with the same key set (snapshot_merge's prune loop) hash
-    each key once instead of once per (key, file) pair."""
-    bits = bytes.fromhex(hex_bits)
-    return all(bits[pos // 8] & (1 << (pos % 8)) for pos in positions)
+def _may_hold_key(e: dict, keys: list[str], probe) -> bool:
+    """Can manifest entry ``e`` hold a row whose ``keys`` tuple equals
+    one of ``probe``'s (from :func:`_key_probe`)? A tuple survives when
+    every key's footer min/max contains its component and then, when
+    the file has a bloom on the key set (single-column or canonical
+    composite), the bloom admits it. Missing stats or bloom → may
+    (never wrongly prune). Sound under masks too: stats and blooms
+    describe a SUPERSET of the live rows, so they can only
+    under-prune. The one key test behind predicate pruning, MERGE
+    candidate pruning and the mask fold's disjointness proof."""
+    st = e.get("stats") or {}
+    hex_bits = (e.get("bloom") or {}).get(composite_bloom_name(keys))
+    bits = bytes.fromhex(hex_bits) if hex_bits else None
+    return any(
+        all(_overlaps(st, k, "=", v) for k, v in zip(keys, t))
+        and (bits is None or all(bits[p // 8] & (1 << (p % 8)) for p in pos))
+        for t, pos in probe
+    )
 
 
 class SnapshotConflict(Exception):
@@ -726,23 +755,26 @@ def snapshot_commit(
             set(bloom_cols)
             | {c for c in inherited_blooms if _bloom_covered(c, df.columns)}
         )
+    def _derive_rules(head_manifest: dict) -> dict:
+        rules = dict(head_manifest.get("constraints", {}))
+        for cname, cexpr in (constraints or {}).items():
+            if cexpr is None:
+                rules.pop(cname, None)
+            else:
+                rules[cname] = cexpr
+        return rules
+
     # Columns constrained by a stats-provable CHECK rule (inherited or
     # added by this commit) get footer stats unconditionally: the
     # validation below — and every future commit's — can then be
     # proven from file metadata alone, no second pass over the staged
     # bytes. Dropped rules (None) don't force a stat.
-    _active_rules = {
-        **_head_manifest.get("constraints", {}),
-        **{k: v for k, v in (constraints or {}).items() if v is not None},
-    }
-    for k in (constraints or {}):
-        if (constraints or {})[k] is None:
-            _active_rules.pop(k, None)
+    effective_constraints = _derive_rules(_head_manifest)
     stats_cols = sorted(
         set(stats_cols)
         | {
             c
-            for ex in _active_rules.values()
+            for ex in effective_constraints.values()
             if (c := _rule_stats_col(ex)) is not None and c in df.columns
         }
     )
@@ -803,15 +835,6 @@ def snapshot_commit(
     # rule set is RE-DERIVED from the actual parent and any rules that
     # grew are re-validated — a racing ADD CONSTRAINT (or property
     # change) is never silently erased from the head manifest.
-    def _derive_rules(head_manifest: dict) -> dict:
-        rules = dict(head_manifest.get("constraints", {}))
-        for cname, cexpr in (constraints or {}).items():
-            if cexpr is None:
-                rules.pop(cname, None)
-            else:
-                rules[cname] = cexpr
-        return rules
-
     def _validate_staged(rules: dict) -> None:
         """Raise ConstraintViolation (and reclaim staged files) when a
         staged row fails any rule in ``rules``. Rules in the
@@ -869,31 +892,25 @@ def snapshot_commit(
             shutil.rmtree(data_dir, ignore_errors=True)
             raise ConstraintViolation(path, violations)
 
-    effective_constraints = _derive_rules(_head_manifest)
     _validate_staged(effective_constraints)
 
-    # Optimistic concurrency, two atomic primitives:
-    #   1. the version SLOT is claimed by exclusive manifest create
-    #      (O_EXCL; put-if-absent on an object store) — nobody's
-    #      manifest is ever overwritten;
-    #   2. the COMMIT POINT is an exclusive chain-link create
-    #      ``c{parent} → version``: exactly one commit can extend any
-    #      parent, so concurrent appends serialize into a linear
-    #      history instead of both chaining off the same parent and
-    #      silently dropping each other's files (the classic lost
-    #      update). A loser re-reads the new head, rebuilds its
-    #      manifest on the fresh parent (staged data files are reused
-    #      — they're immutable and version-agnostic), and retries.
-    # A crash after (1) but before (2) leaves a complete but
+    # Optimistic concurrency through the shared publish loop
+    # (:func:`_metadata_commit`): the version SLOT is an exclusive
+    # manifest create and the COMMIT POINT an exclusive chain-link
+    # create ``c{parent} → version``, so concurrent appends serialize
+    # into a linear history instead of silently dropping each other's
+    # files. A loser rebuilds its manifest on the fresh parent (staged
+    # data files are reused — immutable and version-agnostic) and
+    # retries. A crash between the two claims leaves a complete but
     # UNPUBLISHED orphan manifest: invisible to readers (they follow
     # the chain), reclaimed by snapshot_expire after its grace window.
-    while True:
-        parent = _current_version(root)
+    def build(parent: int, version: int) -> dict:
+        nonlocal pv_now, _head_manifest, effective_constraints
         if expected_parent is not None and parent != expected_parent:
             # the staged files are referenced by NO manifest, so
-            # expire would never reclaim them — remove them here or
-            # every lost compaction race leaks a table-sized directory
-            shutil.rmtree(data_dir, ignore_errors=True)
+            # expire would never reclaim them — the caller below
+            # removes them, or every lost compaction race leaks a
+            # table-sized directory
             raise SnapshotConflict(
                 f"head moved {expected_parent} → {parent} at {path}"
             )
@@ -922,11 +939,10 @@ def snapshot_commit(
                 }
             )
             effective_constraints = rebased_rules
-        taken = [
-            int(m.stem[1:])
-            for m in (root / _MANIFEST_DIR).glob("v*.json")
-        ]
-        version = max([parent, *taken], default=0) + 1
+        # the parent whose files, sequence counter and masks this
+        # commit extends: the (rebased) head — a plain overwrite keeps
+        # none of its files
+        base_m = _head_manifest
         entries = staged
         table_kmv = kmv
         if carry_files is not None:
@@ -937,10 +953,8 @@ def snapshot_commit(
         spec_evolved = False
         evolved_from: str | None = None
         if mode == "append" and parent:
-            prior = json.loads(_manifest_path(root, parent).read_text())
-            prior_spec = prior.get("partition_by")
+            prior_spec = base_m.get("partition_by")
             if prior_spec != partition_by and not evolve_partitioning:
-                shutil.rmtree(data_dir, ignore_errors=True)
                 raise ValueError(
                     f"table is partitioned by {prior_spec!r}; append "
                     f"must pass the same partition_by (got "
@@ -948,7 +962,7 @@ def snapshot_commit(
                     "to change the spec going forward; existing files "
                     "keep their layout"
                 )
-            prior_files = prior["files"]
+            prior_files = base_m["files"]
             if prior_spec != partition_by:
                 # partition evolution: annotate every carried entry
                 # with the spec it was written under (explicit None
@@ -964,9 +978,8 @@ def snapshot_commit(
             entries = prior_files + staged
             # mergeable sketches: table-level NDV without rescanning —
             # min-k of the union equals the sketch of the union
-            table_kmv = _merge_kmv(prior.get("kmv", {}), kmv)
+            table_kmv = _merge_kmv(base_m.get("kmv", {}), kmv)
         elif mode == "replace_partitions" and parent:
-            prior = json.loads(_manifest_path(root, parent).read_text())
             # Same layout guard as append: if the parent is
             # unpartitioned (file entries carry no 'partition' key) or
             # partitioned by a different column, the carry-over filter
@@ -974,16 +987,15 @@ def snapshot_commit(
             # values never match the touched set) — stale rows would
             # silently survive in the "replaced" partitions. Error out
             # instead of corrupting.
-            if prior.get("partition_by") != partition_by:
-                shutil.rmtree(data_dir, ignore_errors=True)
+            if base_m.get("partition_by") != partition_by:
                 raise ValueError(
-                    f"table is partitioned by {prior.get('partition_by')!r}; "
+                    f"table is partitioned by {base_m.get('partition_by')!r}; "
                     f"replace_partitions must pass the same partition_by "
                     f"(got {partition_by!r})"
                 )
             touched = {e["partition"] for e in staged}
             cur_files, old_files = [], []
-            for e in prior["files"]:
+            for e in base_m["files"]:
                 (
                     old_files
                     if _entry_old_spec(e, partition_by)
@@ -1000,7 +1012,6 @@ def snapshot_commit(
                 if _may_contain_value(
                     e.get("stats") or {}, partition_by, touched
                 ):
-                    shutil.rmtree(data_dir, ignore_errors=True)
                     raise ValueError(
                         f"file {e['path']} was written under a previous "
                         f"partition spec ({e.get('partition_col')!r}) "
@@ -1016,22 +1027,14 @@ def snapshot_commit(
             entries = carried + staged
             # replaced rows invalidate any additive sketch merge
             table_kmv = {}
-        # Write-sequence bookkeeping (see _last_seq): the parent whose
-        # counter this commit extends is the one whose entries it
-        # carries — `prior` for append/replace_partitions, the (rebased)
-        # head for overwrite. Staged entries are stamped IN the retry
-        # loop: a rebase re-reads the parent, so the sequence stays
-        # strictly monotonic across races.
-        base_m = (
-            prior
-            if mode in ("append", "replace_partitions") and parent
-            else _head_manifest
-        )
         # carry_kmv: the caller asserts this commit doesn't grow the
         # key population (mask/fold/migration), so the parent's sketch
         # stays a sound NDV upper bound — see docstring
         if carry_kmv and not table_kmv:
             table_kmv = dict(base_m.get("kmv") or {})
+        # Write-sequence bookkeeping (see _last_seq): staged entries
+        # are stamped IN the retry loop — a rebase re-reads the parent,
+        # so the sequence stays strictly monotonic across races.
         seq = _last_seq(base_m) + 1
         for e in staged:
             e["seq"] = seq
@@ -1039,10 +1042,11 @@ def snapshot_commit(
         # masked entries reachable (append, replace_partitions, and
         # file-level rewrites via carry_files); a PLAIN overwrite is a
         # logical replace, so nothing old remains for them to mask.
+        keeps_prior = bool(parent) and (
+            mode != "overwrite" or carry_files is not None
+        )
         carried_eq = (
-            list(base_m.get("eq_deletes") or [])
-            if parent and (mode != "overwrite" or carry_files is not None)
-            else []
+            list(base_m.get("eq_deletes") or []) if keeps_prior else []
         )
         if eq_add is not None:
             carried_eq = carried_eq + [{**eq_add, "seq": seq}]
@@ -1053,35 +1057,26 @@ def snapshot_commit(
             for d in carried_eq
             if any(e.get("seq", 0) < d["seq"] for e in entries)
         ]
-        # schema travels in the metadata (Iceberg-style): readers never
-        # infer from data files. Any commit that KEEPS prior files
-        # (append, replace_partitions, carry_files rewrites) publishes
-        # the widen-only UNION of the head schema and the batch — an
-        # appended column evolves cleanly (old files surface NULLs),
-        # and a batch missing a column can never narrow the table. A
-        # plain overwrite is a logical replace: its own schema stands.
-        keeps_prior = parent and (
-            mode in ("append", "replace_partitions")
-            or carry_files is not None
-        )
-        try:
-            schema_json = _evolved_schema_json(
-                base_m.get("schema") if keeps_prior else None, df.schema
-            )
-        except ValueError:
-            shutil.rmtree(data_dir, ignore_errors=True)
-            raise
         manifest = {
             "version": version,
             "parent": parent,
             "ts": time.time(),
-            "schema": schema_json,
+            # schema travels in the metadata (Iceberg-style): readers
+            # never infer from data files. Any commit that KEEPS prior
+            # files publishes the widen-only UNION of the head schema
+            # and the batch — an appended column evolves cleanly (old
+            # files surface NULLs), and a batch missing a column can
+            # never narrow the table. A plain overwrite is a logical
+            # replace: its own schema stands.
+            "schema": _evolved_schema_json(
+                base_m.get("schema") if keeps_prior else None, df.schema
+            ),
             # writer-supplied marker (e.g. streaming batch id) — the
-            # hook idempotent sinks use to recognize a durable commit
+            # hook idempotent sinks use to recognize a durable commit;
             # table-property note keys survive every same-table
-            # commit; the caller's note wins on collision
+            # commit, the caller's note wins on collision
             "note": {
-                **_property_note(_head_manifest.get("note")),
+                **_property_note(base_m.get("note")),
                 **(note or {}),
             },
             "files": entries,
@@ -1101,7 +1096,7 @@ def snapshot_commit(
         # automatically once rewrites/compaction unify the layout.
         hist = (
             list(base_m.get("partition_history") or [])
-            if parent and (mode != "overwrite" or carry_files is not None)
+            if keeps_prior
             else []
         )
         if spec_evolved and (not hist or hist[-1] != evolved_from):
@@ -1110,30 +1105,15 @@ def snapshot_commit(
             _entry_old_spec(e, partition_by or None) for e in entries
         ):
             manifest["partition_history"] = hist
-        try:
-            with open(_manifest_path(root, version), "x") as f:
-                f.write(json.dumps(manifest, indent=1))
-        except FileExistsError:
-            continue  # slot raced; pick the next one
-        try:
-            # the commit point: at most one child per parent, atomically
-            with open(_chain_path(root, parent), "x") as f:
-                f.write(str(version))
-            break
-        except FileExistsError:
-            # another commit extended this parent first — our manifest
-            # is now an orphan slot; rebuild on the new head and retry
-            continue
-    # advance the pointer CACHE (never the source of truth): readers
-    # start their chain walk here. Monotonic guard keeps a slow old
-    # commit from regressing the hint; on an object store this replace
-    # would be a conditional put, but even a lost update here only
-    # means a longer chain walk, not a wrong read.
-    if version > _read_pointer(root):
-        tmp = root / _MANIFEST_DIR / f"_ptr.{uuid.uuid4().hex[:8]}"
-        tmp.write_text(str(version))
-        tmp.replace(root / _MANIFEST_DIR / _POINTER)
-    return version
+        return manifest
+
+    try:
+        return _metadata_commit(root, build, create=True)
+    except (SnapshotConflict, ValueError):
+        # raised by build, before any claim: nothing references the
+        # staged files (a ConstraintViolation reclaimed them already)
+        shutil.rmtree(data_dir, ignore_errors=True)
+        raise
 
 
 def latest_note(path: str) -> dict | None:
@@ -1163,10 +1143,8 @@ def last_committed_batch(path: str, app_id: str) -> int | None:
     the whole lineage every micro-batch — O(history²) metadata bytes
     over a long-running append stream."""
     root = Path(path)
-    for v in _lineage(root, _current_version(root)):
-        note = (
-            json.loads(_manifest_path(root, v).read_text()).get("note") or {}
-        )
+    for _, m in _lineage(root, _current_version(root)):
+        note = m.get("note") or {}
         if note.get("app_id") == app_id and note.get("batch_id") is not None:
             return int(note["batch_id"])
     return None
@@ -1190,8 +1168,9 @@ def snapshot_versions(path: str) -> list[dict]:
     excluded."""
     root = Path(path)
     out = []
-    for v in sorted(_lineage(root, _current_version(root))):
-        d = json.loads(_manifest_path(root, v).read_text())
+    for _, d in sorted(
+        _lineage(root, _current_version(root)), key=lambda vm: vm[0]
+    ):
         note = d.get("note") or {}
         op = note.get("op") or (
             "compaction" if note.get("compaction") else None
@@ -1321,28 +1300,29 @@ def prune_entries(
     """:func:`prune_files` returning the full manifest ENTRIES (the
     form DV-aware readers need — an entry carries its deletion-vector
     reference alongside the path)."""
-    root = Path(path)
-    v = version if version is not None else _current_version(root)
-    m = _manifest_path(root, v)
-    if not m.exists():
-        raise FileNotFoundError(f"no snapshot v{v} at {path}")
-    files = json.loads(m.read_text())["files"]
+    files = snapshot_manifest(path, version)["files"]
+    return _prune(files, predicates), len(files)
 
-    def may_match(e: dict) -> bool:
-        for c, op, val in predicates:
-            if not _overlaps(e["stats"], c, op, val):
-                return False
-            # bloom probe: an equality key definitely absent from the
-            # file prunes it even when min/max ranges overlap. Sound
-            # under DVs too: stats/blooms describe a SUPERSET of the
-            # live rows, so they can only under-prune, never wrong-prune.
-            b = e.get("bloom", {}).get(c)
-            if op == "=" and b and not _bloom_might_contain(b, val):
-                return False
-        return True
 
-    kept = [e for e in files if may_match(e)]
-    return kept, len(files)
+def _prune(files: list[dict], predicates: list[tuple]) -> list[dict]:
+    """The manifest entries of ``files`` whose stats can satisfy every
+    predicate. An equality also probes the file's bloom: a key
+    definitely absent from the file prunes it even when min/max ranges
+    overlap (:func:`_may_hold_key`)."""
+    probes = [
+        _key_probe([c], [(val,)]) if op == "=" else None
+        for c, op, val in predicates
+    ]
+    return [
+        e
+        for e in files
+        if all(
+            _overlaps(e.get("stats") or {}, c, op, val)
+            if probe is None
+            else _may_hold_key(e, [c], probe)
+            for (c, op, val), probe in zip(predicates, probes)
+        )
+    ]
 
 
 def prune_files(
@@ -1637,8 +1617,8 @@ def snapshot_read(
     if asof is not None:
         version = resolve_asof(path, asof)
     v = version if version is not None else _current_version(root)
-    manifest = json.loads(_manifest_path(root, v).read_text())
-    kept, _ = prune_entries(path, predicates or [], v)
+    manifest = snapshot_manifest(path, v)
+    kept = _prune(manifest["files"], predicates or [])
     if not kept and manifest.get("schema") is None:
         all_files = [str(root / e["path"]) for e in manifest["files"]]
         return spark.read.parquet(*all_files).limit(0)
@@ -1732,8 +1712,7 @@ def resolve_asof(path: str, ts: float) -> int:
     table's first commit."""
     root = Path(path)
     best = None
-    for v in _lineage(root, _current_version(root)):
-        m = json.loads(_manifest_path(root, v).read_text())
+    for v, m in _lineage(root, _current_version(root)):
         if m.get("ts", 0) <= ts and (best is None or v > best):
             best = v
     if best is None:
@@ -1789,12 +1768,8 @@ def snapshot_clone(
         entries.append(ne)
     root = Path(dst_path)
     (root / _MANIFEST_DIR).mkdir(parents=True, exist_ok=True)
-    if _current_version(root):
-        raise ValueError(f"clone target {dst_path} is already a table")
     manifest = {
-        "version": 1,
         "parent": 0,
-        "ts": time.time(),
         "schema": m.get("schema"),
         # the source's PROPERTY note keys travel with the clone —
         # e.g. a persisted index's pinned parameters and centroids; a
@@ -1830,11 +1805,13 @@ def snapshot_clone(
             for d in m["eq_deletes"]
         ]
     manifest["last_seq"] = _last_seq(m)
-    with open(_manifest_path(root, 1), "x") as f:
-        f.write(json.dumps(manifest, indent=1))
-    with open(_chain_path(root, 0), "x") as f:
-        f.write("1")
-    return 1
+
+    def build(parent: int, new_version: int) -> dict:
+        if parent:
+            raise ValueError(f"clone target {dst_path} is already a table")
+        return {"version": new_version, "ts": time.time(), **manifest}
+
+    return _metadata_commit(root, build, create=True)
 
 
 def snapshot_rollback(
@@ -1920,14 +1897,23 @@ def snapshot_rollback(
     return _metadata_commit(root, build)
 
 
-def _metadata_commit(root: Path, build_manifest) -> int:
-    """Shared slot/chain-claim loop for METADATA-ONLY commits
-    (rollback, constraint changes): ``build_manifest(parent,
-    new_version)`` returns the manifest dict, or None to abort
-    (caller's no-op case returns the current head)."""
+def _metadata_commit(
+    root: Path, build_manifest, *, create: bool = False
+) -> int:
+    """The ONE publish loop every commit goes through — data commits
+    (:func:`snapshot_commit`), clones, rollbacks, constraint changes
+    and WAP publishes. ``build_manifest(parent, new_version)`` returns
+    the manifest dict to publish on ``parent``, or None to abort (the
+    no-op case returns the current head); it may raise to refuse the
+    parent (e.g. :class:`SnapshotConflict`). The loop claims the
+    version slot (exclusive manifest create), then the commit point
+    (exclusive chain-link create ``c{parent}``); losing either race
+    re-resolves the head and calls ``build_manifest`` again. A
+    published commit advances the pointer cache. ``create`` allows
+    publishing on an absent table (parent 0)."""
     while True:
         parent = _current_version(root)
-        if not parent:
+        if not parent and not create:
             raise ValueError(f"{root} is not a snapshot table")
         taken = [
             int(m.stem[1:])
@@ -1947,7 +1933,13 @@ def _metadata_commit(root: Path, build_manifest) -> int:
                 f.write(str(new_version))
             break
         except FileExistsError:
+            # another commit extended this parent first — our manifest
+            # is now an orphan slot; rebuild on the new head and retry
             continue
+    # advance the pointer CACHE (never the source of truth): readers
+    # start their chain walk here. The monotonic guard keeps a slow
+    # old commit from regressing the hint; a lost update here only
+    # means a longer chain walk, not a wrong read.
     if new_version > _read_pointer(root):
         tmp = root / _MANIFEST_DIR / f"_ptr.{uuid.uuid4().hex[:8]}"
         tmp.write_text(str(new_version))
@@ -2080,21 +2072,15 @@ def snapshot_expire(
     expire from racing it."""
     root = Path(path)
     head = _current_version(root)
-    lineage = _lineage(root, head)  # newest first
-    keep_versions = set(lineage[: max(keep_last, 1)])
+    lineage = dict(_lineage(root, head))  # newest first
+    keep_versions = set(list(lineage)[: max(keep_last, 1)])
     # tagged versions are pinned: a tag is a reproducibility promise,
     # so its manifest and file closure survive every expiry window
     keep_versions.update(snapshot_tags(path).values())
     if keep_since is not None:
-        for v in lineage:
-            try:
-                ts = json.loads(
-                    _manifest_path(root, v).read_text()
-                ).get("ts", 0)
-            except (OSError, ValueError, json.JSONDecodeError):
-                continue
-            if ts >= keep_since:
-                keep_versions.add(v)
+        keep_versions.update(
+            v for v, m in lineage.items() if m.get("ts", 0) >= keep_since
+        )
     manifests = sorted((root / _MANIFEST_DIR).glob("v*.json"))
     now = time.time()
     keep, drop = [], []
@@ -2102,7 +2088,7 @@ def snapshot_expire(
         version = int(m.stem[1:])
         if version in keep_versions:
             keep.append(m)
-        elif version in set(lineage):
+        elif version in lineage:
             drop.append(m)  # published history beyond the window
         else:
             # orphan: deleted only after the grace window so expire

@@ -750,14 +750,12 @@ def _note_versions(
     that needs the note (a crash replay reconstructing what that
     commit persisted) can fail loudly instead of silently treating a
     lost note as an empty pre-batch table."""
-    import json as _json
     from pathlib import Path as _Path
 
     from group5_spark.medallion import snapshots as snap
 
     root = _Path(path)
-    for v in snap._lineage(root, snap._current_version(root)):
-        m = _json.loads(snap._manifest_path(root, v).read_text())
+    for v, m in snap._lineage(root, snap._current_version(root)):
         note = m.get("note") or {}
         if note.get("app_id") == app_id and note.get("batch_id") == batch_id:
             parent = int(m.get("parent") or 0)

@@ -84,6 +84,13 @@ def test_dv_equivalence_merge_delete_update_vs_rewrite(spark, tmp_path):
     table identical to the rewrite-mode DML on the same inputs."""
     a = _table(spark, tmp_path, "rewrite")
     b = _table(spark, tmp_path, "dv")
+    # a row whose predicate column is NULL: no predicate matches it,
+    # so no DML may delete it — in either mode
+    null_row = spark.createDataFrame(
+        [(None, 1, "null-id", 1)], "id long, g long, v string, seq int"
+    )
+    for t in (a, b):
+        snapshot_commit(null_row, t, mode="append")
     src = spark.createDataFrame(
         [(3, 3, "UP3", 2), (7, 7, "UP7", 2), (2000, 0, "NEW", 1)],
         ["id", "g", "v", "seq"],
@@ -100,6 +107,7 @@ def test_dv_equivalence_merge_delete_update_vs_rewrite(spark, tmp_path):
     snapshot_delete(spark, a, [("id", "=", 500)])
     snapshot_delete(spark, b, [("id", "=", 500)], dv_threshold=0.2)
     assert _rows(spark, a) == _rows(spark, b)
+    assert _rows(spark, a)[None] == (1, "null-id", 1)
 
     snapshot_update(
         spark, a, [("id", ">", 990)], {"v": F.lit("tail")}

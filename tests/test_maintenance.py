@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from group5_spark.medallion.maintenance import compact, table_file_stats
 
 
@@ -1096,3 +1098,114 @@ def test_snapshot_purge_ids_erasure_across_derived_tables(spark, tmp_path):
         snapshot_purge_ids(spark, docs, [(corpus, "doc_id")])
     with pytest.raises(ValueError, match="no column"):
         snapshot_purge_ids(spark, [1], [(corpus, "nope")])
+
+
+def _unreferenced_staging(t: str) -> list[str]:
+    """data-*/dv-* dirs holding parquet bytes that no manifest (published
+    or orphan) references — what a lost commit race must never leave."""
+    import json
+    from pathlib import Path
+
+    root = Path(t)
+    referenced = set()
+    for m in (root / "_manifests").glob("v*.json"):
+        man = json.loads(m.read_text())
+        for e in man["files"]:
+            referenced.add(Path(e["path"]).parts[0])
+            if e.get("dv"):
+                referenced.add(Path(e["dv"]["sidecar"]).parts[0])
+    return sorted(
+        d.name
+        for pat in ("data-*", "dv-*")
+        for d in root.glob(pat)
+        if d.name not in referenced and any(d.rglob("*.parquet"))
+    )
+
+
+@pytest.mark.parametrize(
+    "op,dv",
+    [
+        ("delete", None), ("delete", 0.9),
+        ("update", None), ("update", 0.9),
+        ("merge", None), ("merge", 0.9),
+        ("compact", None), ("compact_partitions", None),
+        ("compact_masks", None),
+    ],
+)
+def test_rmw_retries_past_racing_append(spark, tmp_path, monkeypatch, op, dv):
+    """Every snapshot read-modify-write, in both write modes: an append
+    landing between the op's head read and its commit makes the commit
+    raise SnapshotConflict; the op re-runs on the new head, the racing
+    rows survive, and the losing attempt leaves no staged bytes behind."""
+    from pyspark.sql import functions as F
+
+    from group5_spark.medallion import snapshots as snap
+    from group5_spark.medallion.maintenance import (
+        compact_snapshot,
+        compact_snapshot_masks,
+        compact_snapshot_partitions,
+        snapshot_delete,
+        snapshot_merge,
+        snapshot_update,
+    )
+
+    t = str(tmp_path / "t")
+    part = "p" if op == "compact_partitions" else None
+    base = spark.range(100).select(
+        "id", (F.col("id") % 2).alias("p"), F.lit("v").alias("v")
+    )
+    snap.snapshot_commit(
+        base.repartitionByRange(4, "id"), t, stats_cols=["id"],
+        partition_by=part,
+    )
+    if op == "compact_masks":
+        snapshot_delete(spark, t, [("id", "<", 3)], dv_threshold=0.9)
+    racing_rows = spark.createDataFrame(
+        [(10_000, 0, "race")], "id long, p long, v string"
+    )
+    real_commit = snap.snapshot_commit
+    calls = {"rmw": 0}
+
+    def racing(df, path_, **kw):
+        if kw.get("expected_parent") is not None:
+            calls["rmw"] += 1
+            if calls["rmw"] == 1:
+                real_commit(racing_rows, path_, mode="append", partition_by=part)
+        return real_commit(df, path_, **kw)
+
+    monkeypatch.setattr(snap, "snapshot_commit", racing)
+    if op == "delete":
+        out = snapshot_delete(spark, t, [("id", "<", 3)], dv_threshold=dv)
+        assert out["rows_deleted"] == 3
+    elif op == "update":
+        snapshot_update(
+            spark, t, [("id", "<", 3)], {"v": F.lit("u")}, dv_threshold=dv
+        )
+    elif op == "merge":
+        src = spark.createDataFrame(
+            [(1, 1, "m"), (500, 0, "new")], "id long, p long, v string"
+        )
+        out = snapshot_merge(spark, t, src, ["id"], dv_threshold=dv)
+        assert (out["updated"], out["inserted"]) == (1, 1)
+    elif op == "compact":
+        assert compact_snapshot(spark, t)
+    elif op == "compact_partitions":
+        assert compact_snapshot_partitions(spark, t)
+    else:
+        assert compact_snapshot_masks(spark, t)["dv_files"] == 1
+    monkeypatch.setattr(snap, "snapshot_commit", real_commit)
+
+    assert calls["rmw"] == 2  # the raced attempt, then the retry
+    got = {
+        r["id"]: r["v"] for r in snap.snapshot_read(spark, t).collect()
+    }
+    assert got[10_000] == "race"  # the racing append survived
+    if op in ("delete", "compact_masks"):
+        assert len(got) == 98 and not {0, 1, 2} & set(got)
+    elif op == "update":
+        assert len(got) == 101 and got[0] == got[2] == "u"
+    elif op == "merge":
+        assert len(got) == 102 and got[1] == "m" and got[500] == "new"
+    else:
+        assert len(got) == 101
+    assert _unreferenced_staging(t) == []

@@ -685,16 +685,28 @@ NLJ_ALLOWED = {
 }
 
 
-def test_no_query_plans_a_cartesian_product(spark):
+@pytest.fixture(scope="module")
+def built(spark):
+    """Every registry query built once at sf0.001 and shared by the
+    registry-wide guards below (building one can run Spark jobs, so
+    building the registry twice doubles their cost)."""
+    cache = {}
+
+    def get(name):
+        if name not in cache:
+            cache[name] = QUERIES[name](spark, "/root/testdata/sf0.001")
+        return cache[name]
+
+    return get
+
+
+def test_no_query_plans_a_cartesian_product(built):
     """Registry-wide scale guard: no query may silently regress to a
     cartesian product / unbounded nested loop. Catches a forgotten
     join key or an inequality-only condition in ANY future query."""
-    from group5_spark.queries import QUERIES
-
-    sf = "/root/testdata/sf0.001"
     offenders = {}
-    for name, fn in QUERIES.items():
-        plan = I.formatted_plan(fn(spark, sf))
+    for name in QUERIES:
+        plan = I.formatted_plan(built(name))
         if "CartesianProduct" in plan:
             offenders[name] = "CartesianProduct"
         elif "BroadcastNestedLoopJoin" in plan and name not in NLJ_ALLOWED:
@@ -702,7 +714,7 @@ def test_no_query_plans_a_cartesian_product(spark):
     assert not offenders, offenders
 
 
-def test_no_query_outputs_driver_unhashable_columns(spark):
+def test_no_query_outputs_driver_unhashable_columns(built):
     """Registry-wide driver-canonicalization guard (round-3 lesson:
     `order_part_baskets` / `inverted_index_postings` went driver-red
     with `TypeError: unhashable type: 'list'`).
@@ -716,16 +728,15 @@ def test_no_query_outputs_driver_unhashable_columns(spark):
     `string_agg(... ORDER BY ...)` in the DuckDB oracle."""
     from pyspark.sql import types as ST
 
-    from group5_spark.queries import ORACLES, QUERIES
+    from group5_spark.queries import ORACLES
 
-    sf = "/root/testdata/sf0.001"
     offenders = {}
-    for name, fn in QUERIES.items():
+    for name in QUERIES:
         if name not in ORACLES:
             continue  # rows-only queries never reach the hash compare
         bad = [
             f"{f.name}:{f.dataType.simpleString()}"
-            for f in fn(spark, sf).schema.fields
+            for f in built(name).schema.fields
             if isinstance(
                 f.dataType,
                 (ST.ArrayType, ST.MapType, ST.StructType, ST.DecimalType),

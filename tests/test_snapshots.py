@@ -1673,3 +1673,42 @@ def test_expire_keep_since_retains_the_time_window(spark, tmp_path):
 
     with _pytest.raises(FileNotFoundError):
         snapshot_read(spark, t, version=1)
+
+
+def test_last_committed_batch_stops_at_newest_match(
+    spark, tmp_path, monkeypatch
+):
+    """The idempotency check of every streaming micro-batch returns on
+    the newest matching note without parsing older history: on a
+    20-version table it opens the pointer and the head manifest, not
+    the whole lineage."""
+    import pathlib
+
+    from group5_spark.medallion import snapshots as snap
+
+    t = str(tmp_path / "tbl")
+    snapshot_commit(_df(spark, 0, 10), t, note={"app_id": "a", "batch_id": 0})
+    for b in range(1, 20):  # v2..v20: one metadata-only commit per batch
+        snap._metadata_commit(
+            Path(t),
+            lambda parent, v, b=b: {
+                **snap.snapshot_manifest(t, parent),
+                "version": v,
+                "parent": parent,
+                "note": {"app_id": "a", "batch_id": b},
+            },
+        )
+    assert snap.snapshot_manifest(t)["version"] == 20
+    opened = []
+    real_open = pathlib.Path.open
+
+    def counting_open(self, mode="r", *args, **kwargs):
+        if "_manifests" in self.parts:
+            opened.append(self.name)
+        return real_open(self, mode, *args, **kwargs)
+
+    monkeypatch.setattr(pathlib.Path, "open", counting_open)
+    assert snap.last_committed_batch(t, "a") == 19
+    assert len(opened) <= 3, opened
+    monkeypatch.setattr(pathlib.Path, "open", real_open)
+    assert snap.last_committed_batch(t, "other") is None
