@@ -172,14 +172,6 @@ def funnel(fact_activity: DataFrame) -> DataFrame:
     )
 
 
-def events_breakdown(fact_activity: DataFrame, key: str) -> DataFrame:
-    """B39 engagement breakdowns: events by type/device/date."""
-    return fact_activity.groupBy(key).agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.countDistinct("user_id").alias("n_users"),
-    )
-
-
 def category_revenue(fact_items: DataFrame) -> DataFrame:
     """B40 Sales page: revenue by category with % of total."""
     rev = (
@@ -188,33 +180,6 @@ def category_revenue(fact_items: DataFrame) -> DataFrame:
         .agg(F.sum("line_total").alias("revenue"))
     )
     return pct_of_total(rev, "category")
-
-
-def payment_method_split(fact_txn: DataFrame) -> DataFrame:
-    """B40 payment-method split."""
-    rev = (
-        fact_txn.filter(_completed())
-        .groupBy("payment_method")
-        .agg(F.sum("total").alias("revenue"), F.count(F.lit(1)).alias("n_transactions"))
-    )
-    return pct_of_total(rev, "payment_method")
-
-
-def cart_analysis(fact_activity: DataFrame) -> DataFrame:
-    """B41 cart adds vs removes per product."""
-    return (
-        fact_activity.filter(
-            F.col("event_type").isin("add_to_cart", "remove_from_cart")
-        )
-        .groupBy("product_id")
-        .agg(
-            F.sum(F.when(F.col("event_type") == "add_to_cart", F.col("quantity"))
-                  .otherwise(0)).alias("qty_added"),
-            F.sum(F.when(F.col("event_type") == "remove_from_cart", F.col("quantity"))
-                  .otherwise(0)).alias("qty_removed"),
-        )
-        .withColumn("net_qty", F.col("qty_added") - F.col("qty_removed"))
-    )
 
 
 def kpi_cards(fact_txn: DataFrame, fact_activity: DataFrame) -> DataFrame:

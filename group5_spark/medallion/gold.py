@@ -163,33 +163,3 @@ def save_bucketed(
     if sort_by:
         writer = writer.sortBy(sort_by)
     writer.saveAsTable(table)
-
-
-def bucketed_facts(
-    spark: SparkSession,
-    warehouse_dir: str,
-    n_buckets: int = 8,
-    table_prefix: str | None = None,
-) -> list[str]:
-    """Publish the user-keyed fact tables bucketed by ``user_id`` so
-    activity↔transaction joins (funnel, conversion, LTV) are
-    exchange-free.
-
-    Catalog table names are prefixed per warehouse (default: the
-    warehouse directory's basename) — bucket metadata lives in the
-    session-global catalog, so two warehouses refreshed in one
-    session must not collide on fixed names.
-    """
-    if table_prefix is None:
-        table_prefix = (
-            os.path.basename(os.path.normpath(warehouse_dir))
-            .replace("-", "_")
-            .replace(".", "_")
-        )
-    tables = []
-    for fact in ("fact_transactions", "fact_user_activity"):
-        path = os.path.join(warehouse_dir, "gold", fact)
-        name = f"{table_prefix}_{fact}_bucketed"
-        save_bucketed(spark.read.parquet(path), name, "user_id", n_buckets)
-        tables.append(name)
-    return tables

@@ -155,15 +155,6 @@ def stg_transaction_items(stg_txn: DataFrame) -> DataFrame:
     )
 
 
-def stg_dimension(df: DataFrame, date_cols: list[str], money_cols: list[str]) -> DataFrame:
-    """B22: typed dimension staging (dates + decimals)."""
-    for c in date_cols:
-        df = df.withColumn(c, F.to_date(c))
-    for c in money_cols:
-        df = df.withColumn(c, F.col(c).cast(MONEY))
-    return df
-
-
 def refresh_silver(spark: SparkSession, warehouse_dir: str) -> dict[str, int]:
     """Ordered silver refresh (A31 chain, silver stage): writes
     stg_user_events, stg_transactions, stg_transaction_items as

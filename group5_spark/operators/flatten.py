@@ -60,19 +60,6 @@ def explode_array(
     return df.withColumn(out, fn(F.col(array_col))).drop(array_col)
 
 
-def explode_and_flatten(
-    df: DataFrame, array_col: str, keep_empty: bool = False, sep: str = "_"
-) -> DataFrame:
-    """Explode an array-of-structs and flatten the element struct —
-    the reference's transaction→line-item shape (``etl_job.py:29-64``)
-    as one reusable operator."""
-    return flatten_struct(
-        explode_array(df, array_col, out=array_col.rstrip("s") or "item",
-                      keep_empty=keep_empty),
-        sep=sep,
-    )
-
-
 def parse_json_column(
     df: DataFrame, json_col: str, schema: StructType | ArrayType | str,
     out: str | None = None,

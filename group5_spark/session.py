@@ -104,10 +104,3 @@ def create_spark_session(
     for key, value in conf.items():
         builder = builder.config(key, value)
     return builder.getOrCreate()
-
-
-def stop_all() -> None:
-    """Stop the active session if any (test teardown helper)."""
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

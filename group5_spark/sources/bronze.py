@@ -41,19 +41,6 @@ def load_raw_json(
     )
 
 
-def load_dimension_json(spark: SparkSession, path: str) -> DataFrame:
-    """Dimensions ship as JSON arrays (customers/products) — the
-    reference needs STRIP_OUTER_ARRAY in its file format DDL
-    (``dag_streamflow_warehouse.py:63-68``); Spark's multiLine mode
-    is the equivalent."""
-    return (
-        spark.read.option("multiLine", "true")
-        .json(path)
-        .withColumn("source_file", F.input_file_name())
-        .withColumn("load_ts", F.current_timestamp())
-    )
-
-
 def build_bronze(
     spark: SparkSession,
     landing_dir: str,

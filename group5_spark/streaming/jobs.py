@@ -60,28 +60,6 @@ def windowed_event_counts(
     )
 
 
-def windowed_revenue(
-    transactions: DataFrame,
-    ts_col: str = "txn_ts",
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Watermarked streaming daily-revenue (streaming B28)."""
-    return (
-        transactions.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window))
-        .agg(
-            F.sum(F.col("total").cast("decimal(18,2)")).alias("gross_revenue"),
-            F.count(F.lit(1)).alias("n_transactions"),
-        )
-        .select(
-            F.col("window.start").alias("window_start"),
-            "gross_revenue",
-            "n_transactions",
-        )
-    )
-
-
 def run_available_now(
     df: DataFrame,
     checkpoint_dir: str,

@@ -232,112 +232,6 @@ def test_refresh_aggregate_routes_through_snapshot_commits(spark, tmp_path):
     assert still == head
 
 
-def test_result_cache_hits_until_any_input_commits(spark, tmp_path):
-    from group5_spark.medallion.snapshots import snapshot_commit
-    from group5_spark.plans.result_cache import ResultCache
-
-    base = str(tmp_path / "rc_base")
-    snapshot_commit(
-        spark.createDataFrame([("a", 1.0), ("b", 2.0)], ["seg", "v"]), base
-    )
-    cache = ResultCache(str(tmp_path / "rc"))
-    calls = {"n": 0}
-
-    def compute():
-        calls["n"] += 1
-        from group5_spark.medallion.snapshots import snapshot_read
-
-        return (
-            snapshot_read(spark, base)
-            .groupBy("seg")
-            .agg(F.sum("v").alias("total"))
-        )
-
-    df1, hit1 = cache.get_or_compute(spark, "seg_totals", [base], compute)
-    assert not hit1 and calls["n"] == 1
-    df2, hit2 = cache.get_or_compute(spark, "seg_totals", [base], compute)
-    assert hit2 and calls["n"] == 1  # served without recompute
-    assert sorted(map(tuple, df2.collect())) == sorted(map(tuple, df1.collect()))
-    # any commit to an input moves the version -> stale hit impossible
-    snapshot_commit(
-        spark.createDataFrame([("a", 5.0)], ["seg", "v"]), base, mode="append"
-    )
-    df3, hit3 = cache.get_or_compute(spark, "seg_totals", [base], compute)
-    assert not hit3 and calls["n"] == 2
-    assert {tuple(r) for r in df3.collect()} == {("a", 6.0), ("b", 2.0)}
-    # a different query name never collides
-    _, hit4 = cache.get_or_compute(spark, "other_q", [base], compute)
-    assert not hit4
-
-
-def test_result_cache_never_publishes_racing_compute(spark, tmp_path):
-    """A commit landing BETWEEN version capture and materialization
-    must not let the (newer) result be published under the older-
-    version key — a later caller keyed at the old versions would be
-    served data that doesn't match its key. The cache retries against
-    the new head and publishes there instead."""
-    from group5_spark.medallion.snapshots import (
-        snapshot_commit,
-        snapshot_read,
-    )
-    from group5_spark.plans.result_cache import ResultCache
-
-    base = str(tmp_path / "rc_race_base")
-    snapshot_commit(
-        spark.createDataFrame([("a", 1.0)], ["seg", "v"]), base
-    )
-    cache = ResultCache(str(tmp_path / "rc_race"))
-    calls = {"n": 0}
-
-    def compute():
-        calls["n"] += 1
-        if calls["n"] == 1:  # simulate a concurrent writer mid-compute
-            snapshot_commit(
-                spark.createDataFrame([("a", 9.0)], ["seg", "v"]),
-                base,
-                mode="append",
-            )
-        return (
-            snapshot_read(spark, base)
-            .groupBy("seg")
-            .agg(F.sum("v").alias("total"))
-        )
-
-    df, hit = cache.get_or_compute(spark, "seg_totals", [base], compute)
-    assert not hit and calls["n"] == 2  # retried after the race
-    # the served result reflects the post-commit head
-    assert {tuple(r) for r in df.collect()} == {("a", 10.0)}
-    # exactly one published entry, keyed at the CURRENT versions
-    import json
-
-    metas = [
-        json.loads((p / "_META.json").read_text())
-        for p in cache.root.iterdir()
-        if p.is_dir() and (p / "_META.json").exists()
-    ]
-    assert len(metas) == 1
-    assert metas[0]["versions"] == cache.versions_of([base])
-    # and that entry now HITS
-    _, hit2 = cache.get_or_compute(spark, "seg_totals", [base], compute)
-    assert hit2 and calls["n"] == 2
-
-
-def test_result_cache_evicts_lru(spark, tmp_path):
-    from group5_spark.medallion.snapshots import snapshot_commit
-    from group5_spark.plans.result_cache import ResultCache
-
-    base = str(tmp_path / "rc_base2")
-    snapshot_commit(spark.range(3).toDF("id"), base)
-    cache = ResultCache(str(tmp_path / "rc2"), max_entries=2)
-    from group5_spark.medallion.snapshots import snapshot_read
-
-    for name in ("q1", "q2", "q3"):
-        cache.get_or_compute(
-            spark, name, [base], lambda: snapshot_read(spark, base)
-        )
-    assert cache.stats()["entries"] == 2  # oldest evicted
-
-
 def test_ivm_random_commit_sequence_matches_rebuild(spark, tmp_path):
     """Property: after ANY interleaving of append/overwrite commits,
     ivm_refresh equals a from-scratch rebuild (deterministic seed)."""

@@ -15,30 +15,33 @@ priced by the batch plus the probed slice, never the corpus:
   the measured table is never mutated; cost is batch x n_cells argmax
   work + one manifest commit.
 
-Writes/merges the `fixed_batch_ivf` key into SCALE_TRAINOPS.json
-(this script UPDATES the JSON in place — it never rewrites the other
-orchestrators' keys).
+Writes the `fixed_batch_ivf` key of SCALE_TRAINOPS.json in place
+(every other key is kept). `--pq` runs the product-quantization ladder
+(`fixed_batch_pq`) and `--ivfpq` the composed IVF-PQ ladder
+(`fixed_batch_ivfpq`), described on their workers below.
 
-Usage:
-    python tools/ivf_probe_curve.py            # scales 1 4 16 64 128
-    python tools/ivf_probe_curve.py --one 16   # single scale (subprocess worker)
+Usage (a ladder flag may be followed by scales, e.g. `--pq 1 4`):
+    python tools/ivf_probe_curve.py                 # scales 1 4 16 64 128
+    python tools/ivf_probe_curve.py --one 16        # single scale (subprocess worker)
+    python tools/ivf_probe_curve.py --pq
+    python tools/ivf_probe_curve.py --one-pq 16
+    python tools/ivf_probe_curve.py --ivfpq
+    python tools/ivf_probe_curve.py --one-ivfpq 16
 """
 
 from __future__ import annotations
 
-import json
 import math
 import shutil
-import subprocess
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from tools.ladder import Ladder, dispatch, stopwatch  # noqa: E402
 from tools.scale_curve import SCALE_ROOT, _spark, materialize_docs  # noqa: E402
 
-SCALES = [1, 4, 16, 64, 128]
+SCALES = (1, 4, 16, 64, 128)
 
 
 def n_cells_for(n: int) -> int:
@@ -67,9 +70,9 @@ def run_one(n: int) -> dict:
     if not (idx / "_DONE2").exists():
         shutil.rmtree(idx, ignore_errors=True)
         emb = load_table(spark, sf_dir, "embeddings")
-        t0 = time.perf_counter()
-        ivf_index_init(emb, str(idx), n_cells=cells)
-        build_s = round(time.perf_counter() - t0, 3)
+        with stopwatch() as build:
+            ivf_index_init(emb, str(idx), n_cells=cells)
+        build_s = build.s
         (idx / "_DONE2").touch()
 
     base = load_table(spark, str(SCALE_ROOT / "xd001"), "embeddings")
@@ -77,9 +80,8 @@ def run_one(n: int) -> dict:
 
     # warm-up, then timed probe
     ivf_index_search(probe_batch, str(idx), k=10, n_probe=4).count()
-    t0 = time.perf_counter()
-    rows = ivf_index_search(probe_batch, str(idx), k=10, n_probe=4).count()
-    probe_s = round(time.perf_counter() - t0, 3)
+    with stopwatch() as probe:
+        rows = ivf_index_search(probe_batch, str(idx), k=10, n_probe=4).count()
 
     # timed maintenance append on a zero-copy clone (never mutate the
     # measured index); ids shifted out of the corpus id space
@@ -87,9 +89,8 @@ def run_one(n: int) -> dict:
     clone = SCALE_ROOT / f"_ivfidx_clone_x{n:03d}"
     shutil.rmtree(clone, ignore_errors=True)
     snapshot_clone(str(idx), str(clone))
-    t0 = time.perf_counter()
-    ivf_index_append(append_batch, str(clone))
-    append_s = round(time.perf_counter() - t0, 3)
+    with stopwatch() as append:
+        ivf_index_append(append_batch, str(clone))
     shutil.rmtree(clone, ignore_errors=True)
 
     spark.stop()
@@ -97,9 +98,9 @@ def run_one(n: int) -> dict:
         "scale": n,
         "n_cells": cells,
         "build_seconds_untimed_ingest": build_s,
-        "probe_seconds": probe_s,
+        "probe_seconds": probe.s,
         "probe_rows": rows,
-        "append_seconds": append_s,
+        "append_seconds": append.s,
     }
 
 
@@ -108,7 +109,7 @@ PQ_QUERIES = 4
 
 
 def run_one_pq(n: int) -> dict:
-    """Round-9 PQ ladder (VERDICT r8 #1): the PQ ANN's three costs and
+    """The PQ ANN's three costs and
     its quality, vs corpus size. The codebooks train ONCE on the 1×
     sample (the production pattern — train on a sample, serve
     everywhere; untimed ingest), then per scale: ENCODE the Nx corpus
@@ -119,7 +120,7 @@ def run_one_pq(n: int) -> dict:
     at that scale: id recall@10 plus the DISTANCE RATIO (mean true
     distance of PQ's top-10 / exact top-10's — 1.0 is perfect). The
     Nx corpus is the base 1x plus FRESH deterministic unit vectors
-    (round-10 materialize_docs), so the exact top-10 is a real
+    (materialize_docs), so the exact top-10 is a real
     neighborhood at every scale and recall stays informative — the
     old replica construction saturated it at 1.0 for >=16x."""
     import math as _math
@@ -142,17 +143,15 @@ def run_one_pq(n: int) -> dict:
     ).cache()
     n_vecs = corpus.count()
 
-    t0 = time.perf_counter()
-    books = pq_train(base, m=PQ_M, k=PQ_K, iters=PQ_ITERS)
-    train_s = round(time.perf_counter() - t0, 3)
+    with stopwatch() as train:
+        books = pq_train(base, m=PQ_M, k=PQ_K, iters=PQ_ITERS)
 
     idx = SCALE_ROOT / f"_pqidx_x{n:03d}"
     shutil.rmtree(idx, ignore_errors=True)
-    t0 = time.perf_counter()
-    pq_encode(corpus, books).select("vec_id", "pq_codes").write.parquet(
-        str(idx)
-    )
-    encode_s = round(time.perf_counter() - t0, 3)
+    with stopwatch() as encode:
+        pq_encode(corpus, books).select("vec_id", "pq_codes").write.parquet(
+            str(idx)
+        )
     codes = spark.read.parquet(str(idx))
 
     qrows = base.orderBy("vec_id").limit(PQ_QUERIES).collect()
@@ -161,17 +160,16 @@ def run_one_pq(n: int) -> dict:
     ]
     # warm-up, then the timed serving-path probes (persisted codes)
     pq_topk(codes, books, queries[0][0], k_top=10, codes_col="pq_codes").count()
-    t0 = time.perf_counter()
     pq_top: dict[int, list[int]] = {}
-    for qv, qid in queries:
-        pq_top[qid] = [
-            r["cand_id"]
-            for r in pq_topk(
-                codes, books, qv, k_top=11, codes_col="pq_codes"
-            ).collect()
-            if r["cand_id"] != qid
-        ][:10]
-    query_s = round(time.perf_counter() - t0, 3)
+    with stopwatch() as query:
+        for qv, qid in queries:
+            pq_top[qid] = [
+                r["cand_id"]
+                for r in pq_topk(
+                    codes, books, qv, k_top=11, codes_col="pq_codes"
+                ).collect()
+                if r["cand_id"] != qid
+            ][:10]
 
     def true_dist(qv, emb):
         return sum((a - float(b)) ** 2 for a, b in zip(qv, emb))
@@ -213,16 +211,16 @@ def run_one_pq(n: int) -> dict:
         "corpus_vecs": n_vecs,
         "m": PQ_M,
         "k": PQ_K,
-        "train_seconds_untimed_ingest": train_s,
-        "encode_seconds": encode_s,
-        "query_seconds": query_s,
+        "train_seconds_untimed_ingest": train.s,
+        "encode_seconds": encode.s,
+        "query_seconds": query.s,
         "recall_at_10": round(sum(recalls) / len(recalls), 3),
         "distance_ratio": round(sum(ratios) / len(ratios), 4),
     }
 
 
 def run_one_ivfpq(n: int) -> dict:
-    """Round-9 IVF-PQ composition ladder: the composed index's two
+    """The IVF-PQ composition ladder: the composed index's two
     serving-path costs and its quality, vs corpus size. Per scale:
     the Nx corpus builds the cell-partitioned coded index ONCE
     (untimed ingest; cells grow as 16·sqrt(N) like the plain-IVF
@@ -254,11 +252,11 @@ def run_one_ivfpq(n: int) -> dict:
     build_s = None
     if not (idx / "_DONE2").exists():
         shutil.rmtree(idx, ignore_errors=True)
-        t0 = time.perf_counter()
-        ivf_pq_index_init(
-            corpus, str(idx), n_cells=cells, m=8, k_codes=16, iters=2
-        )
-        build_s = round(time.perf_counter() - t0, 3)
+        with stopwatch() as build:
+            ivf_pq_index_init(
+                corpus, str(idx), n_cells=cells, m=8, k_codes=16, iters=2
+            )
+        build_s = build.s
         (idx / "_DONE2").touch()
 
     base = load_table(spark, str(SCALE_ROOT / "xd001"), "embeddings")
@@ -271,16 +269,15 @@ def run_one_ivfpq(n: int) -> dict:
         spark, str(idx), queries[0][0], k=10, n_probe=4, rerank=64
     ).count()
     got: dict[int, set] = {}
-    t0 = time.perf_counter()
-    for qv, qid in queries:
-        got[qid] = {
-            r["cand_id"]
-            for r in ivf_pq_topk(
-                spark, str(idx), qv, k=10, n_probe=4, rerank=64,
-                exclude_id=qid,
-            ).collect()
-        }
-    probe_s = round(time.perf_counter() - t0, 3)
+    with stopwatch() as probe:
+        for qv, qid in queries:
+            got[qid] = {
+                r["cand_id"]
+                for r in ivf_pq_topk(
+                    spark, str(idx), qv, k=10, n_probe=4, rerank=64,
+                    exclude_id=qid,
+                ).collect()
+            }
 
     # the recovery dials, measured: scale BOTH approximation knobs
     # with sqrt(N) — n_probe as a constant 1/4 of the cells (cells
@@ -293,25 +290,23 @@ def run_one_ivfpq(n: int) -> dict:
     frac_probe = max(4, cells // 4)
     frac_rerank = 64 * max(1, round(math.sqrt(n)))
     got_frac: dict[int, set] = {}
-    t0 = time.perf_counter()
-    for qv, qid in queries:
-        got_frac[qid] = {
-            r["cand_id"]
-            for r in ivf_pq_topk(
-                spark, str(idx), qv, k=10, n_probe=frac_probe,
-                rerank=frac_rerank, exclude_id=qid,
-            ).collect()
-        }
-    probe_frac_s = round(time.perf_counter() - t0, 3)
+    with stopwatch() as probe_frac:
+        for qv, qid in queries:
+            got_frac[qid] = {
+                r["cand_id"]
+                for r in ivf_pq_topk(
+                    spark, str(idx), qv, k=10, n_probe=frac_probe,
+                    rerank=frac_rerank, exclude_id=qid,
+                ).collect()
+            }
 
     # timed maintenance append on a zero-copy clone
     append_batch = base.withColumn("vec_id", F.col("vec_id") + 10_000_000)
     clone = SCALE_ROOT / f"_ivfpqidx_clone_x{n:03d}"
     shutil.rmtree(clone, ignore_errors=True)
     snapshot_clone(str(idx), str(clone))
-    t0 = time.perf_counter()
-    ivf_pq_index_append(append_batch, str(clone))
-    append_s = round(time.perf_counter() - t0, 3)
+    with stopwatch() as append:
+        ivf_pq_index_append(append_batch, str(clone))
     shutil.rmtree(clone, ignore_errors=True)
 
     hits = total = hits_frac = 0
@@ -332,169 +327,92 @@ def run_one_ivfpq(n: int) -> dict:
         "scale": n,
         "n_cells": cells,
         "build_seconds_untimed_ingest": build_s,
-        "probe_seconds": probe_s,
-        "append_seconds": append_s,
+        "probe_seconds": probe.s,
+        "append_seconds": append.s,
         "recall_at_10": round(hits / total, 3),
         "n_probe_frac": frac_probe,
         "rerank_frac": frac_rerank,
-        "probe_seconds_frac": probe_frac_s,
+        "probe_seconds_frac": probe_frac.s,
         "recall_at_10_frac": round(hits_frac / total, 3),
     }
 
 
-def _collect(flag: str) -> list[dict]:
-    """Subprocess-per-scale worker loop shared by the orchestrators
-    (fresh JVM per scale — the bench/scale-curve methodology)."""
-    runs = []
-    for n in SCALES:
-        print(f"=== {flag} scale x{n} ===", flush=True)
-        out = subprocess.run(
-            [sys.executable, __file__, flag, str(n)],
-            capture_output=True, text=True, check=True,
-        )
-        line = [
-            l for l in out.stdout.splitlines() if l.startswith("RESULT ")
-        ][-1]
-        runs.append(json.loads(line[len("RESULT "):]))
-        print(runs[-1], flush=True)
-    return runs
+WORKERS = {"--one": run_one, "--one-pq": run_one_pq, "--one-ivfpq": run_one_ivfpq}
 
-
-def main_ivfpq() -> None:
-    record_ivfpq(_collect("--one-ivfpq"))
-
-
-def record_ivfpq(runs: list[dict]) -> None:
-    rec = {
-        "method": (
-            "composed IVF-PQ index of the Nx corpus (cells = "
-            "16*sqrt(N), m=8 subspaces x k=16 codewords, built untimed "
-            "= ingest cost); fixed 4-query batch probes the persisted "
-            "index (file-pruned cells -> ADC over persisted codes -> "
-            "exact cosine re-rank of the 64-row shortlist, timed) and "
-            "a fixed 1x append batch lands on a zero-copy clone via "
-            "the frozen model (timed). recall@10 vs exact cosine at "
-            "each scale over the round-10 fresh-vector Nx corpus "
-            "(base 1x + deterministic fresh unit vectors, no replica "
-            "near-ties) — informative at every scale. Model trains "
-            "per scale, so the fixed-budget recall column isolates "
-            "the APPROXIMATION-BUDGET dials (probed fraction "
-            "4/n_cells and shortlist fraction 64/corpus both shrink "
-            "as the corpus grows); the _frac columns scale both with "
-            "sqrt(N) — n_probe = n_cells/4, rerank = 64*sqrt(N) — "
-            "the recovery recipe priced: recall holds while probe "
-            "cost grows with the probed volume instead of falling "
-            "with the fraction"
+LADDERS = {
+    "": Ladder(
+        "--one",
+        "fixed_batch_ivf",
+        "fixed 64-query probe batch + fixed 1x append batch vs the "
+        "PERSISTED cell-partitioned IVF index of an Nx corpus "
+        "(index built untimed = ingest-time cost; cells grow as "
+        "16*sqrt(N) so probes touch ~4/n_cells of the files; "
+        "appends land on a zero-copy clone)",
+        (
+            ("probe_exponent", "probe_seconds"),
+            ("append_exponent", "append_seconds"),
         ),
-        "runs": runs,
-        "probe_seconds_exponent": _fit_exponent(
-            [(r["scale"], r["probe_seconds"]) for r in runs]
+        scales=SCALES,
+    ),
+    "--pq": Ladder(
+        "--one-pq",
+        "fixed_batch_pq",
+        "codebooks trained once on the 1x sample (m=32 subspaces, "
+        "k=16 codewords, untimed ingest); per scale the Nx corpus "
+        "is ENCODED to the persisted m-codes index (timed map-only "
+        "scan) and a fixed 4-query batch probes the PERSISTED "
+        "codes via the ADC LUT path (timed; raw vectors never "
+        "reload); quality vs the exact L2 top-10 at that scale = "
+        "id recall@10 plus the distance ratio (mean true distance "
+        "of PQ's top-10 / exact's, 1.0 perfect). The Nx corpus is "
+        "the round-10 fresh-vector construction (base 1x + "
+        "deterministic fresh unit vectors — no replica near-ties), "
+        "so both quality columns are informative at every scale: "
+        "the exact top-10 is a genuine neighborhood that tightens "
+        "as N grows, the hard test for 1x-trained codebooks",
+        (
+            ("encode_seconds_exponent", "encode_seconds"),
+            ("query_seconds_exponent", "query_seconds"),
+            ("recall_at_10_by_scale", "recall_at_10"),
+            ("distance_ratio_by_scale", "distance_ratio"),
         ),
-        "append_seconds_exponent": _fit_exponent(
-            [(r["scale"], r["append_seconds"]) for r in runs]
+        scales=SCALES,
+    ),
+    "--ivfpq": Ladder(
+        "--one-ivfpq",
+        "fixed_batch_ivfpq",
+        "composed IVF-PQ index of the Nx corpus (cells = "
+        "16*sqrt(N), m=8 subspaces x k=16 codewords, built untimed "
+        "= ingest cost); fixed 4-query batch probes the persisted "
+        "index (file-pruned cells -> ADC over persisted codes -> "
+        "exact cosine re-rank of the 64-row shortlist, timed) and "
+        "a fixed 1x append batch lands on a zero-copy clone via "
+        "the frozen model (timed). recall@10 vs exact cosine at "
+        "each scale over the round-10 fresh-vector Nx corpus "
+        "(base 1x + deterministic fresh unit vectors, no replica "
+        "near-ties) — informative at every scale. Model trains "
+        "per scale, so the fixed-budget recall column isolates "
+        "the APPROXIMATION-BUDGET dials (probed fraction "
+        "4/n_cells and shortlist fraction 64/corpus both shrink "
+        "as the corpus grows); the _frac columns scale both with "
+        "sqrt(N) — n_probe = n_cells/4, rerank = 64*sqrt(N) — "
+        "the recovery recipe priced: recall holds while probe "
+        "cost grows with the probed volume instead of falling "
+        "with the fraction",
+        (
+            ("probe_seconds_exponent", "probe_seconds"),
+            ("append_seconds_exponent", "append_seconds"),
+            ("recall_at_10_by_scale", "recall_at_10"),
+            ("probe_seconds_frac_exponent", "probe_seconds_frac"),
+            ("recall_at_10_frac_by_scale", "recall_at_10_frac"),
         ),
-        "recall_at_10_by_scale": [r["recall_at_10"] for r in runs],
-        "probe_seconds_frac_exponent": _fit_exponent(
-            [(r["scale"], r["probe_seconds_frac"]) for r in runs]
-        ),
-        "recall_at_10_frac_by_scale": [
-            r["recall_at_10_frac"] for r in runs
-        ],
-    }
-    path = Path(__file__).resolve().parent.parent / "SCALE_TRAINOPS.json"
-    data = json.loads(path.read_text())
-    data["fixed_batch_ivfpq"] = rec
-    path.write_text(json.dumps(data, indent=1))
-    print(json.dumps(rec, indent=1))
-
-
-def main_pq() -> None:
-    record_pq(_collect("--one-pq"))
-
-
-def record_pq(runs: list[dict]) -> None:
-    rec = {
-        "method": (
-            "codebooks trained once on the 1x sample (m=32 subspaces, "
-            "k=16 codewords, untimed ingest); per scale the Nx corpus "
-            "is ENCODED to the persisted m-codes index (timed map-only "
-            "scan) and a fixed 4-query batch probes the PERSISTED "
-            "codes via the ADC LUT path (timed; raw vectors never "
-            "reload); quality vs the exact L2 top-10 at that scale = "
-            "id recall@10 plus the distance ratio (mean true distance "
-            "of PQ's top-10 / exact's, 1.0 perfect). The Nx corpus is "
-            "the round-10 fresh-vector construction (base 1x + "
-            "deterministic fresh unit vectors — no replica near-ties), "
-            "so both quality columns are informative at every scale: "
-            "the exact top-10 is a genuine neighborhood that tightens "
-            "as N grows, the hard test for 1x-trained codebooks"
-        ),
-        "runs": runs,
-        "encode_seconds_exponent": _fit_exponent(
-            [(r["scale"], r["encode_seconds"]) for r in runs]
-        ),
-        "query_seconds_exponent": _fit_exponent(
-            [(r["scale"], r["query_seconds"]) for r in runs]
-        ),
-        "recall_at_10_by_scale": [r["recall_at_10"] for r in runs],
-        "distance_ratio_by_scale": [r["distance_ratio"] for r in runs],
-    }
-    path = Path(__file__).resolve().parent.parent / "SCALE_TRAINOPS.json"
-    data = json.loads(path.read_text())
-    data["fixed_batch_pq"] = rec
-    path.write_text(json.dumps(data, indent=1))
-    print(json.dumps(rec, indent=1))
-
-
-def _fit_exponent(points: list[tuple[int, float]]) -> float:
-    xs = [math.log(p[0]) for p in points]
-    ys = [math.log(max(p[1], 1e-6)) for p in points]
-    mx, my = sum(xs) / len(xs), sum(ys) / len(ys)
-    denom = sum((x - mx) ** 2 for x in xs) or 1.0
-    return round(sum((x - mx) * (y - my) for x, y in zip(xs, ys)) / denom, 3)
+        scales=SCALES,
+    ),
+}
 
 
 def main() -> None:
-    if len(sys.argv) > 2 and sys.argv[1] == "--one":
-        print("RESULT " + json.dumps(run_one(int(sys.argv[2]))))
-        return
-    if len(sys.argv) > 2 and sys.argv[1] == "--one-pq":
-        print("RESULT " + json.dumps(run_one_pq(int(sys.argv[2]))))
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "--pq":
-        main_pq()
-        return
-    if len(sys.argv) > 2 and sys.argv[1] == "--one-ivfpq":
-        print("RESULT " + json.dumps(run_one_ivfpq(int(sys.argv[2]))))
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "--ivfpq":
-        main_ivfpq()
-        return
-    record_ivf(_collect("--one"))
-
-
-def record_ivf(runs: list[dict]) -> None:
-    rec = {
-        "method": (
-            "fixed 64-query probe batch + fixed 1x append batch vs the "
-            "PERSISTED cell-partitioned IVF index of an Nx corpus "
-            "(index built untimed = ingest-time cost; cells grow as "
-            "16*sqrt(N) so probes touch ~4/n_cells of the files; "
-            "appends land on a zero-copy clone)"
-        ),
-        "runs": runs,
-        "probe_exponent": _fit_exponent(
-            [(r["scale"], r["probe_seconds"]) for r in runs]
-        ),
-        "append_exponent": _fit_exponent(
-            [(r["scale"], r["append_seconds"]) for r in runs]
-        ),
-    }
-    path = Path(__file__).resolve().parent.parent / "SCALE_TRAINOPS.json"
-    data = json.loads(path.read_text())
-    data["fixed_batch_ivf"] = rec
-    path.write_text(json.dumps(data, indent=1))
-    print(json.dumps(rec, indent=1))
+    dispatch(__file__, WORKERS, LADDERS)
 
 
 if __name__ == "__main__":

@@ -1,12 +1,16 @@
-"""Measured scale curve for file-pruned MERGE INTO on snapshot
-tables: a FIXED CDC batch merged into an Nx orders table.
+"""Measured scale curves for snapshot-table DML and the corpus
+operators that ride on it: a FIXED batch against an Nx table.
 
 The production framing (mirrors fixed_batch_neardup / fixed_batch_ivf
 in SCALE_TRAINOPS.json): the table grows with every crawl; the
 per-batch warehouse upsert must be priced by the batch and the files
-it actually touches, never the table. Two operations are timed per
-scale, each against a zero-copy CLONE of the measured table (the
-ladder table itself is never mutated, so runs are idempotent):
+it actually touches, never the table. Timed operations run against a
+zero-copy CLONE of the measured table (the ladder table itself is
+never mutated, so runs are idempotent). Each ladder updates its own
+key of SCALE_TRAINOPS.json in place and leaves every other key as it
+is.
+
+The default ladder (`fixed_batch_merge`) times two MERGEs per scale:
 
 - update-heavy merge: 2,000 update keys confined to the 1x key range
   + 500 inserts beyond the key space. The table is written
@@ -19,17 +23,13 @@ ladder table itself is never mutated, so runs are idempotent):
   append-shaped fast path (no join, no data read) — the
   append-mostly CDC steady state.
 
-Writes/merges the `fixed_batch_merge` key into SCALE_TRAINOPS.json
-(UPDATES the JSON in place — never rewrites the other orchestrators'
-keys).
-
-`--dv` runs the round-6 WIDE-FILE ladder instead: the same fixed CDC
-batch against tables with a FIXED file count whose files are N×
-wider, comparing rewrite-mode staged bytes against deletion-vector-
-mode staged+sidecar bytes. Rewrite cost grows with file width (a
-10-row match in a wider file re-encodes the whole file); DV cost
-tracks the MATCHED ROWS and stays flat — the write-amplification
-claim, measured. Writes `fixed_batch_merge_dv`.
+`--dv` runs the WIDE-FILE ladder instead: the same fixed CDC batch
+against tables with a FIXED file count whose files are N× wider,
+comparing rewrite-mode staged bytes against deletion-vector-mode
+staged+sidecar bytes. Rewrite cost grows with file width (a 10-row
+match in a wider file re-encodes the whole file); DV cost tracks the
+MATCHED ROWS and stays flat — the write-amplification claim,
+measured. Writes `fixed_batch_merge_dv`.
 
 `--eq` runs the equality-delete ladder on the SAME wide-file tables:
 the fixed batch committed via `snapshot_eq_upsert`, which appends the
@@ -40,62 +40,62 @@ matched files; the eq path touches none). The deferred read rent is
 measured too: a full masked scan vs the same scan after
 `compact_snapshot` folds the masks. Writes `fixed_batch_eq_upsert`.
 
-Usage:
-    python tools/merge_curve.py            # scales 1 4 16 64
-    python tools/merge_curve.py --one 16   # single scale (subprocess worker)
-    python tools/merge_curve.py --dv       # wide-file DV ladder
+The other ladders are described on their workers below.
+
+Usage (a ladder flag may be followed by scales, e.g. `--dv 1 4`;
+`--one* N` runs one scale in-process — the subprocess worker):
+    python tools/merge_curve.py                  # MERGE, scales 1 4 16 64
+    python tools/merge_curve.py --one 16
+    python tools/merge_curve.py --dv             # wide-file DV ladder
     python tools/merge_curve.py --one-dv 16
-    python tools/merge_curve.py --eq       # equality-delete ladder
+    python tools/merge_curve.py --eq             # equality-delete ladder
     python tools/merge_curve.py --one-eq 16
-    python tools/merge_curve.py --masks    # mask-scoped fold ladder
+    python tools/merge_curve.py --masks          # mask-scoped fold ladder
     python tools/merge_curve.py --one-masks 16
-    python tools/merge_curve.py --stream-eq  # streaming eq-CDC loop
+    python tools/merge_curve.py --stream-eq      # streaming eq-CDC loop
     python tools/merge_curve.py --one-stream-eq 16
-    python tools/merge_curve.py --containment  # PPJoin probe ladder
+    python tools/merge_curve.py --wap            # Write-Audit-Publish cycle
+    python tools/merge_curve.py --one-wap 16
+    python tools/merge_curve.py --span           # span dedup vs persisted index
+    python tools/merge_curve.py --one-span 16
+    python tools/merge_curve.py --semdedup       # SemDeDup centroid policies
+    python tools/merge_curve.py --one-semdedup 16
+    python tools/merge_curve.py --containment    # PPJoin probe, scales to 128
     python tools/merge_curve.py --one-containment 16
 """
 
 from __future__ import annotations
 
-import json
 import math
 import shutil
-import subprocess
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from tools.ladder import Ladder, dispatch, stopwatch  # noqa: E402
 from tools.scale_curve import BASE_SF, SCALE_ROOT, _spark, materialize  # noqa: E402
 
-SCALES = [1, 4, 16, 64]
 N_UPDATES = 2000
 N_INSERTS = 500
+DV_FILES = 8  # fixed file count: scale widens files, not the manifest
 
 
-def run_one(n: int) -> dict:
-    from pyspark.sql import functions as F
-
+def _orders_table(spark, name: str, n: int, files: int):
+    """The Nx orders snapshot table at SCALE_ROOT/<name>_xNNN,
+    range-clustered on o_orderkey into `files` files, loaded once
+    through the same DML surface (snapshot_merge) and reused after.
+    Returns (path, load seconds — None when reused)."""
     from group5_spark.catalog import load_table
     from group5_spark.medallion.maintenance import snapshot_merge
-    from group5_spark.medallion.snapshots import (
-        snapshot_clone,
-        snapshot_manifest,
-    )
 
-    materialize(n)
-    sf_dir = str(SCALE_ROOT / f"x{n:03d}")
-    tbl = SCALE_ROOT / f"_mergetbl_x{n:03d}"
-    spark = _spark(f"merge-curve-x{n}")
-
-    build_s = None
-    files = max(8, 2 * n)
-    if not (tbl / "_DONE").exists():
-        shutil.rmtree(tbl, ignore_errors=True)
-        orders = load_table(spark, sf_dir, "orders")
-        t0 = time.perf_counter()
-        snapshot_merge(  # initial load through the same DML surface
+    tbl = SCALE_ROOT / f"{name}_x{n:03d}"
+    if (tbl / "_DONE").exists():
+        return tbl, None
+    shutil.rmtree(tbl, ignore_errors=True)
+    orders = load_table(spark, str(SCALE_ROOT / f"x{n:03d}"), "orders")
+    with stopwatch() as t:
+        snapshot_merge(
             spark,
             str(tbl),
             orders.repartitionByRange(files, "o_orderkey"),
@@ -103,88 +103,19 @@ def run_one(n: int) -> dict:
             bloom_cols=["o_orderkey"],
             validate_source_keys=False,
         )
-        build_s = round(time.perf_counter() - t0, 3)
-        (tbl / "_DONE").touch()
-
-    base = load_table(spark, BASE_SF, "orders")
-    okey_max = base.agg(F.max("o_orderkey")).first()[0]
-    # fixed batch at every scale: 2k updates spread over the 1x key
-    # range (hits ~files/N of the range-clustered files = constant
-    # count) + 500 inserts beyond every replica's key space
-    stride = max(1, okey_max // (N_UPDATES * 4))  # 4-way sparse keys
-    updates = (
-        base.filter((F.col("o_orderkey") % (4 * stride)) == 0)
-        .limit(N_UPDATES)
-        .withColumn("o_orderpriority", F.lit("9-CDC-UPDATED"))
-    )
-    inserts = base.limit(N_INSERTS).withColumn(
-        "o_orderkey", F.col("o_orderkey") + F.lit(10**13)
-    )
-    batch = updates.unionByName(inserts).cache()
-    batch.count()  # materialize the batch outside the timed region
-
-    def timed_merge(src, label):
-        clone = SCALE_ROOT / f"_mergetbl_clone_x{n:03d}"
-        shutil.rmtree(clone, ignore_errors=True)
-        snapshot_clone(str(tbl), str(clone))
-        t0 = time.perf_counter()
-        res = snapshot_merge(
-            spark, str(clone), src, keys=["o_orderkey"],
-            validate_source_keys=False,
-        )
-        secs = round(time.perf_counter() - t0, 3)
-        shutil.rmtree(clone, ignore_errors=True)
-        res.pop("version")
-        return {"seconds": secs, **res}
-
-    upd = timed_merge(batch, "update-heavy")
-    ins = timed_merge(inserts, "insert-only")
-    batch.unpersist()
-
-    n_files = len(snapshot_manifest(str(tbl))["files"])
-    spark.stop()
-    return {
-        "scale": n,
-        "table_files": n_files,
-        "build_seconds_untimed_ingest": build_s,
-        "update_merge": upd,
-        "insert_only_merge": ins,
-    }
+    (tbl / "_DONE").touch()
+    return tbl, t.s
 
 
-DV_FILES = 8  # fixed file count: scale widens files, not the manifest
-
-
-def run_one_dv(n: int) -> dict:
+def _cdc_batch(spark):
+    """The fixed CDC batch, identical at every scale: 2k updates spread
+    4-way sparse over the 1x key range (they hit ~files/N of the
+    range-clustered files = a constant count) + 500 inserts beyond
+    every replica's key space. Returns (updates ∪ inserts, inserts,
+    the 1x orders table, its max o_orderkey)."""
     from pyspark.sql import functions as F
 
     from group5_spark.catalog import load_table
-    from group5_spark.medallion.maintenance import snapshot_merge
-    from group5_spark.medallion.snapshots import (
-        snapshot_clone,
-        snapshot_manifest,
-    )
-
-    materialize(n)
-    sf_dir = str(SCALE_ROOT / f"x{n:03d}")
-    tbl = SCALE_ROOT / f"_mergedvtbl_x{n:03d}"
-    spark = _spark(f"merge-dv-curve-x{n}")
-
-    if not (tbl / "_DONE").exists():
-        shutil.rmtree(tbl, ignore_errors=True)
-        orders = load_table(spark, sf_dir, "orders")
-        snapshot_merge(
-            spark,
-            str(tbl),
-            # FIXED file count at every scale: each file holds N× the
-            # rows, which is exactly the regime where whole-file
-            # rewrite amplification hurts
-            orders.repartitionByRange(DV_FILES, "o_orderkey"),
-            keys=["o_orderkey"],
-            bloom_cols=["o_orderkey"],
-            validate_source_keys=False,
-        )
-        (tbl / "_DONE").touch()
 
     base = load_table(spark, BASE_SF, "orders")
     okey_max = base.agg(F.max("o_orderkey")).first()[0]
@@ -197,45 +128,103 @@ def run_one_dv(n: int) -> dict:
     inserts = base.limit(N_INSERTS).withColumn(
         "o_orderkey", F.col("o_orderkey") + F.lit(10**13)
     )
-    batch = updates.unionByName(inserts).cache()
+    return updates.unionByName(inserts), inserts, base, okey_max
+
+
+def _clone(tbl: Path, name: str) -> str:
+    """A fresh zero-copy clone of `tbl` at SCALE_ROOT/<name>."""
+    from group5_spark.medallion.snapshots import snapshot_clone
+
+    clone = SCALE_ROOT / name
+    shutil.rmtree(clone, ignore_errors=True)
+    snapshot_clone(str(tbl), str(clone))
+    return str(clone)
+
+
+def _staged_bytes(path: str, version: int, sidecars: bool = False) -> int:
+    """Bytes commit `version` staged: data files absent from its parent
+    version, plus — with `sidecars` — every deletion-vector and
+    equality-delete sidecar its manifest references."""
+    from group5_spark.medallion.snapshots import snapshot_manifest
+
+    m = snapshot_manifest(path, version)
+    parent = {e["path"] for e in snapshot_manifest(path, m["parent"])["files"]}
+    staged = sum(int(e["bytes"]) for e in m["files"] if e["path"] not in parent)
+    if not sidecars:
+        return staged
+    dirs = [Path(path) / e["dv"]["sidecar"] for e in m["files"] if e.get("dv")]
+    dirs += [Path(path) / d["sidecar"] for d in m.get("eq_deletes") or []]
+    return staged + sum(
+        f.stat().st_size for d in dirs if d.is_dir() for f in d.rglob("*.parquet")
+    )
+
+
+def _table_shape(tbl: Path) -> dict:
+    from group5_spark.medallion.snapshots import snapshot_manifest
+
+    files = snapshot_manifest(str(tbl))["files"]
+    return {
+        "table_files": len(files),
+        "table_bytes": sum(int(e["bytes"]) for e in files),
+    }
+
+
+def run_one(n: int) -> dict:
+    from group5_spark.medallion.maintenance import snapshot_merge
+
+    materialize(n)
+    spark = _spark(f"merge-curve-x{n}")
+    tbl, build_s = _orders_table(spark, "_mergetbl", n, max(8, 2 * n))
+    batch, inserts, _, _ = _cdc_batch(spark)
+    batch = batch.cache()
+    batch.count()  # materialize the batch outside the timed region
+
+    def timed_merge(src):
+        clone = _clone(tbl, f"_mergetbl_clone_x{n:03d}")
+        with stopwatch() as t:
+            res = snapshot_merge(
+                spark, clone, src, keys=["o_orderkey"],
+                validate_source_keys=False,
+            )
+        shutil.rmtree(clone, ignore_errors=True)
+        res.pop("version")
+        return {"seconds": t.s, **res}
+
+    upd = timed_merge(batch)
+    ins = timed_merge(inserts)
+    batch.unpersist()
+    spark.stop()
+    return {
+        "scale": n,
+        "table_files": _table_shape(tbl)["table_files"],
+        "build_seconds_untimed_ingest": build_s,
+        "update_merge": upd,
+        "insert_only_merge": ins,
+    }
+
+
+def run_one_dv(n: int) -> dict:
+    from group5_spark.medallion.maintenance import snapshot_merge
+
+    materialize(n)
+    spark = _spark(f"merge-dv-curve-x{n}")
+    # FIXED file count at every scale: each file holds N× the rows,
+    # which is exactly the regime where whole-file rewrite
+    # amplification hurts
+    tbl, _ = _orders_table(spark, "_mergedvtbl", n, DV_FILES)
+    batch = _cdc_batch(spark)[0].cache()
     batch.count()
 
-    def staged_and_sidecar_bytes(path: str, version: int) -> int:
-        m = snapshot_manifest(path, version)
-        parent_paths = {
-            e["path"]
-            for e in snapshot_manifest(path, m["parent"])["files"]
-        }
-        staged = sum(
-            int(e["bytes"])
-            for e in m["files"]
-            if e["path"] not in parent_paths
-        )
-        sidecar = 0
-        for e in m["files"]:
-            if e.get("dv"):
-                d = Path(path) / e["dv"]["sidecar"]
-                if d.is_dir():
-                    sidecar += sum(
-                        f.stat().st_size for f in d.rglob("*.parquet")
-                    )
-        return staged + sidecar
-
-    def timed(mode: str, dv_threshold):
-        clone = SCALE_ROOT / f"_mergedvtbl_clone_x{n:03d}"
-        shutil.rmtree(clone, ignore_errors=True)
-        snapshot_clone(str(tbl), str(clone))
-        t0 = time.perf_counter()
-        res = snapshot_merge(
-            spark, str(clone), batch, keys=["o_orderkey"],
-            validate_source_keys=False, dv_threshold=dv_threshold,
-        )
-        secs = round(time.perf_counter() - t0, 3)
+    def timed(dv_threshold):
+        clone = _clone(tbl, f"_mergedvtbl_clone_x{n:03d}")
+        with stopwatch() as t:
+            res = snapshot_merge(
+                spark, clone, batch, keys=["o_orderkey"],
+                validate_source_keys=False, dv_threshold=dv_threshold,
+            )
         out = {
-            "seconds": secs,
-            "bytes_written": staged_and_sidecar_bytes(
-                str(clone), res["version"]
-            ),
+            "seconds": t.s,
+            "bytes_written": _staged_bytes(clone, res["version"], True),
             "files_rewritten": res["files_rewritten"],
             "files_masked": res.get("files_masked", 0),
             "updated": res["updated"],
@@ -244,240 +233,122 @@ def run_one_dv(n: int) -> dict:
         shutil.rmtree(clone, ignore_errors=True)
         return out
 
-    rewrite = timed("rewrite", None)
-    dv = timed("dv", 0.2)
+    rewrite = timed(None)
+    dv = timed(0.2)
     batch.unpersist()
-
-    m = snapshot_manifest(str(tbl))
-    table_bytes = sum(int(e["bytes"]) for e in m["files"])
     spark.stop()
     return {
         "scale": n,
-        "table_files": len(m["files"]),
-        "table_bytes": table_bytes,
+        **_table_shape(tbl),
         "rewrite_mode": rewrite,
         "dv_mode": dv,
     }
 
 
 def run_one_eq(n: int) -> dict:
-    from pyspark.sql import functions as F
-
-    from group5_spark.catalog import load_table
     from group5_spark.medallion.maintenance import (
         compact_snapshot,
         snapshot_eq_upsert,
-        snapshot_merge,
     )
-    from group5_spark.medallion.snapshots import (
-        snapshot_clone,
-        snapshot_manifest,
-        snapshot_read,
-    )
+    from group5_spark.medallion.snapshots import snapshot_read
 
     materialize(n)
-    sf_dir = str(SCALE_ROOT / f"x{n:03d}")
-    tbl = SCALE_ROOT / f"_mergedvtbl_x{n:03d}"  # shared with --dv
     spark = _spark(f"merge-eq-curve-x{n}")
-
-    if not (tbl / "_DONE").exists():
-        shutil.rmtree(tbl, ignore_errors=True)
-        orders = load_table(spark, sf_dir, "orders")
-        snapshot_merge(
-            spark,
-            str(tbl),
-            orders.repartitionByRange(DV_FILES, "o_orderkey"),
-            keys=["o_orderkey"],
-            bloom_cols=["o_orderkey"],
-            validate_source_keys=False,
-        )
-        (tbl / "_DONE").touch()
-
-    base = load_table(spark, BASE_SF, "orders")
-    okey_max = base.agg(F.max("o_orderkey")).first()[0]
-    stride = max(1, okey_max // (N_UPDATES * 4))
-    updates = (
-        base.filter((F.col("o_orderkey") % (4 * stride)) == 0)
-        .limit(N_UPDATES)
-        .withColumn("o_orderpriority", F.lit("9-CDC-UPDATED"))
-    )
-    inserts = base.limit(N_INSERTS).withColumn(
-        "o_orderkey", F.col("o_orderkey") + F.lit(10**13)
-    )
-    batch = updates.unionByName(inserts).cache()
+    tbl, _ = _orders_table(spark, "_mergedvtbl", n, DV_FILES)  # shared with --dv
+    batch = _cdc_batch(spark)[0].cache()
     batch.count()
 
-    def commit_bytes(path: str, version: int) -> int:
-        m = snapshot_manifest(path, version)
-        parent_paths = {
-            e["path"]
-            for e in snapshot_manifest(path, m["parent"])["files"]
-        }
-        staged = sum(
-            int(e["bytes"])
-            for e in m["files"]
-            if e["path"] not in parent_paths
-        )
-        sidecar = 0
-        for d in m.get("eq_deletes") or []:
-            sd = Path(path) / d["sidecar"]
-            if sd.is_dir():
-                sidecar += sum(
-                    f.stat().st_size for f in sd.rglob("*.parquet")
-                )
-        return staged + sidecar
-
-    clone = SCALE_ROOT / f"_mergeeqtbl_clone_x{n:03d}"
-    shutil.rmtree(clone, ignore_errors=True)
-    snapshot_clone(str(tbl), str(clone))
-    t0 = time.perf_counter()
-    res = snapshot_eq_upsert(
-        spark, str(clone), batch, keys=["o_orderkey"]
-    )
-    commit_s = round(time.perf_counter() - t0, 3)
-    bytes_written = commit_bytes(str(clone), res["version"])
-
-    t0 = time.perf_counter()
-    masked_rows = snapshot_read(spark, str(clone)).count()
-    masked_read_s = round(time.perf_counter() - t0, 3)
-    t0 = time.perf_counter()
-    compact_snapshot(
-        spark, str(clone), target_file_bytes=256 * 1024 * 1024
-    )
-    compact_s = round(time.perf_counter() - t0, 3)
-    t0 = time.perf_counter()
-    folded_rows = snapshot_read(spark, str(clone)).count()
-    folded_read_s = round(time.perf_counter() - t0, 3)
+    clone = _clone(tbl, f"_mergeeqtbl_clone_x{n:03d}")
+    with stopwatch() as commit:
+        res = snapshot_eq_upsert(spark, clone, batch, keys=["o_orderkey"])
+    bytes_written = _staged_bytes(clone, res["version"], True)
+    with stopwatch() as masked_read:
+        masked_rows = snapshot_read(spark, clone).count()
+    with stopwatch() as fold:
+        compact_snapshot(spark, clone, target_file_bytes=256 * 1024 * 1024)
+    with stopwatch() as folded_read:
+        folded_rows = snapshot_read(spark, clone).count()
     if folded_rows != masked_rows:
         raise RuntimeError(
             f"compaction changed row count: {masked_rows} != {folded_rows}"
         )
     shutil.rmtree(clone, ignore_errors=True)
     batch.unpersist()
-
-    m = snapshot_manifest(str(tbl))
     spark.stop()
     return {
         "scale": n,
-        "table_files": len(m["files"]),
-        "table_bytes": sum(int(e["bytes"]) for e in m["files"]),
+        **_table_shape(tbl),
         "eq_upsert": {
-            "seconds": commit_s,
+            "seconds": commit.s,
             "bytes_written": bytes_written,
             "rows_appended": res["rows_appended"],
             "delete_keys": res["delete_keys"],
         },
-        "masked_read_seconds": masked_read_s,
-        "compact_fold_seconds": compact_s,
-        "folded_read_seconds": folded_read_s,
+        "masked_read_seconds": masked_read.s,
+        "compact_fold_seconds": fold.s,
+        "folded_read_seconds": folded_read.s,
         "rows": masked_rows,
     }
 
 
 def run_one_masks(n: int) -> dict:
-    """Round-7 ladder (VERDICT #3): fold cost ∝ MASKED data, not table
-    size. A fixed narrow key range is DV-masked (sub-threshold, files
-    carry) in the Nx range-clustered table — the masks land in a
-    ~constant file set while the table grows — then the mask-scoped
-    fold (`compact_snapshot_masks`) is timed against the whole-table
+    """Fold cost ∝ MASKED data, not table size. A fixed narrow key
+    range is DV-masked (sub-threshold, files carry) in the Nx
+    range-clustered table — the masks land in a ~constant file set
+    while the table grows — then the mask-scoped fold
+    (`compact_snapshot_masks`) is timed against the whole-table
     rewrite fold (`compact_snapshot(force=True)`) on identical clones.
     Scoped seconds/bytes should be ~flat; the full rewrite grows with
-    the table (the round-6 judge-measured 1.7→43.6 s linear fold this
-    ladder corrects)."""
-    from group5_spark.catalog import load_table
+    the table (the 1.7→43.6 s linear fold this ladder corrects)."""
     from group5_spark.medallion.maintenance import (
         compact_snapshot,
         compact_snapshot_masks,
         snapshot_delete,
         snapshot_eq_upsert,
-        snapshot_merge,
     )
-    from group5_spark.medallion.snapshots import (
-        snapshot_clone,
-        snapshot_manifest,
-        snapshot_read,
-    )
+    from group5_spark.medallion.snapshots import snapshot_read
 
     materialize(n)
-    sf_dir = str(SCALE_ROOT / f"x{n:03d}")
-    tbl = SCALE_ROOT / f"_mergetbl_x{n:03d}"  # shared with the merge ladder
     spark = _spark(f"mask-fold-curve-x{n}")
-
-    files = max(8, 2 * n)
-    if not (tbl / "_DONE").exists():
-        shutil.rmtree(tbl, ignore_errors=True)
-        orders = load_table(spark, sf_dir, "orders")
-        snapshot_merge(
-            spark,
-            str(tbl),
-            orders.repartitionByRange(files, "o_orderkey"),
-            keys=["o_orderkey"],
-            bloom_cols=["o_orderkey"],
-            validate_source_keys=False,
-        )
-        (tbl / "_DONE").touch()
-
-    # fixed masked slice at every scale: the FIRST 1x-range sliver of
-    # the key space — range clustering confines it to a ~constant
-    # number of files however many files the table has
-    from pyspark.sql import functions as F
-
-    base = load_table(spark, BASE_SF, "orders")
-    okey_max = base.agg(F.max("o_orderkey")).first()[0]
-    # a 1/32-of-1x-range sliver: always a strict sub-file fraction of
+    # shared with the merge ladder
+    tbl, _ = _orders_table(spark, "_mergetbl", n, max(8, 2 * n))
+    batch, _, _, okey_max = _cdc_batch(spark)
+    # fixed masked slice at every scale: a 1/32-of-1x-range sliver at
+    # the start of the key space — always a strict sub-file fraction of
     # the first range-clustered file (whose span is ≥ 1/8 of the 1x
     # range at every scale), so the delete masks instead of rewriting
     cut = max(1, okey_max // 32)
-    stride = max(1, okey_max // (N_UPDATES * 4))
-
-    def staged_bytes(path: str, version: int) -> int:
-        m = snapshot_manifest(path, version)
-        parent_paths = {
-            e["path"]
-            for e in snapshot_manifest(path, m["parent"])["files"]
-        }
-        return sum(
-            int(e["bytes"])
-            for e in m["files"]
-            if e["path"] not in parent_paths
-        )
 
     def prep_clone(tag: str) -> str:
-        clone = SCALE_ROOT / f"_maskfold_{tag}_x{n:03d}"
-        shutil.rmtree(clone, ignore_errors=True)
-        snapshot_clone(str(tbl), str(clone))
+        clone = _clone(tbl, f"_maskfold_{tag}_x{n:03d}")
         out = snapshot_delete(
-            spark, str(clone), [("o_orderkey", "<", cut)],
-            dv_threshold=0.95,
+            spark, clone, [("o_orderkey", "<", cut)], dv_threshold=0.95,
         )
         if not out.get("files_masked"):
             raise RuntimeError(f"mask prep rewrote instead of masking: {out}")
-        return str(clone)
+        return clone
 
     # scoped fold: rewrite only the DV-bearing files
     clone = prep_clone("scoped")
     expect = snapshot_read(spark, clone).count()
-    t0 = time.perf_counter()
-    res = compact_snapshot_masks(spark, clone)
-    scoped_s = round(time.perf_counter() - t0, 3)
-    scoped_bytes = staged_bytes(clone, res["version"])
+    with stopwatch() as t:
+        res = compact_snapshot_masks(spark, clone)
     after = snapshot_read(spark, clone).count()
     if after != expect:
         raise RuntimeError(f"scoped fold changed rows: {expect} != {after}")
     scoped = {
-        "seconds": scoped_s,
-        "bytes_written": scoped_bytes,
+        "seconds": t.s,
+        "bytes_written": _staged_bytes(clone, res["version"]),
         "files_folded": res["files_folded"],
         "files_carried": res["files_carried"],
     }
     shutil.rmtree(clone, ignore_errors=True)
 
-    # whole-table rewrite fold (the pre-round-7 only option)
+    # whole-table rewrite fold (the only option before the scoped fold)
     clone = prep_clone("full")
-    t0 = time.perf_counter()
-    compact_snapshot(spark, clone, force=True)
-    full_s = round(time.perf_counter() - t0, 3)
-    full = {"seconds": full_s}
+    with stopwatch() as t:
+        compact_snapshot(spark, clone, force=True)
+    full = {"seconds": t.s}
     shutil.rmtree(clone, ignore_errors=True)
 
     # eq-region fold: a zero-read upsert whose keys live in the 1x
@@ -486,39 +357,24 @@ def run_one_masks(n: int) -> dict:
     # probe proves every untouched-region file disjoint from the
     # sidecar keys, so it carries re-stamped and only the touched
     # region rewrites
-    updates = (
-        base.filter((F.col("o_orderkey") % (4 * stride)) == 0)
-        .limit(N_UPDATES)
-        .withColumn("o_orderpriority", F.lit("9-CDC-UPDATED"))
-    )
-    inserts = base.limit(N_INSERTS).withColumn(
-        "o_orderkey", F.col("o_orderkey") + F.lit(10**13)
-    )
-    batch = updates.unionByName(inserts)
-    clone = SCALE_ROOT / f"_maskfold_eqr_x{n:03d}"
-    shutil.rmtree(clone, ignore_errors=True)
-    snapshot_clone(str(tbl), str(clone))
-    snapshot_eq_upsert(spark, str(clone), batch, keys=["o_orderkey"])
-    expect_eq = snapshot_read(spark, str(clone)).count()
-    t0 = time.perf_counter()
-    res = compact_snapshot_masks(spark, str(clone))
-    eqr_s = round(time.perf_counter() - t0, 3)
-    if snapshot_read(spark, str(clone)).count() != expect_eq:
+    clone = _clone(tbl, f"_maskfold_eqr_x{n:03d}")
+    snapshot_eq_upsert(spark, clone, batch, keys=["o_orderkey"])
+    expect_eq = snapshot_read(spark, clone).count()
+    with stopwatch() as t:
+        res = compact_snapshot_masks(spark, clone)
+    if snapshot_read(spark, clone).count() != expect_eq:
         raise RuntimeError("eq-region fold changed row count")
     eq_region = {
-        "seconds": eqr_s,
-        "bytes_written": staged_bytes(str(clone), res["version"]),
+        "seconds": t.s,
+        "bytes_written": _staged_bytes(clone, res["version"]),
         "files_folded": res["files_folded"],
         "files_restamped": res["files_restamped"],
     }
     shutil.rmtree(clone, ignore_errors=True)
-
-    m = snapshot_manifest(str(tbl))
     spark.stop()
     return {
         "scale": n,
-        "table_files": len(m["files"]),
-        "table_bytes": sum(int(e["bytes"]) for e in m["files"]),
+        **_table_shape(tbl),
         "scoped_fold": scoped,
         "full_rewrite_fold": full,
         "eq_region_fold": eq_region,
@@ -527,131 +383,87 @@ def run_one_masks(n: int) -> dict:
 
 
 def run_one_stream_eq(n: int) -> dict:
-    """Round-7 VERDICT #4: the streaming eq-CDC STEADY STATE,
-    measured. The fixed CDC batch is split into 8 micro-batch files
-    and drained through `stream_upsert_snapshot(eq_mode=True)`
-    (maxFilesPerTrigger=1 → 8 real micro-batch commits, each an
-    `snapshot_eq_upsert` that appends the slice + a key sidecar and
-    never reads a target file) against a zero-copy clone of the Nx
-    wide-file orders table. Commit seconds/batch should be FLAT in
-    table size — the 'commit cost independent of table size' claim
-    the batch ladder implied, now measured on the actual streaming
-    sink loop (planning, checkpoint, replay-dedup note, OCC commit).
-    The deferred reader rent (masked scan) and its cure (mask-scoped
-    fold) are recorded after the drain."""
+    """The streaming eq-CDC STEADY STATE, measured. The fixed CDC batch
+    is split into 8 micro-batch files and drained through
+    `stream_upsert_snapshot(eq_mode=True)` (maxFilesPerTrigger=1 → 8
+    real micro-batch commits, each an `snapshot_eq_upsert` that appends
+    the slice + a key sidecar and never reads a target file) against a
+    zero-copy clone of the Nx wide-file orders table. Commit
+    seconds/batch should be FLAT in table size — the 'commit cost
+    independent of table size' claim the batch ladder implied, now
+    measured on the actual streaming sink loop (planning, checkpoint,
+    replay-dedup note, OCC commit). The deferred reader rent (masked
+    scan) and its cure (mask-scoped fold) are recorded after the
+    drain."""
     import tempfile
 
-    from pyspark.sql import functions as F
-
-    from group5_spark.catalog import load_table
-    from group5_spark.medallion.maintenance import (
-        compact_snapshot_masks,
-        snapshot_merge,
-    )
+    from group5_spark.medallion.maintenance import compact_snapshot_masks
     from group5_spark.medallion.snapshots import (
-        snapshot_clone,
         snapshot_manifest,
         snapshot_read,
     )
     from group5_spark.streaming.jobs import stream_upsert_snapshot
 
     materialize(n)
-    sf_dir = str(SCALE_ROOT / f"x{n:03d}")
-    tbl = SCALE_ROOT / f"_mergedvtbl_x{n:03d}"  # shared with --dv/--eq
     spark = _spark(f"stream-eq-curve-x{n}")
-
-    if not (tbl / "_DONE").exists():
-        shutil.rmtree(tbl, ignore_errors=True)
-        orders = load_table(spark, sf_dir, "orders")
-        snapshot_merge(
-            spark,
-            str(tbl),
-            orders.repartitionByRange(DV_FILES, "o_orderkey"),
-            keys=["o_orderkey"],
-            bloom_cols=["o_orderkey"],
-            validate_source_keys=False,
-        )
-        (tbl / "_DONE").touch()
-
-    base = load_table(spark, BASE_SF, "orders")
-    okey_max = base.agg(F.max("o_orderkey")).first()[0]
-    stride = max(1, okey_max // (N_UPDATES * 4))
-    updates = (
-        base.filter((F.col("o_orderkey") % (4 * stride)) == 0)
-        .limit(N_UPDATES)
-        .withColumn("o_orderpriority", F.lit("9-CDC-UPDATED"))
-    )
-    inserts = base.limit(N_INSERTS).withColumn(
-        "o_orderkey", F.col("o_orderkey") + F.lit(10**13)
-    )
+    # shared with --dv/--eq
+    tbl, _ = _orders_table(spark, "_mergedvtbl", n, DV_FILES)
+    batch, _, base, _ = _cdc_batch(spark)
     # 8 micro-batch files: the steady-state loop, not one giant batch
     n_batches = 8
     src = SCALE_ROOT / f"_streameq_src_x{n:03d}"
     shutil.rmtree(src, ignore_errors=True)
-    updates.unionByName(inserts).repartition(n_batches).write.parquet(
-        str(src)
-    )
+    batch.repartition(n_batches).write.parquet(str(src))
 
-    clone = SCALE_ROOT / f"_streameqtbl_clone_x{n:03d}"
-    shutil.rmtree(clone, ignore_errors=True)
-    snapshot_clone(str(tbl), str(clone))
-    schema = load_table(spark, BASE_SF, "orders").schema
+    clone = _clone(tbl, f"_streameqtbl_clone_x{n:03d}")
     with tempfile.TemporaryDirectory() as ckpt:
         stream = (
-            spark.readStream.schema(schema)
+            spark.readStream.schema(base.schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(str(src))
         )
-        t0 = time.perf_counter()
-        stream_upsert_snapshot(
-            stream,
-            ckpt,
-            str(clone),
-            keys=["o_orderkey"],
-            eq_mode=True,
-            app_id=f"stream-eq-x{n}",
-        )
-        drain_s = round(time.perf_counter() - t0, 3)
-    m = snapshot_manifest(str(clone))
-    commits = len(m.get("eq_deletes") or [])
+        with stopwatch() as drain:
+            stream_upsert_snapshot(
+                stream,
+                ckpt,
+                clone,
+                keys=["o_orderkey"],
+                eq_mode=True,
+                app_id=f"stream-eq-x{n}",
+            )
+    commits = len(snapshot_manifest(clone).get("eq_deletes") or [])
 
-    t0 = time.perf_counter()
-    masked_rows = snapshot_read(spark, str(clone)).count()
-    masked_read_s = round(time.perf_counter() - t0, 3)
-    t0 = time.perf_counter()
-    fold = compact_snapshot_masks(spark, str(clone))
-    fold_s = round(time.perf_counter() - t0, 3)
-    t0 = time.perf_counter()
-    folded_rows = snapshot_read(spark, str(clone)).count()
-    folded_read_s = round(time.perf_counter() - t0, 3)
+    with stopwatch() as masked_read:
+        masked_rows = snapshot_read(spark, clone).count()
+    with stopwatch() as fold_t:
+        fold = compact_snapshot_masks(spark, clone)
+    with stopwatch() as folded_read:
+        folded_rows = snapshot_read(spark, clone).count()
     if folded_rows != masked_rows:
         raise RuntimeError(
             f"fold changed row count: {masked_rows} != {folded_rows}"
         )
     shutil.rmtree(clone, ignore_errors=True)
     shutil.rmtree(src, ignore_errors=True)
-
-    tm = snapshot_manifest(str(tbl))
     spark.stop()
     return {
         "scale": n,
-        "table_files": len(tm["files"]),
-        "table_bytes": sum(int(e["bytes"]) for e in tm["files"]),
+        **_table_shape(tbl),
         "micro_batches": n_batches,
         "eq_commits": commits,
-        "drain_seconds": drain_s,
-        "commit_seconds_per_batch": round(drain_s / n_batches, 3),
-        "masked_read_seconds": masked_read_s,
-        "fold_seconds": fold_s,
+        "drain_seconds": drain.s,
+        "commit_seconds_per_batch": round(drain.s / n_batches, 3),
+        "masked_read_seconds": masked_read.s,
+        "fold_seconds": fold_t.s,
         "fold_files_folded": fold["files_folded"],
         "fold_files_carried": fold["files_carried"],
-        "folded_read_seconds": folded_read_s,
+        "folded_read_seconds": folded_read.s,
         "rows": masked_rows,
     }
 
 
 def run_one_span(n: int) -> dict:
-    """Round-7 VERDICT #6's ladder: span dedup at scale, two shapes.
+    """Span dedup at scale, two shapes.
 
     (a) FIXED BATCH: a 1× crawl batch (half its docs' spans already in
     the corpus, half fresh) dedups against the Nx corpus's PERSISTED
@@ -703,20 +515,19 @@ def run_one_span(n: int) -> dict:
     batch_docs = batch.count()
 
     span_dedup_incremental(batch, index, span_words=SPAN).count()  # warm
-    t0 = time.perf_counter()
-    batch_kept_docs = span_dedup_incremental(
-        batch, index, span_words=SPAN
-    ).count()
-    batch_s = round(time.perf_counter() - t0, 3)
+    with stopwatch() as batch_t:
+        batch_kept_docs = span_dedup_incremental(
+            batch, index, span_words=SPAN
+        ).count()
 
     def full(hash_keys: bool) -> tuple[int, float]:
-        t0 = time.perf_counter()
-        kept = (
-            span_dedup(docs, span_words=SPAN, hash_keys=hash_keys)
-            .agg(F.sum("kept_spans").alias("k"))
-            .first()["k"]
-        )
-        return int(kept), round(time.perf_counter() - t0, 3)
+        with stopwatch() as t:
+            kept = (
+                span_dedup(docs, span_words=SPAN, hash_keys=hash_keys)
+                .agg(F.sum("kept_spans").alias("k"))
+                .first()["k"]
+            )
+        return int(kept), t.s
 
     full(True)  # warm
     hash_kept, hash_s = full(True)
@@ -734,7 +545,7 @@ def run_one_span(n: int) -> dict:
         "fixed_batch": {
             "batch_docs": batch_docs,
             "kept_docs": batch_kept_docs,
-            "seconds": batch_s,
+            "seconds": batch_t.s,
         },
         "full_corpus": {
             "kept_spans": hash_kept,
@@ -745,7 +556,7 @@ def run_one_span(n: int) -> dict:
 
 
 def run_one_containment(n: int, cap: int = 40) -> dict:
-    """Round-10 VERDICT #3's ladder: the containment (PPJoin
+    """The containment (PPJoin
     prefix-filter) probe of a FIXED 1× crawl batch against the Nx
     corpus's PERSISTED prefix+postings index
     (`containment_index_build` → `contained_pairs_incremental`),
@@ -772,8 +583,6 @@ def run_one_containment(n: int, cap: int = 40) -> dict:
     flags the boilerplate-heavy half while the RAREST words — the
     ones prefixes are made of — stay open: candidates shrink, pairs
     sharing an uncapped prefix word survive."""
-    import time as _time
-
     from pyspark.sql import functions as F
 
     from group5_spark.catalog import load_table
@@ -844,9 +653,9 @@ def run_one_containment(n: int, cap: int = 40) -> dict:
             containment_index_build(batch, TAU), idx_df
         ).count()
         contained_pairs_incremental(batch, idx_df, TAU).count()  # warm
-        t0 = _time.perf_counter()
-        pairs = contained_pairs_incremental(batch, idx_df, TAU).count()
-        return pairs, cands, round(_time.perf_counter() - t0, 3)
+        with stopwatch() as t:
+            pairs = contained_pairs_incremental(batch, idx_df, TAU).count()
+        return pairs, cands, t.s
 
     pairs, cands, secs = probe(index)
     c_pairs, c_cands, c_secs = probe(index_capped)
@@ -873,14 +682,14 @@ def run_one_containment(n: int, cap: int = 40) -> dict:
 
 
 def run_one_semdedup(n: int, k0: int = 64, prop_k0: int = 16) -> dict:
-    """Round-12 ladder for the SemDeDup-style semantic dedup
+    """The SemDeDup-style semantic dedup
     (`extensions.similarity.semantic_dedup`): price the op's two cost
     terms — the N·k assignment pass and the Σ|cell|² within-cell pair
     join — against corpus scale under three centroid policies: FIXED
     k (assignment stays linear, cells fatten, the join term grows as
     N²/k), the BALANCED k ∝ √N (both terms O(N^1.5) — the policy you
-    deploy when the centroids are trained per run), and — round-13
-    VERDICT #3 — the PUBLISHED k ∝ N operating point (per-cell size
+    deploy when the centroids are trained per run), and the PUBLISHED
+    k ∝ N operating point (per-cell size
     held constant, pinned here at the 1× corpus's N/prop_k0 ≈ 250
     vectors/cell so the 64× rung stays runnable): the pair join's
     candidate space goes LINEAR (the reason the paper picks it), and
@@ -902,12 +711,18 @@ def run_one_semdedup(n: int, k0: int = 64, prop_k0: int = 16) -> dict:
     candidate space (Σ c(c−1) over cells), not a growing dup load.
     Centroids: the first k corpus vectors by id — deterministic, no
     training cost in the measurement."""
-    import time as _time
+    import tempfile
 
     from pyspark.sql import functions as F
 
     from group5_spark.catalog import load_table
-    from group5_spark.extensions.similarity import semantic_dedup
+    from group5_spark.extensions.similarity import (
+        _semantic_assign,
+        ivf_index_init,
+        semantic_dedup,
+        semantic_dedup_ivf,
+    )
+    from group5_spark.medallion.snapshots import snapshot_read
 
     TAU = 0.95
     AMP = 0.25
@@ -958,8 +773,6 @@ def run_one_semdedup(n: int, k0: int = 64, prop_k0: int = 16) -> dict:
         survivors = semantic_dedup(corpus, cents, TAU).count()  # warm
         # pair volume the within-cell join faces: Σ c(c-1) over cells,
         # from the operator's own map-only assignment
-        from group5_spark.extensions.similarity import _semantic_assign
-
         cell_sizes = (
             _semantic_assign(corpus, cents)
             .groupBy("cell_id")
@@ -970,15 +783,14 @@ def run_one_semdedup(n: int, k0: int = 64, prop_k0: int = 16) -> dict:
                 F.sum(F.col("c") * (F.col("c") - 1))
             ).first()[0]
         )
-        t0 = _time.perf_counter()
-        survivors = semantic_dedup(corpus, cents, TAU).count()
-        secs = round(_time.perf_counter() - t0, 3)
+        with stopwatch() as t:
+            survivors = semantic_dedup(corpus, cents, TAU).count()
         out[label] = {
             "k": k,
             "survivors": survivors,
             "doomed": n_vecs - survivors,
             "pair_volume": pair_volume,
-            "seconds": secs,
+            "seconds": t.s,
         }
         if out[label]["doomed"] != n_planted:
             raise SystemExit(
@@ -992,21 +804,11 @@ def run_one_semdedup(n: int, k0: int = 64, prop_k0: int = 16) -> dict:
     # already-paid cost — recorded separately, never hidden), then
     # time semantic_dedup_ivf electing over the STORED cells — the
     # only per-run work left is the linear within-cell pair join
-    import shutil as _shutil
-    import tempfile as _tempfile
-
-    from group5_spark.extensions.similarity import (
-        ivf_index_init,
-        semantic_dedup_ivf,
-    )
-    from group5_spark.medallion.snapshots import snapshot_read
-
-    scratch = _tempfile.mkdtemp(prefix=f"semdedup_ivf_x{n}_")
+    scratch = tempfile.mkdtemp(prefix=f"semdedup_ivf_x{n}_")
     try:
         idx = f"{scratch}/ivfidx"
-        t0 = _time.perf_counter()
-        ivf_index_init(corpus, idx, n_cells=prop_k0 * n)
-        build_secs = round(_time.perf_counter() - t0, 3)
+        with stopwatch() as build:
+            ivf_index_init(corpus, idx, n_cells=prop_k0 * n)
         survivors = semantic_dedup_ivf(spark, idx, TAU).count()  # warm
         cell_sizes = (
             snapshot_read(spark, idx)
@@ -1018,18 +820,17 @@ def run_one_semdedup(n: int, k0: int = 64, prop_k0: int = 16) -> dict:
                 F.sum(F.col("c") * (F.col("c") - 1))
             ).first()[0]
         )
-        t0 = _time.perf_counter()
-        survivors = semantic_dedup_ivf(spark, idx, TAU).count()
-        secs = round(_time.perf_counter() - t0, 3)
+        with stopwatch() as t:
+            survivors = semantic_dedup_ivf(spark, idx, TAU).count()
     finally:
-        _shutil.rmtree(scratch, ignore_errors=True)
+        shutil.rmtree(scratch, ignore_errors=True)
     out["ivf_reuse"] = {
         "k": prop_k0 * n,
         "survivors": survivors,
         "doomed": n_vecs - survivors,
         "pair_volume": pair_volume,
-        "seconds": secs,
-        "index_build_seconds": build_secs,
+        "seconds": t.s,
+        "index_build_seconds": build.s,
     }
     if out["ivf_reuse"]["doomed"] != n_planted:
         raise SystemExit(
@@ -1043,243 +844,70 @@ def run_one_semdedup(n: int, k0: int = 64, prop_k0: int = 16) -> dict:
     return out
 
 
-def main_semdedup(scales: list[int] | None = None) -> None:
-    runs = []
-    for n in scales or SCALES:
-        print(f"=== semdedup scale x{n} ===", flush=True)
-        out = subprocess.run(
-            [sys.executable, __file__, "--one-semdedup", str(n)],
-            capture_output=True, text=True, check=True,
-        )
-        line = [
-            l for l in out.stdout.splitlines() if l.startswith("RESULT ")
-        ][-1]
-        runs.append(json.loads(line[len("RESULT "):]))
-        print(runs[-1], flush=True)
-    rec = {
-        "method": (
-            "testdata embeddings replicated Nx with deterministic "
-            "±0.25/dim jitter (replica cosine ~0.65 — never pairs at "
-            "tau 0.95) plus one planted x2-scaled duplicate per base "
-            "vector (a fixed count at every scale); semantic_dedup "
-            "timed under three centroid policies: fixed k (linear "
-            "assignment, N²/k pair join), balanced k ∝ √N (both "
-            "terms N^1.5), and the published SemDeDup operating point "
-            "k ∝ N (per-cell size constant — pinned at the 1× "
-            "corpus's N/16 ≈ 250 vectors/cell — pair join LINEAR, "
-            "per-run assignment quadratic in N; semantic_dedup_ivf "
-            "reuses the IVF index's stored cells and pays only the "
-            "linear join, which is how the k ∝ N point deploys at "
-            "100 TB — measured as the ivf_reuse rung: a real "
-            "ivf_index_init at n_cells = 16·N persists the assignment "
-            "(index_build_seconds, the amortized cost, recorded not "
-            "hidden) and semantic_dedup_ivf is timed electing over "
-            "the STORED cells). pair_volume = Σ c(c−1) over assigned "
-            "cells — "
-            "the within-cell join's candidate space; doomed must "
-            "equal the planted duplicates exactly at every scale and "
-            "policy (raises otherwise)"
-        ),
-        "runs": runs,
-        "fixed_k_seconds_exponent": _fit_exponent(
-            [(r["scale"], r["fixed_k"]["seconds"]) for r in runs]
-        ),
-        "fixed_k_pair_volume_exponent": _fit_exponent(
-            [(r["scale"], r["fixed_k"]["pair_volume"]) for r in runs]
-        ),
-        "sqrt_k_seconds_exponent": _fit_exponent(
-            [(r["scale"], r["sqrt_k"]["seconds"]) for r in runs]
-        ),
-        "sqrt_k_pair_volume_exponent": _fit_exponent(
-            [(r["scale"], r["sqrt_k"]["pair_volume"]) for r in runs]
-        ),
-        "prop_k_seconds_exponent": _fit_exponent(
-            [(r["scale"], r["prop_k"]["seconds"]) for r in runs]
-        ),
-        "prop_k_pair_volume_exponent": _fit_exponent(
-            [(r["scale"], r["prop_k"]["pair_volume"]) for r in runs]
-        ),
-        "ivf_reuse_seconds_exponent": _fit_exponent(
-            [(r["scale"], r["ivf_reuse"]["seconds"]) for r in runs]
-        ),
-        "ivf_reuse_pair_volume_exponent": _fit_exponent(
-            [(r["scale"], r["ivf_reuse"]["pair_volume"]) for r in runs]
-        ),
-    }
-    path = Path(__file__).resolve().parent.parent / "SCALE_TRAINOPS.json"
-    data = json.loads(path.read_text())
-    data["fixed_corpus_semdedup"] = rec
-    path.write_text(json.dumps(data, indent=1))
-    print(json.dumps(rec, indent=1))
-
-
-def main_containment(scales: list[int] | None = None) -> None:
-    # round-11 VERDICT #3: run the containment ladder one doubling
-    # past the other batch families' 64x — the postings shuffle is
-    # widest here, so 128x is where a super-linear term would show
-    runs = []
-    for n in scales or SCALES + [128]:
-        print(f"=== containment scale x{n} ===", flush=True)
-        out = subprocess.run(
-            [sys.executable, __file__, "--one-containment", str(n)],
-            capture_output=True, text=True, check=True,
-        )
-        line = [
-            l for l in out.stdout.splitlines() if l.startswith("RESULT ")
-        ][-1]
-        runs.append(json.loads(line[len("RESULT "):]))
-        print(runs[-1], flush=True)
-    rec = {
-        "method": (
-            "a fixed 1x crawl batch (half verbatim duplicates of "
-            "replica-0 docs, half fresh vocabulary) probes the Nx "
-            "corpus's persisted containment prefix+postings index via "
-            "contained_pairs_incremental (group-suffixed words — "
-            "vocab x(replicas*50) — so per-word df is the realistic "
-            "topic-clustered ~group-size, not the 31-word boilerplate "
-            "testdata profile); candidate volume and probe seconds "
-            "recorded per scale, plus the max_posting_size=40 capped "
-            "index where the boilerplate-heavy words leave the "
-            "candidate join but their postings still count toward "
-            "intersections"
-        ),
-        "runs": runs,
-        "seconds_exponent": _fit_exponent(
-            [(r["scale"], r["fixed_batch"]["seconds"]) for r in runs]
-        ),
-        "candidates_exponent": _fit_exponent(
-            [(r["scale"], r["fixed_batch"]["candidates"]) for r in runs]
-        ),
-        "capped_seconds_exponent": _fit_exponent(
-            [
-                (r["scale"], r["fixed_batch_capped"]["seconds"])
-                for r in runs
-            ]
-        ),
-        "capped_candidates_exponent": _fit_exponent(
-            [
-                (r["scale"], r["fixed_batch_capped"]["candidates"])
-                for r in runs
-            ]
-        ),
-    }
-    path = Path(__file__).resolve().parent.parent / "SCALE_TRAINOPS.json"
-    data = json.loads(path.read_text())
-    data["fixed_batch_containment"] = rec
-    path.write_text(json.dumps(data, indent=1))
-    print(json.dumps(rec, indent=1))
-
-
 def run_one_wap(n: int) -> dict:
-    """Round-8 WAP ladder: Write-Audit-Publish cycle cost vs main-table
-    size. Per scale: wap_begin (tag + zero-copy clone manifest), a
-    fixed 1× audit batch appended to the audit table (untimed — it's
-    the same append it would be anywhere), an audit-side DV DELETE on
-    an inherited file (the sidecar-move publish case), then
-    wap_publish (dir renames + ONE metadata commit). begin and publish
-    must stay flat as the table grows 64× — the whole point of the
-    pattern is that staging and adopting a day's data never touches
-    the table's bytes."""
-    from pyspark.sql import functions as F
-
-    from group5_spark.catalog import load_table
-    from group5_spark.medallion.maintenance import (
-        snapshot_delete,
-        snapshot_merge,
-    )
-    from group5_spark.medallion.snapshots import (
-        snapshot_clone,
-        snapshot_manifest,
-        snapshot_read,
-    )
-    from group5_spark.medallion.wap import wap_begin, wap_publish
-
-    materialize(n)
-    sf_dir = str(SCALE_ROOT / f"x{n:03d}")
-    tbl = SCALE_ROOT / f"_mergetbl_x{n:03d}"
-    spark = _spark(f"wap-curve-x{n}")
-
-    files = max(8, 2 * n)
-    if not (tbl / "_DONE").exists():  # shared with the merge ladder
-        shutil.rmtree(tbl, ignore_errors=True)
-        orders = load_table(spark, sf_dir, "orders")
-        snapshot_merge(
-            spark,
-            str(tbl),
-            orders.repartitionByRange(files, "o_orderkey"),
-            keys=["o_orderkey"],
-            bloom_cols=["o_orderkey"],
-            validate_source_keys=False,
-        )
-        (tbl / "_DONE").touch()
-
-    main_tbl = SCALE_ROOT / f"_waptbl_x{n:03d}"
-    shutil.rmtree(main_tbl, ignore_errors=True)
-    snapshot_clone(str(tbl), str(main_tbl))
-    audit = str(main_tbl) + "_audit"
-
-    base = load_table(spark, BASE_SF, "orders")
-    okey_max = base.agg(F.max("o_orderkey")).first()[0]
-    batch = base.limit(N_INSERTS).withColumn(
-        "o_orderkey", F.col("o_orderkey") + F.lit(10**13)
-    ).cache()
-    batch_rows = batch.count()
-
-    t0 = time.perf_counter()
-    wap_begin(str(main_tbl), audit)
-    begin_s = round(time.perf_counter() - t0, 3)
-
-    from group5_spark.medallion.snapshots import snapshot_commit
-
-    snapshot_commit(batch, audit, mode="append")  # untimed: plain append
-    del_res = snapshot_delete(
-        spark, audit, [("o_orderkey", "<", okey_max // 64)],
-        dv_threshold=1.0,
-    )
-
-    t0 = time.perf_counter()
-    v = wap_publish(str(main_tbl), audit)
-    publish_s = round(time.perf_counter() - t0, 3)
-
-    published_rows = snapshot_read(spark, str(main_tbl)).count()
-    n_files = len(snapshot_manifest(str(main_tbl))["files"])
-
-    # round-9 VERDICT #7: price the OCC retry. A second WAP session
-    # stages the same batch + DV delete, a concurrent writer moves the
-    # main head mid-audit, publish LOSES the race — then the timed
-    # recovery: abort, re-begin from the new head, REPLAY the audit
-    # commits, publish. This is the full cost a writer pays per lost
-    # race (abort+begin are metadata; the replay is the batch itself).
+    """Write-Audit-Publish cycle cost vs main-table size. Per scale:
+    wap_begin (tag + zero-copy clone manifest), a fixed 1× audit batch
+    appended to the audit table (untimed — it's the same append it
+    would be anywhere), an audit-side DV DELETE on an inherited file
+    (the sidecar-move publish case), then wap_publish (dir renames +
+    ONE metadata commit). begin and publish must stay flat as the
+    table grows 64× — the whole point of the pattern is that staging
+    and adopting a day's data never touches the table's bytes."""
+    from group5_spark.medallion.maintenance import snapshot_delete
     from group5_spark.medallion.snapshots import (
         SnapshotConflict,
-        snapshot_commit as _commit,
+        snapshot_commit,
+        snapshot_read,
     )
-    from group5_spark.medallion.wap import wap_abort
+    from group5_spark.medallion.wap import wap_abort, wap_begin, wap_publish
 
-    audit2 = str(main_tbl) + "_audit2"
-    wap_begin(str(main_tbl), audit2)
-    _commit(batch, audit2, mode="append")
-    snapshot_delete(
-        spark, audit2, [("o_orderkey", "<", okey_max // 64)],
-        dv_threshold=1.0,
-    )
+    materialize(n)
+    spark = _spark(f"wap-curve-x{n}")
+    # shared with the merge ladder
+    tbl, _ = _orders_table(spark, "_mergetbl", n, max(8, 2 * n))
+    main_tbl = _clone(tbl, f"_waptbl_x{n:03d}")
+    _, batch, base, okey_max = _cdc_batch(spark)
+    batch = batch.cache()
+    batch_rows = batch.count()
+
+    def stage(audit: str) -> dict:
+        snapshot_commit(batch, audit, mode="append")  # a plain append
+        return snapshot_delete(
+            spark, audit, [("o_orderkey", "<", okey_max // 64)],
+            dv_threshold=1.0,
+        )
+
+    audit = main_tbl + "_audit"
+    with stopwatch() as begin:
+        wap_begin(main_tbl, audit)
+    del_res = stage(audit)  # untimed
+    with stopwatch() as publish:
+        v = wap_publish(main_tbl, audit)
+
+    published_rows = snapshot_read(spark, main_tbl).count()
+    n_files = _table_shape(Path(main_tbl))["table_files"]
+
+    # price the OCC retry. A second WAP session stages the same batch +
+    # DV delete, a concurrent writer moves the main head mid-audit,
+    # publish LOSES the race — then the timed recovery: abort,
+    # re-begin from the new head, REPLAY the audit commits, publish.
+    # This is the full cost a writer pays per lost race (abort+begin
+    # are metadata; the replay is the batch itself).
+    audit2 = main_tbl + "_audit2"
+    wap_begin(main_tbl, audit2)
+    stage(audit2)
     # the interfering writer (a 100-row append straight to main)
-    _commit(base.limit(100), str(main_tbl), mode="append")
+    snapshot_commit(base.limit(100), main_tbl, mode="append")
     try:
-        wap_publish(str(main_tbl), audit2)
+        wap_publish(main_tbl, audit2)
         raise RuntimeError("publish should have lost the race")
     except SnapshotConflict:
         pass
-    t0 = time.perf_counter()
-    wap_abort(str(main_tbl), audit2)
-    wap_begin(str(main_tbl), audit2)
-    _commit(batch, audit2, mode="append")
-    snapshot_delete(
-        spark, audit2, [("o_orderkey", "<", okey_max // 64)],
-        dv_threshold=1.0,
-    )
-    v_retry = wap_publish(str(main_tbl), audit2)
-    retry_s = round(time.perf_counter() - t0, 3)
+    with stopwatch() as retry:
+        wap_abort(main_tbl, audit2)
+        wap_begin(main_tbl, audit2)
+        stage(audit2)
+        v_retry = wap_publish(main_tbl, audit2)
 
     batch.unpersist()
     shutil.rmtree(main_tbl, ignore_errors=True)
@@ -1289,378 +917,214 @@ def run_one_wap(n: int) -> dict:
         "table_files": n_files,
         "batch_rows": batch_rows,
         "audit_dv_files_masked": del_res.get("files_masked", 0),
-        "begin_seconds": begin_s,
-        "publish_seconds": publish_s,
+        "begin_seconds": begin.s,
+        "publish_seconds": publish.s,
         "published_version": v,
         "published_rows": published_rows,
-        "lost_race_retry_seconds": retry_s,
+        "lost_race_retry_seconds": retry.s,
         "retry_published_version": v_retry,
     }
 
 
-def main_wap() -> None:
-    runs = []
-    for n in SCALES:
-        print(f"=== wap scale x{n} ===", flush=True)
-        out = subprocess.run(
-            [sys.executable, __file__, "--one-wap", str(n)],
-            capture_output=True, text=True, check=True,
-        )
-        line = [
-            l for l in out.stdout.splitlines() if l.startswith("RESULT ")
-        ][-1]
-        runs.append(json.loads(line[len("RESULT "):]))
-        print(runs[-1], flush=True)
-    rec = {
-        "method": (
-            "per scale: wap_begin (tag + zero-copy clone manifest) on "
-            "an Nx range-clustered orders snapshot, a fixed 1x batch "
-            "appended to the audit (untimed) plus an audit DV delete "
-            "on an inherited file (the sidecar-move publish case), "
-            "then wap_publish (staging-dir renames + one metadata "
-            "commit) timed; both phases must stay flat — no table "
-            "bytes move at any scale. lost_race_retry_seconds prices "
-            "the OCC retry: a second audit (same batch + DV delete) "
-            "loses its publish to a concurrent main append, then the "
-            "timed recovery = abort + re-begin + full replay + "
-            "publish — the per-lost-race cost is the replayed batch, "
-            "never the table"
-        ),
-        "runs": runs,
-        "begin_seconds_exponent": _fit_exponent(
-            [(r["scale"], r["begin_seconds"]) for r in runs]
-        ),
-        "publish_seconds_exponent": _fit_exponent(
-            [(r["scale"], r["publish_seconds"]) for r in runs]
-        ),
-        "lost_race_retry_seconds_exponent": _fit_exponent(
-            [(r["scale"], r["lost_race_retry_seconds"]) for r in runs]
-        ),
-    }
-    path = Path(__file__).resolve().parent.parent / "SCALE_TRAINOPS.json"
-    data = json.loads(path.read_text())
-    data["wap_publish"] = rec
-    path.write_text(json.dumps(data, indent=1))
-    print(json.dumps(rec, indent=1))
+WORKERS = {
+    "--one": run_one,
+    "--one-dv": run_one_dv,
+    "--one-eq": run_one_eq,
+    "--one-masks": run_one_masks,
+    "--one-stream-eq": run_one_stream_eq,
+    "--one-wap": run_one_wap,
+    "--one-span": run_one_span,
+    "--one-semdedup": run_one_semdedup,
+    "--one-containment": run_one_containment,
+}
 
-
-def main_span() -> None:
-    runs = []
-    for n in SCALES:
-        print(f"=== span scale x{n} ===", flush=True)
-        out = subprocess.run(
-            [sys.executable, __file__, "--one-span", str(n)],
-            capture_output=True, text=True, check=True,
-        )
-        line = [
-            l for l in out.stdout.splitlines() if l.startswith("RESULT ")
-        ][-1]
-        runs.append(json.loads(line[len("RESULT "):]))
-        print(runs[-1], flush=True)
-    rec = {
-        "method": (
-            "a fixed 1x crawl batch (half duplicate spans, half fresh) "
-            "span-dedups against the Nx corpus's persisted 8-byte "
-            "span-hash index via span_dedup_incremental (batch cost ∝ "
-            "batch + index hashes, never corpus text); separately, "
-            "full-corpus span_dedup timed with hash-keyed vs "
-            "string-keyed election on identical input, kept_spans "
-            "asserted equal (collision check)"
+LADDERS = {
+    "": Ladder(
+        "--one",
+        "fixed_batch_merge",
+        "fixed CDC batch (2k range-spread updates + 500 inserts) "
+        "merged into an Nx range-clustered snapshot orders table "
+        "via a zero-copy clone per run; manifest min/max+bloom "
+        "pruning keeps files_rewritten ~constant while "
+        "files_carried grows with N; the insert-only batch proves "
+        "the no-match append-shaped fast path (no join, no data "
+        "read)",
+        (
+            ("update_merge_exponent", "update_merge.seconds"),
+            ("insert_only_exponent", "insert_only_merge.seconds"),
         ),
-        "runs": runs,
-        "fixed_batch_seconds_exponent": _fit_exponent(
-            [(r["scale"], r["fixed_batch"]["seconds"]) for r in runs]
+    ),
+    "--dv": Ladder(
+        "--one-dv",
+        "fixed_batch_merge_dv",
+        "same fixed CDC batch (2k updates + 500 inserts) merged "
+        "into an Nx orders table held at a FIXED 8-file layout "
+        "(files N× wider), via a zero-copy clone per run; "
+        "rewrite-mode bytes re-encode every matched file and grow "
+        "with file width, dv-mode bytes (staged rows + position "
+        "sidecar) track the matched rows and stay ~flat — "
+        "bytes_written ∝ matched rows, not matched files",
+        (
+            ("rewrite_bytes_exponent", "rewrite_mode.bytes_written"),
+            ("dv_bytes_exponent", "dv_mode.bytes_written"),
+            ("dv_seconds_exponent", "dv_mode.seconds"),
         ),
-        "full_hash_seconds_exponent": _fit_exponent(
-            [
-                (r["scale"], r["full_corpus"]["hash_keyed_seconds"])
-                for r in runs
-            ]
+    ),
+    "--eq": Ladder(
+        "--one-eq",
+        "fixed_batch_eq_upsert",
+        "same fixed CDC batch (2k updates + 500 inserts) committed "
+        "via snapshot_eq_upsert into the Nx wide-file (8-file) "
+        "orders table through a zero-copy clone per run; the "
+        "writer appends the batch plus a key-tuple equality-delete "
+        "sidecar and never reads, probes, or rewrites a target "
+        "file, so commit seconds and bytes_written are flat in "
+        "table size AND file width; the deferred rent is the "
+        "masked full scan (one broadcast anti-join) until "
+        "compact_snapshot folds the masks",
+        (
+            ("eq_seconds_exponent", "eq_upsert.seconds"),
+            ("eq_bytes_exponent", "eq_upsert.bytes_written"),
+            ("masked_read_exponent", "masked_read_seconds"),
         ),
-        "full_string_seconds_exponent": _fit_exponent(
-            [
-                (r["scale"], r["full_corpus"]["string_keyed_seconds"])
-                for r in runs
-            ]
+    ),
+    "--masks": Ladder(
+        "--one-masks",
+        "mask_scoped_fold",
+        "a FIXED key-range sliver of the Nx range-clustered orders "
+        "table is DV-masked sub-threshold (masks confined to a "
+        "~constant file set as the table grows), then "
+        "compact_snapshot_masks (rewrite only mask-bearing files, "
+        "carry clean files by reference) is timed against "
+        "compact_snapshot(force=True) (the whole-table fold) on "
+        "identical clones; scoped fold seconds/bytes are priced at "
+        "the masked data, the full rewrite at the table",
+        (
+            ("scoped_seconds_exponent", "scoped_fold.seconds"),
+            ("scoped_bytes_exponent", "scoped_fold.bytes_written"),
+            ("full_rewrite_seconds_exponent", "full_rewrite_fold.seconds"),
+            ("eq_region_seconds_exponent", "eq_region_fold.seconds"),
         ),
-    }
-    path = Path(__file__).resolve().parent.parent / "SCALE_TRAINOPS.json"
-    data = json.loads(path.read_text())
-    data["fixed_batch_span_dedup"] = rec
-    path.write_text(json.dumps(data, indent=1))
-    print(json.dumps(rec, indent=1))
-
-
-def main_stream_eq() -> None:
-    runs = []
-    for n in SCALES:
-        print(f"=== stream-eq scale x{n} ===", flush=True)
-        out = subprocess.run(
-            [sys.executable, __file__, "--one-stream-eq", str(n)],
-            capture_output=True, text=True, check=True,
-        )
-        line = [
-            l for l in out.stdout.splitlines() if l.startswith("RESULT ")
-        ][-1]
-        runs.append(json.loads(line[len("RESULT "):]))
-        print(runs[-1], flush=True)
-    rec = {
-        "method": (
-            "the fixed CDC batch (2k updates + 500 inserts) split into "
-            "8 micro-batch files and drained through "
-            "stream_upsert_snapshot(eq_mode=True) with "
-            "maxFilesPerTrigger=1 against a zero-copy clone of the Nx "
-            "wide-file orders table — 8 real snapshot_eq_upsert "
-            "commits through the streaming sink loop (planning, "
-            "checkpoint, replay-dedup note, OCC); commit seconds per "
-            "micro-batch should be flat in table size; the deferred "
-            "reader rent (masked scan) and the mask-scoped fold that "
-            "cures it are recorded after the drain"
+    ),
+    "--stream-eq": Ladder(
+        "--one-stream-eq",
+        "stream_eq_cdc",
+        "the fixed CDC batch (2k updates + 500 inserts) split into "
+        "8 micro-batch files and drained through "
+        "stream_upsert_snapshot(eq_mode=True) with "
+        "maxFilesPerTrigger=1 against a zero-copy clone of the Nx "
+        "wide-file orders table — 8 real snapshot_eq_upsert "
+        "commits through the streaming sink loop (planning, "
+        "checkpoint, replay-dedup note, OCC); commit seconds per "
+        "micro-batch should be flat in table size; the deferred "
+        "reader rent (masked scan) and the mask-scoped fold that "
+        "cures it are recorded after the drain",
+        (
+            ("commit_seconds_exponent", "commit_seconds_per_batch"),
+            ("masked_read_exponent", "masked_read_seconds"),
+            ("fold_seconds_exponent", "fold_seconds"),
         ),
-        "runs": runs,
-        "commit_seconds_exponent": _fit_exponent(
-            [(r["scale"], r["commit_seconds_per_batch"]) for r in runs]
+    ),
+    "--wap": Ladder(
+        "--one-wap",
+        "wap_publish",
+        "per scale: wap_begin (tag + zero-copy clone manifest) on "
+        "an Nx range-clustered orders snapshot, a fixed 1x batch "
+        "appended to the audit (untimed) plus an audit DV delete "
+        "on an inherited file (the sidecar-move publish case), "
+        "then wap_publish (staging-dir renames + one metadata "
+        "commit) timed; both phases must stay flat — no table "
+        "bytes move at any scale. lost_race_retry_seconds prices "
+        "the OCC retry: a second audit (same batch + DV delete) "
+        "loses its publish to a concurrent main append, then the "
+        "timed recovery = abort + re-begin + full replay + "
+        "publish — the per-lost-race cost is the replayed batch, "
+        "never the table",
+        (
+            ("begin_seconds_exponent", "begin_seconds"),
+            ("publish_seconds_exponent", "publish_seconds"),
+            ("lost_race_retry_seconds_exponent", "lost_race_retry_seconds"),
         ),
-        "masked_read_exponent": _fit_exponent(
-            [(r["scale"], r["masked_read_seconds"]) for r in runs]
+    ),
+    "--span": Ladder(
+        "--one-span",
+        "fixed_batch_span_dedup",
+        "a fixed 1x crawl batch (half duplicate spans, half fresh) "
+        "span-dedups against the Nx corpus's persisted 8-byte "
+        "span-hash index via span_dedup_incremental (batch cost ∝ "
+        "batch + index hashes, never corpus text); separately, "
+        "full-corpus span_dedup timed with hash-keyed vs "
+        "string-keyed election on identical input, kept_spans "
+        "asserted equal (collision check)",
+        (
+            ("fixed_batch_seconds_exponent", "fixed_batch.seconds"),
+            ("full_hash_seconds_exponent", "full_corpus.hash_keyed_seconds"),
+            (
+                "full_string_seconds_exponent",
+                "full_corpus.string_keyed_seconds",
+            ),
         ),
-        "fold_seconds_exponent": _fit_exponent(
-            [(r["scale"], r["fold_seconds"]) for r in runs]
+    ),
+    "--semdedup": Ladder(
+        "--one-semdedup",
+        "fixed_corpus_semdedup",
+        "testdata embeddings replicated Nx with deterministic "
+        "±0.25/dim jitter (replica cosine ~0.65 — never pairs at "
+        "tau 0.95) plus one planted x2-scaled duplicate per base "
+        "vector (a fixed count at every scale); semantic_dedup "
+        "timed under three centroid policies: fixed k (linear "
+        "assignment, N²/k pair join), balanced k ∝ √N (both "
+        "terms N^1.5), and the published SemDeDup operating point "
+        "k ∝ N (per-cell size constant — pinned at the 1× "
+        "corpus's N/16 ≈ 250 vectors/cell — pair join LINEAR, "
+        "per-run assignment quadratic in N; semantic_dedup_ivf "
+        "reuses the IVF index's stored cells and pays only the "
+        "linear join, which is how the k ∝ N point deploys at "
+        "100 TB — measured as the ivf_reuse rung: a real "
+        "ivf_index_init at n_cells = 16·N persists the assignment "
+        "(index_build_seconds, the amortized cost, recorded not "
+        "hidden) and semantic_dedup_ivf is timed electing over "
+        "the STORED cells). pair_volume = Σ c(c−1) over assigned "
+        "cells — "
+        "the within-cell join's candidate space; doomed must "
+        "equal the planted duplicates exactly at every scale and "
+        "policy (raises otherwise)",
+        tuple(
+            (f"{policy}_{metric}_exponent", f"{policy}.{metric}")
+            for policy in ("fixed_k", "sqrt_k", "prop_k", "ivf_reuse")
+            for metric in ("seconds", "pair_volume")
         ),
-    }
-    path = Path(__file__).resolve().parent.parent / "SCALE_TRAINOPS.json"
-    data = json.loads(path.read_text())
-    data["stream_eq_cdc"] = rec
-    path.write_text(json.dumps(data, indent=1))
-    print(json.dumps(rec, indent=1))
-
-
-def main_masks() -> None:
-    runs = []
-    for n in SCALES:
-        print(f"=== mask-fold scale x{n} ===", flush=True)
-        out = subprocess.run(
-            [sys.executable, __file__, "--one-masks", str(n)],
-            capture_output=True, text=True, check=True,
-        )
-        line = [
-            l for l in out.stdout.splitlines() if l.startswith("RESULT ")
-        ][-1]
-        runs.append(json.loads(line[len("RESULT "):]))
-        print(runs[-1], flush=True)
-    rec = {
-        "method": (
-            "a FIXED key-range sliver of the Nx range-clustered orders "
-            "table is DV-masked sub-threshold (masks confined to a "
-            "~constant file set as the table grows), then "
-            "compact_snapshot_masks (rewrite only mask-bearing files, "
-            "carry clean files by reference) is timed against "
-            "compact_snapshot(force=True) (the whole-table fold) on "
-            "identical clones; scoped fold seconds/bytes are priced at "
-            "the masked data, the full rewrite at the table"
+    ),
+    # run one doubling past the other batch families' 64x: the postings
+    # shuffle is widest here, so 128x is where a super-linear term
+    # would show
+    "--containment": Ladder(
+        "--one-containment",
+        "fixed_batch_containment",
+        "a fixed 1x crawl batch (half verbatim duplicates of "
+        "replica-0 docs, half fresh vocabulary) probes the Nx "
+        "corpus's persisted containment prefix+postings index via "
+        "contained_pairs_incremental (group-suffixed words — "
+        "vocab x(replicas*50) — so per-word df is the realistic "
+        "topic-clustered ~group-size, not the 31-word boilerplate "
+        "testdata profile); candidate volume and probe seconds "
+        "recorded per scale, plus the max_posting_size=40 capped "
+        "index where the boilerplate-heavy words leave the "
+        "candidate join but their postings still count toward "
+        "intersections",
+        (
+            ("seconds_exponent", "fixed_batch.seconds"),
+            ("candidates_exponent", "fixed_batch.candidates"),
+            ("capped_seconds_exponent", "fixed_batch_capped.seconds"),
+            ("capped_candidates_exponent", "fixed_batch_capped.candidates"),
         ),
-        "runs": runs,
-        "scoped_seconds_exponent": _fit_exponent(
-            [(r["scale"], r["scoped_fold"]["seconds"]) for r in runs]
-        ),
-        "scoped_bytes_exponent": _fit_exponent(
-            [(r["scale"], r["scoped_fold"]["bytes_written"]) for r in runs]
-        ),
-        "full_rewrite_seconds_exponent": _fit_exponent(
-            [(r["scale"], r["full_rewrite_fold"]["seconds"]) for r in runs]
-        ),
-        "eq_region_seconds_exponent": _fit_exponent(
-            [(r["scale"], r["eq_region_fold"]["seconds"]) for r in runs]
-        ),
-    }
-    path = Path(__file__).resolve().parent.parent / "SCALE_TRAINOPS.json"
-    data = json.loads(path.read_text())
-    data["mask_scoped_fold"] = rec
-    path.write_text(json.dumps(data, indent=1))
-    print(json.dumps(rec, indent=1))
-
-
-def main_eq() -> None:
-    runs = []
-    for n in SCALES:
-        print(f"=== eq scale x{n} ===", flush=True)
-        out = subprocess.run(
-            [sys.executable, __file__, "--one-eq", str(n)],
-            capture_output=True, text=True, check=True,
-        )
-        line = [
-            l for l in out.stdout.splitlines() if l.startswith("RESULT ")
-        ][-1]
-        runs.append(json.loads(line[len("RESULT "):]))
-        print(runs[-1], flush=True)
-    rec = {
-        "method": (
-            "same fixed CDC batch (2k updates + 500 inserts) committed "
-            "via snapshot_eq_upsert into the Nx wide-file (8-file) "
-            "orders table through a zero-copy clone per run; the "
-            "writer appends the batch plus a key-tuple equality-delete "
-            "sidecar and never reads, probes, or rewrites a target "
-            "file, so commit seconds and bytes_written are flat in "
-            "table size AND file width; the deferred rent is the "
-            "masked full scan (one broadcast anti-join) until "
-            "compact_snapshot folds the masks"
-        ),
-        "runs": runs,
-        "eq_seconds_exponent": _fit_exponent(
-            [(r["scale"], r["eq_upsert"]["seconds"]) for r in runs]
-        ),
-        "eq_bytes_exponent": _fit_exponent(
-            [(r["scale"], r["eq_upsert"]["bytes_written"]) for r in runs]
-        ),
-        "masked_read_exponent": _fit_exponent(
-            [(r["scale"], r["masked_read_seconds"]) for r in runs]
-        ),
-    }
-    path = Path(__file__).resolve().parent.parent / "SCALE_TRAINOPS.json"
-    data = json.loads(path.read_text())
-    data["fixed_batch_eq_upsert"] = rec
-    path.write_text(json.dumps(data, indent=1))
-    print(json.dumps(rec, indent=1))
-
-
-def main_dv() -> None:
-    runs = []
-    for n in SCALES:
-        print(f"=== dv scale x{n} ===", flush=True)
-        out = subprocess.run(
-            [sys.executable, __file__, "--one-dv", str(n)],
-            capture_output=True, text=True, check=True,
-        )
-        line = [
-            l for l in out.stdout.splitlines() if l.startswith("RESULT ")
-        ][-1]
-        runs.append(json.loads(line[len("RESULT "):]))
-        print(runs[-1], flush=True)
-    rec = {
-        "method": (
-            "same fixed CDC batch (2k updates + 500 inserts) merged "
-            "into an Nx orders table held at a FIXED 8-file layout "
-            "(files N× wider), via a zero-copy clone per run; "
-            "rewrite-mode bytes re-encode every matched file and grow "
-            "with file width, dv-mode bytes (staged rows + position "
-            "sidecar) track the matched rows and stay ~flat — "
-            "bytes_written ∝ matched rows, not matched files"
-        ),
-        "runs": runs,
-        "rewrite_bytes_exponent": _fit_exponent(
-            [(r["scale"], r["rewrite_mode"]["bytes_written"]) for r in runs]
-        ),
-        "dv_bytes_exponent": _fit_exponent(
-            [(r["scale"], r["dv_mode"]["bytes_written"]) for r in runs]
-        ),
-        "dv_seconds_exponent": _fit_exponent(
-            [(r["scale"], r["dv_mode"]["seconds"]) for r in runs]
-        ),
-    }
-    path = Path(__file__).resolve().parent.parent / "SCALE_TRAINOPS.json"
-    data = json.loads(path.read_text())
-    data["fixed_batch_merge_dv"] = rec
-    path.write_text(json.dumps(data, indent=1))
-    print(json.dumps(rec, indent=1))
-
-
-def _fit_exponent(points: list[tuple[int, float]]) -> float:
-    xs = [math.log(p[0]) for p in points]
-    ys = [math.log(max(p[1], 1e-6)) for p in points]
-    mx, my = sum(xs) / len(xs), sum(ys) / len(ys)
-    denom = sum((x - mx) ** 2 for x in xs) or 1.0
-    return round(sum((x - mx) * (y - my) for x, y in zip(xs, ys)) / denom, 3)
+        scales=(1, 4, 16, 64, 128),
+    ),
+}
 
 
 def main() -> None:
-    if len(sys.argv) > 2 and sys.argv[1] == "--one":
-        print("RESULT " + json.dumps(run_one(int(sys.argv[2]))))
-        return
-    if len(sys.argv) > 2 and sys.argv[1] == "--one-dv":
-        print("RESULT " + json.dumps(run_one_dv(int(sys.argv[2]))))
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "--dv":
-        main_dv()
-        return
-    if len(sys.argv) > 2 and sys.argv[1] == "--one-eq":
-        print("RESULT " + json.dumps(run_one_eq(int(sys.argv[2]))))
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "--eq":
-        main_eq()
-        return
-    if len(sys.argv) > 2 and sys.argv[1] == "--one-masks":
-        print("RESULT " + json.dumps(run_one_masks(int(sys.argv[2]))))
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "--masks":
-        main_masks()
-        return
-    if len(sys.argv) > 2 and sys.argv[1] == "--one-stream-eq":
-        print("RESULT " + json.dumps(run_one_stream_eq(int(sys.argv[2]))))
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "--stream-eq":
-        main_stream_eq()
-        return
-    if len(sys.argv) > 2 and sys.argv[1] == "--one-wap":
-        print("RESULT " + json.dumps(run_one_wap(int(sys.argv[2]))))
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "--wap":
-        main_wap()
-        return
-    if len(sys.argv) > 2 and sys.argv[1] == "--one-span":
-        print("RESULT " + json.dumps(run_one_span(int(sys.argv[2]))))
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "--span":
-        main_span()
-        return
-    if len(sys.argv) > 2 and sys.argv[1] == "--one-semdedup":
-        print("RESULT " + json.dumps(run_one_semdedup(int(sys.argv[2]))))
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "--semdedup":
-        main_semdedup([int(a) for a in sys.argv[2:]] or None)
-        return
-    if len(sys.argv) > 2 and sys.argv[1] == "--one-containment":
-        print("RESULT " + json.dumps(run_one_containment(int(sys.argv[2]))))
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "--containment":
-        main_containment(
-            [int(a) for a in sys.argv[2:]] or None
-        )
-        return
-    runs = []
-    for n in SCALES:
-        print(f"=== scale x{n} ===", flush=True)
-        out = subprocess.run(
-            [sys.executable, __file__, "--one", str(n)],
-            capture_output=True, text=True, check=True,
-        )
-        line = [
-            l for l in out.stdout.splitlines() if l.startswith("RESULT ")
-        ][-1]
-        runs.append(json.loads(line[len("RESULT "):]))
-        print(runs[-1], flush=True)
-    rec = {
-        "method": (
-            "fixed CDC batch (2k range-spread updates + 500 inserts) "
-            "merged into an Nx range-clustered snapshot orders table "
-            "via a zero-copy clone per run; manifest min/max+bloom "
-            "pruning keeps files_rewritten ~constant while "
-            "files_carried grows with N; the insert-only batch proves "
-            "the no-match append-shaped fast path (no join, no data "
-            "read)"
-        ),
-        "runs": runs,
-        "update_merge_exponent": _fit_exponent(
-            [(r["scale"], r["update_merge"]["seconds"]) for r in runs]
-        ),
-        "insert_only_exponent": _fit_exponent(
-            [(r["scale"], r["insert_only_merge"]["seconds"]) for r in runs]
-        ),
-    }
-    path = Path(__file__).resolve().parent.parent / "SCALE_TRAINOPS.json"
-    data = json.loads(path.read_text())
-    data["fixed_batch_merge"] = rec
-    path.write_text(json.dumps(data, indent=1))
-    print(json.dumps(rec, indent=1))
+    dispatch(__file__, WORKERS, LADDERS)
 
 
 if __name__ == "__main__":

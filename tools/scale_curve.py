@@ -17,34 +17,48 @@ Methodology
   the reference's weighted producers
   (``Assets/Jobs/user_events_producer.py:66-100``). Event queries must
   absorb the skew, not just uniform data.
-- **Fresh JVM per scale** (orchestrator spawns subprocesses), one
-  untimed warm-up pass then one timed pass — same steady-state
-  methodology as bench.py.
+- **Fresh JVM per scale** (the ladder runner in ``tools/ladder.py``
+  spawns one subprocess per scale), one untimed warm-up pass then one
+  timed pass — same steady-state methodology as bench.py.
 - **Exponent** = least-squares slope of ln(seconds) vs ln(N): 1.0 is
   linear scaling, <1 sub-linear (fixed overhead amortizing), >1 a
   scale problem.
 
+Both ladders update their keys of the record file in place and keep
+every other key (``notes``, ``skew_128``, the keyed ladders of
+``SCALE_TRAINOPS.json``, ...).
+
 Usage
 -----
     python tools/scale_curve.py                  # full run, writes SCALE_CURVE.json
-    python tools/scale_curve.py --scales 1,4,16,64
-    python tools/scale_curve.py materialize 16   # build /tmp shard dir only
+    python tools/scale_curve.py --scales=1,4,16,64
+    python tools/scale_curve.py trainops-curve   # writes SCALE_TRAINOPS.json
+    python tools/scale_curve.py trainops-curve --scales=1,4
+    python tools/scale_curve.py materialize 16   # build the shard dir only
     python tools/scale_curve.py run 16           # time bench queries at 16x
     python tools/scale_curve.py skew 64          # salted-vs-unsalted experiment
+
+The per-scale commands (``materialize``, ``materialize-docs``, ``run``,
+``trainops``, ``skew``) print one ``RESULT <json>`` line.
 """
 
 from __future__ import annotations
 
-import json
 import math
 import os
 import shutil
-import subprocess
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from tools.ladder import (  # noqa: E402
+    Ladder,
+    dispatch,
+    fit_exponent,
+    run_scales,
+    stopwatch,
+)
 
 BASE_SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 SCALE_ROOT = Path(os.environ.get("SPARK_GRAFT_SCALE_ROOT", "/tmp/group5_scale"))
@@ -142,9 +156,9 @@ def run_bench(n: int) -> dict:
     for name in HEADLINE:
         if name not in QUERIES:
             continue
-        start = time.perf_counter()
-        QUERIES[name](spark, sf_dir).count()
-        timings[name] = round(time.perf_counter() - start, 3)
+        with stopwatch() as t:
+            QUERIES[name](spark, sf_dir).count()
+        timings[name] = t.s
     spark.stop()
     return {"scale": n, "queries": timings, "total": round(sum(timings.values()), 3)}
 
@@ -175,9 +189,9 @@ def run_skew(n: int) -> dict:
     )
 
     def timed(label, df, results):
-        start = time.perf_counter()
-        df.count()
-        results[label] = round(time.perf_counter() - start, 3)
+        with stopwatch() as t:
+            df.count()
+        results[label] = t.s
 
     results: dict[str, float] = {}
     # -------- aggregation: two-phase partials vs explicit salting ----
@@ -390,123 +404,63 @@ def run_trainops(n: int) -> dict:
         build(name).count()
     timings: dict[str, float] = {}
     for name in TRAINOPS:
-        start = time.perf_counter()
-        build(name).count()
-        timings[name] = round(time.perf_counter() - start, 3)
+        with stopwatch() as t:
+            build(name).count()
+        timings[name] = t.s
     spark.stop()
     return {"scale": n, "queries": timings, "total": round(sum(timings.values()), 3)}
 
 
-def orchestrate_trainops(scales: list[int]) -> None:
-    """materialize_docs + run_trainops per scale in fresh subprocesses;
-    write SCALE_TRAINOPS.json with fitted exponents."""
-    results = []
-    for n in scales:
-        print(f"== materialize docs x{n}", file=sys.stderr)
-        subprocess.run(
-            [sys.executable, __file__, "materialize-docs", str(n)], check=True
-        )
-        print(f"== trainops x{n}", file=sys.stderr)
-        out = subprocess.run(
-            [sys.executable, __file__, "trainops", str(n)],
-            check=True, capture_output=True, text=True,
-        )
-        results.append(json.loads(out.stdout.strip().splitlines()[-1]))
-    exponents = {
-        q: round(
-            _fit_exponent([(r["scale"], r["queries"][q]) for r in results]), 3
-        )
-        for q in results[0]["queries"]
-    }
-    summary = {
+def _summary(runs: list[dict], scales: list[int]) -> dict:
+    """A query-set ladder's top-level record keys: the per-scale
+    timings and each query's fitted exponent."""
+    return {
         "base_sf_dir": BASE_SF,
         "scales": scales,
-        "per_scale": results,
-        "exponents": exponents,
+        "per_scale": runs,
+        "exponents": {
+            q: fit_exponent(
+                [(r["scale"], r["queries"][q]) for r in runs if q in r["queries"]]
+            )
+            for q in runs[0]["queries"]
+        },
     }
-    out_path = Path(__file__).resolve().parent.parent / "SCALE_TRAINOPS.json"
-    out_path.write_text(json.dumps(summary, indent=1))
-    print(json.dumps({"written": str(out_path), "exponents": exponents}))
 
 
-def _fit_exponent(points: list[tuple[int, float]]) -> float:
-    """Least-squares slope of ln(t) on ln(N)."""
-    xs = [math.log(n) for n, _ in points]
-    ys = [math.log(max(t, 1e-4)) for _, t in points]
-    mx, my = sum(xs) / len(xs), sum(ys) / len(ys)
-    denom = sum((x - mx) ** 2 for x in xs)
-    if denom == 0:
-        return 0.0
-    return sum((x - mx) * (y - my) for x, y in zip(xs, ys)) / denom
+def _curve_summary(runs: list[dict], scales: list[int]) -> dict:
+    """The bench-query ladder's record: :func:`_summary` plus the skew
+    experiment, run at the largest scale."""
+    skew = run_scales(__file__, "skew", scales[-1:])[0]
+    return {**_summary(runs, scales), "skew": skew}
 
 
-def orchestrate(scales: list[int]) -> None:
-    """Run materialize + bench per scale in fresh subprocesses, then
-    the skew experiment at the largest scale; write SCALE_CURVE.json."""
-    results = []
-    for n in scales:
-        print(f"== materialize x{n}", file=sys.stderr)
-        subprocess.run(
-            [sys.executable, __file__, "materialize", str(n)], check=True
-        )
-        print(f"== run x{n}", file=sys.stderr)
-        out = subprocess.run(
-            [sys.executable, __file__, "run", str(n)],
-            check=True,
-            capture_output=True,
-            text=True,
-        )
-        results.append(json.loads(out.stdout.strip().splitlines()[-1]))
-    print(f"== skew x{scales[-1]}", file=sys.stderr)
-    out = subprocess.run(
-        [sys.executable, __file__, "skew", str(scales[-1])],
-        check=True,
-        capture_output=True,
-        text=True,
-    )
-    skew = json.loads(out.stdout.strip().splitlines()[-1])
+WORKERS = {
+    "materialize": lambda n: str(materialize(n)),
+    "materialize-docs": lambda n: str(materialize_docs(n)),
+    "run": run_bench,
+    "trainops": run_trainops,
+    "skew": run_skew,
+}
 
-    names = list(results[0]["queries"])
-    exponents = {}
-    for q in names:
-        pts = [(r["scale"], r["queries"][q]) for r in results if q in r["queries"]]
-        exponents[q] = round(_fit_exponent(pts), 3)
-    summary = {
-        "base_sf_dir": BASE_SF,
-        "scales": scales,
-        "per_scale": results,
-        "exponents": exponents,
-        "skew": skew,
-    }
-    out_path = Path(__file__).resolve().parent.parent / "SCALE_CURVE.json"
-    out_path.write_text(json.dumps(summary, indent=1))
-    print(json.dumps({"written": str(out_path), "exponents": exponents}))
+LADDERS = {
+    "": Ladder(
+        "run", prep="materialize", file="SCALE_CURVE.json",
+        summary=_curve_summary,
+    ),
+    "trainops-curve": Ladder(
+        "trainops", prep="materialize-docs", summary=_summary
+    ),
+}
 
 
 def main() -> None:
-    args = sys.argv[1:]
-    if args and args[0] == "materialize":
-        print(str(materialize(int(args[1]))))
-    elif args and args[0] == "materialize-docs":
-        print(str(materialize_docs(int(args[1]))))
-    elif args and args[0] == "run":
-        print(json.dumps(run_bench(int(args[1]))))
-    elif args and args[0] == "trainops":
-        print(json.dumps(run_trainops(int(args[1]))))
-    elif args and args[0] == "skew":
-        print(json.dumps(run_skew(int(args[1]))))
-    elif args and args[0] == "trainops-curve":
-        scales = [1, 4, 16, 64]
-        for a in args[1:]:
-            if a.startswith("--scales"):
-                scales = [int(x) for x in a.split("=", 1)[1].split(",")]
-        orchestrate_trainops(scales)
-    else:
-        scales = [1, 4, 16, 64]
-        for a in args:
-            if a.startswith("--scales"):
-                scales = [int(x) for x in a.split("=", 1)[1].split(",")]
-        orchestrate(scales)
+    # this tool spells its scale list `--scales=1,4,16`
+    args = [
+        s
+        for a in sys.argv[1:]
+        for s in (a.split("=", 1)[1].split(",") if a.startswith("--scales") else [a])
+    ]
+    dispatch(__file__, WORKERS, LADDERS, args)
 
 
 if __name__ == "__main__":
