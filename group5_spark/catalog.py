@@ -53,22 +53,22 @@ def _path_token(path: str) -> tuple:
     """Change token for a cached handle: (inode, mtime_ns, size).
 
     st_ino catches replace-by-rename (cp/mv a new file over the path
-    preserving mtime+size); for a DIRECTORY-shaped dataset (a
-    Spark-written table of part-files) the token also folds in the
-    direct children's stats, so an in-place part-file rewrite that
-    keeps the dir's own mtime is still detected.
+    preserving mtime+size); for a FLAT directory dataset (a
+    Spark-written table whose part-files are direct children) the
+    token also folds in the direct children's stats, so an in-place
+    part-file rewrite that keeps the dir's own mtime is still
+    detected. Files nested deeper (e.g. Hive partition dirs) are not
+    stat-ed: only a change to a direct child is seen.
     """
     st = os.stat(path)
     token: tuple = (st.st_ino, st.st_mtime_ns, st.st_size)
     if os.path.isdir(path):
+        kids = []
         with os.scandir(path) as entries:
-            kids = tuple(
-                sorted(
-                    (e.name, e.stat().st_ino, e.stat().st_mtime_ns, e.stat().st_size)
-                    for e in entries
-                )
-            )
-        token = token + (kids,)
+            for e in entries:
+                kst = e.stat()
+                kids.append((e.name, kst.st_ino, kst.st_mtime_ns, kst.st_size))
+        token = token + (tuple(sorted(kids)),)
     return token
 
 

@@ -44,6 +44,14 @@ __all__ = ["table_file_stats", "compact", "compact_snapshot", "snapshot_delete",
 #: (see :func:`_dml_commit`)
 _MARKERS = ("_file", "_pos", "_mask", "_emit")
 
+#: the action a DML row took, by its ``(_mask, _emit)`` markers
+_ACTIONS = {
+    (False, True): "insert",
+    (True, True): "update",
+    (True, False): "delete",
+    (False, False): "keep",
+}
+
 _OPS = {
     "=": operator.eq, "<": operator.lt, "<=": operator.le,
     ">": operator.gt, ">=": operator.ge,
@@ -103,6 +111,9 @@ def _staged(path: str, version: int, carried: list[dict]) -> list[dict]:
     ]
 
 
+DEFAULT_TARGET_BYTES = 128 * 1024 * 1024
+
+
 def _emit_all(df):
     """A :func:`_dml_commit` frame that writes every row of ``df`` and
     masks nothing (a compaction rewrite, or merge's insert-only batch)."""
@@ -126,6 +137,8 @@ def _dml_commit(
     stats_cols: list[str] | None = None,
     bloom_cols: list[str] | None = None,
     carry_kmv: bool = False,
+    target_bytes: int | None = DEFAULT_TARGET_BYTES,
+    extra_rows: int = 0,
 ) -> dict:
     """The commit core under every snapshot DML and compaction: turn a
     marked ``frame`` over the ``touched`` entries into one commit that
@@ -136,16 +149,15 @@ def _dml_commit(
     FINAL value) plus two markers:
 
     - ``_mask`` — the row's origin must stop being visible (the row
-      was deleted, replaced by an emitted update, or is a source row
-      the operation drops);
+      was deleted, or replaced by an emitted update);
     - ``_emit`` — the row's final value must be WRITTEN (inserts,
       updated rows). A row can be both (update: mask old position,
       emit new value), either, or neither (keep).
 
     Copy-on-write (``dv_threshold=None``, or nothing touched — an
     append-shaped commit): every touched file is rewritten; the staged
-    rows are ``_emit | ~_mask``. One write job, no mask counting, and
-    the frame needs no lineage columns.
+    rows are ``_emit | ~_mask``. One write job, and the frame needs no
+    lineage columns.
 
     Merge-on-read (``dv_threshold`` set): the frame also carries
     ``_file``/``_pos``, the row's physical origin (NULL for rows with
@@ -162,12 +174,32 @@ def _dml_commit(
     positions are disjoint because the read half already masked the
     old ones.
 
+    Output size: with ``target_bytes`` set (every DML; a compaction
+    passes None because it arranged its own output) and something
+    touched, the staged rows are coalesced — on the write side only,
+    never a new shuffle — to ``max(1, ceil(bytes / target_bytes))``
+    files, where ``bytes`` is the manifest size of the rewritten
+    entries plus, at their mean row width, the masked rows of
+    deletion-vector files and the ``extra_rows`` the frame may emit
+    beyond the touched files (a merge's source rows). A one-file
+    touch writes one file, not one per shuffle partition, so the next
+    batch touches one file again.
+
+    Row counts add no job: ``counts`` = ``{insert: _emit & ~_mask,
+    update: _emit & _mask, delete: _mask & ~_emit, keep: neither}``
+    come, copy-on-write, from one ``DataFrame.observe`` on the frame
+    the write consumes, read only after the commit returns (a
+    :class:`SnapshotConflict` attempt never waits on it), and,
+    merge-on-read, from the per-file mask-count job (an observation
+    does not reliably report through a persisted plan).
+
     A :class:`SnapshotConflict` reclaims the fresh sidecar and
     propagates to :func:`_retry_on_conflict`, which re-runs the whole
     read-resolve-commit. Returns ``{version, files_rewritten,
-    files_carried}``, plus ``{files_masked, rows_masked,
-    rows_matched}`` for a merge-on-read commit.
+    files_carried, counts}``, plus ``{files_masked, rows_masked}`` for
+    a merge-on-read commit.
     """
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     from group5_spark.medallion import snapshots as snap
@@ -180,22 +212,32 @@ def _dml_commit(
     by_path = {e["path"]: e for e in touched}
     mask_counts: dict[str, int] = {}
     rewrite, dv_mask, untouched = list(by_path), [], []
-    keep = ~F.col("_mask")
+    mask, emit = F.col("_mask"), F.col("_emit")
+    keep = ~mask
     dv_dir: str | None = None
     new_dv_entries: list[dict] = []
+    observed = Observation()
+    counts = dict.fromkeys(_ACTIONS.values(), 0)
     if mor:
         frame = frame.persist()
+    else:
+        frame = frame.observe(
+            observed,
+            *[
+                F.count_if(
+                    (mask if m else ~mask) & (emit if e else ~emit)
+                ).alias(action)
+                for (m, e), action in _ACTIONS.items()
+            ],
+        )
     try:
         if mor:
-            mask_counts = {
-                r["_file"]: int(r["n"])
-                for r in frame.filter(
-                    F.col("_mask") & F.col("_file").isNotNull()
-                )
-                .groupBy("_file")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
+            # one job: the per-file mask counts and the action counts
+            for r in frame.groupBy("_file", "_mask", "_emit").count().collect():
+                n = int(r["count"])
+                counts[_ACTIONS[r["_mask"], r["_emit"]]] += n
+                if r["_mask"] and r["_file"] is not None:
+                    mask_counts[r["_file"]] = mask_counts.get(r["_file"], 0) + n
             rewrite = []
             for f, n in sorted(mask_counts.items()):
                 live = snap.entry_rows(by_path[f])
@@ -210,18 +252,25 @@ def _dml_commit(
             keep = keep & (
                 F.col("_file").isin(rewrite) if rewrite else F.lit(False)
             )
-        out = frame.filter(F.col("_emit") | keep).select(*tbl_cols)
+        out = frame.filter(emit | keep).select(*tbl_cols)
         if mor and not rewrite and out.isEmpty():
             # a pure-DV commit (e.g. a small delete) stages NO bytes;
             # without this, every CDC batch would litter the table with
             # empty part files (cheap on the persisted frame)
             out = spark.createDataFrame([], out.schema)
+        elif target_bytes is not None and touched:
+            rows = sum(int(e.get("rows", 0)) for e in touched)
+            width = sum(int(e.get("bytes", 0)) for e in touched) / max(rows, 1)
+            est = width * (
+                sum(int(by_path[f].get("rows", 0)) for f in rewrite)
+                + sum(mask_counts[f] for f in dv_mask)
+                + extra_rows
+            )
+            out = out.coalesce(max(1, math.ceil(est / target_bytes)))
 
         if dv_mask:
             dv_dir = f"dv-{uuid.uuid4().hex[:8]}"
-            masks = frame.filter(
-                F.col("_mask") & F.col("_file").isin(dv_mask)
-            ).select(
+            masks = frame.filter(mask & F.col("_file").isin(dv_mask)).select(
                 F.col("_file").alias("file"), F.col("_pos").alias("pos")
             )
             prior_dv_files = [f for f in dv_mask if by_path[f].get("dv")]
@@ -274,15 +323,13 @@ def _dml_commit(
         "version": v,
         "files_rewritten": len(rewrite),
         "files_carried": len(carried) + len(untouched),
+        # read only now: a SnapshotConflict attempt never waits on it
+        "counts": counts if mor else observed.get,
     }
     if mor:
         res["files_masked"] = len(dv_mask)
         res["rows_masked"] = sum(mask_counts[f] for f in dv_mask)
-        res["rows_matched"] = sum(mask_counts.values())
     return res
-
-
-DEFAULT_TARGET_BYTES = 128 * 1024 * 1024
 
 
 class _MigrateGroupType:
@@ -473,6 +520,7 @@ def compact_snapshot(
                 **({"clustered_by": cluster_cols} if cluster_cols else {}),
             },
             carry_kmv=True,  # same logical rows, new layout
+            target_bytes=None,  # arranged above
         )
         return {
             "files_before": len(files),
@@ -699,19 +747,9 @@ def snapshot_delete(
             # NDV sketch stays a sound upper bound
             carry_kmv=True,
         )
-        # every matched (masked or rewritten-away) row is a deletion;
-        # a copy-on-write commit counts them from footers instead of a
-        # counting job: touched live rows minus the rows it staged
-        matched = out.pop("rows_matched", None)
-        out["rows_deleted"] = (
-            matched
-            if matched is not None
-            else sum(snap.entry_rows(e) for e in touched)
-            - sum(
-                int(e.get("rows", 0))
-                for e in _staged(path, out["version"], carried)
-            )
-        )
+        # every matched row is a deletion, counted on the rows the
+        # commit read (equality-deleted rows are already gone)
+        out["rows_deleted"] = out.pop("counts")["delete"]
         return out
 
     return _retry_on_conflict(attempt)
@@ -1044,8 +1082,9 @@ def snapshot_update(
             # unless a sketched column is rewritten
             carry_kmv=not (set(set_exprs) & set(head.get("kmv") or {})),
         )
-        if "rows_matched" in out:
-            out["rows_updated"] = out.pop("rows_matched")
+        counts = out.pop("counts")
+        if "rows_masked" in out:
+            out["rows_updated"] = counts["update"]
             out.pop("rows_masked")
         return out
 
@@ -1088,10 +1127,10 @@ def snapshot_merge(
     File-level economics, same as :func:`snapshot_delete`: candidate
     files are chosen from the MANIFEST — a file is touched only when
     its per-key min/max range intersects the source batch's key range
-    (and, for single-key merges with ≤ ``key_probe_limit`` distinct
-    source keys, when its Bloom filter might contain at least one of
-    them — interleaved key ranges overlap every file, but an absent
-    key is definitely absent from a bloom). Everything else carries
+    (and, for batches of ≤ ``key_probe_limit`` rows, when its stats
+    and Bloom filter might hold at least one of the batch's key tuples
+    — interleaved key ranges overlap every file, but an absent key is
+    definitely absent from a bloom). Everything else carries
     into the new version by reference, byte-untouched. A CDC batch
     touching 0.1% of a 100 TB table's keys rewrites that 0.1%, reads
     kilobytes of manifest to prove it, and never scans the rest.
@@ -1126,6 +1165,18 @@ def snapshot_merge(
     counts only rows in rewritten files (carried files' rows are
     untouched by construction).
 
+    Job budget: a copy-on-write MERGE runs at most four Spark jobs —
+    one bounded source probe (duplicate-key check, emptiness, key
+    range and bloom probe keys from one collect of at most
+    ``key_probe_limit + 1`` key tuples; only a larger batch adds an
+    aggregate), the join's two shuffle stages (touched files, source)
+    and the write, whose observed metrics give the action counts. The
+    rewrite is sized from the touched files' manifest bytes (plus the
+    source rows at the files' mean row width): ``max(1, ceil(bytes /
+    DEFAULT_TARGET_BYTES))`` files, coalesced on the write side, so a
+    one-file touch writes one file whatever the shuffle-partition
+    count.
+
     ``dv_threshold`` routes the write through the merge-on-read path
     (see :func:`_dml_commit`): sub-threshold matched files carry
     byte-untouched with a deletion-vector sidecar over the replaced
@@ -1142,7 +1193,6 @@ def snapshot_merge(
     from group5_spark.medallion import snapshots as snap
     from group5_spark.medallion.merge import (
         _normalize_matched_clauses,
-        _validate_unique_keys,
         resolve_merge_actions,
     )
 
@@ -1155,9 +1205,6 @@ def snapshot_merge(
         raise ValueError(
             f"when_not_matched must be insert|ignore, got {when_not_matched!r}"
         )
-    if validate_source_keys:
-        _validate_unique_keys(source, keys)
-
     clauses = dict(
         when_matched=when_matched,
         when_not_matched=when_not_matched,
@@ -1210,43 +1257,111 @@ def snapshot_merge(
             ]
         )
 
-    # The source probe, computed once the table exists (an absent
-    # table's merge is its initial load and needs none): ONE aggregate
-    # over the source — per-key min/max (range pruning), exact
-    # distinct-key count (bloom-probe eligibility) and row count (the
-    # genuinely-empty-batch test — key min/max alone can't tell "no
-    # rows" from "rows whose keys are all NULL", and the latter still
-    # INSERT under when_not_matched='insert'). The source is a change
-    # batch — this job is priced by the batch.
+    # The source probe: ONE bounded pass over the batch's keys — at
+    # most key_probe_limit + 1 key tuples collected through a single
+    # task, one Spark job and no shuffle. A batch of at most
+    # key_probe_limit rows comes back whole, and that one collect is
+    # the duplicate-key check, the row count (the genuinely-empty-batch
+    # test — key ranges alone can't tell "no rows" from "rows whose
+    # keys are all NULL", and the latter still INSERT under
+    # when_not_matched='insert'), the per-key range (range pruning)
+    # and the key tuples of the bloom probe. A larger batch pays one
+    # more pass, a min/max/count aggregate over its key groups, and
+    # prunes by range only. Run once the table exists, or up front
+    # when the keys must be validated (an absent table's merge is its
+    # initial load and needs no pruning).
     src: dict = {}
 
+    def _bounds(vals: list) -> tuple:
+        """A key column's (min, max) over its non-NULL values, as
+        Spark's min/max would give it: (None, None) when all are NULL;
+        a NaN bound (no range proof) when any is NaN or the values do
+        not order in Python (e.g. structs holding NULLs)."""
+        if not vals:
+            return None, None
+        try:
+            if all(v == v for v in vals):
+                return min(vals), max(vals)
+        except TypeError:
+            pass
+        return math.nan, math.nan
+
+    def _group_key(t) -> tuple:
+        """``t`` as Spark's GROUP BY compares it: NULLs equal, NaNs
+        equal, arrays, structs and binaries by value."""
+        return tuple(
+            ("NaN",) if v != v
+            else _group_key(v) if isinstance(v, (list, tuple))
+            else bytes(v) if isinstance(v, bytearray)
+            else v
+            for v in t
+        )
+
     def _probe_source() -> None:
-        aggs = []
-        for k in keys:
-            aggs += [F.min(k).alias(f"_min_{k}"), F.max(k).alias(f"_max_{k}")]
-        aggs.append(F.count_distinct(*[F.col(k) for k in keys]).alias("_ndk"))
-        aggs.append(F.count(F.lit(1)).alias("_cnt"))
-        b = source.agg(*aggs).first()
-        src["b"] = b
-        src["empty"] = int(b["_cnt"] or 0) == 0
+        rows = (
+            source.select(*keys)
+            .coalesce(1)
+            .limit(key_probe_limit + 1)
+            .collect()
+        )
+        if len(rows) <= key_probe_limit:
+            tuples = [tuple(r) for r in rows]
+            dup, seen = None, set()
+            for t in tuples:
+                g = _group_key(t)
+                if g in seen:
+                    dup = t
+                    break
+                seen.add(g)
+            n_rows = len(tuples)
+            bounds = [
+                _bounds([v for v in col if v is not None])
+                for col in list(zip(*tuples)) or [()] * len(keys)
+            ]
+            probe = [t for t in tuples if all(v is not None for v in t)]
+        else:
+            groups = source.groupBy(*keys).agg(F.count(F.lit(1)).alias("_n"))
+            aggs = [F.sum("_n").alias("_cnt"), F.max("_n").alias("_dup")]
+            for k in keys:
+                aggs += [
+                    F.min(k).alias(f"_min_{k}"),
+                    F.max(k).alias(f"_max_{k}"),
+                ]
+            b = groups.agg(*aggs).first()
+            dup = (
+                tuple(groups.filter(F.col("_n") > 1).select(*keys).first())
+                if validate_source_keys and b["_dup"] > 1
+                else None
+            )
+            n_rows = int(b["_cnt"])
+            bounds = [(b[f"_min_{k}"], b[f"_max_{k}"]) for k in keys]
+            probe = None
+        if validate_source_keys and dup is not None:
+            kv = dict(zip(keys, dup))
+            raise ValueError(f"MERGE source has duplicate key rows, e.g. {kv}")
+        src["rows"] = n_rows
+        src["empty"] = n_rows == 0
         # every key column entirely NULL ⇒ no source row can equi-match
         # any target row; the rows are pure inserts (the no-touch fast
         # path handles insert vs ignore) — but a by-source clause
         # still has to visit every file, so only short-circuit without
         # one
-        src["all_null"] = all(b[f"_min_{k}"] is None for k in keys)
+        src["all_null"] = all(lo is None for lo, _ in bounds)
+        # a NaN bound proves nothing about a file's range (Spark orders
+        # NaN above every value, footer stats leave it out): a batch
+        # holding a NaN key is pruned by its other keys' ranges only
+        nan = any(x != x for lo, hi in bounds for x in (lo, hi))
+        src["range"] = {
+            k: (lo, hi)
+            for k, (lo, hi) in zip(keys, bounds)
+            if lo is not None and lo == lo and hi == hi
+        }
         # pre-hash each probe tuple's bloom bit positions ONCE — the
-        # prune loop probes |files| × |keys| times
+        # prune loop probes |files| × |keys| times (NULL never
+        # equi-matches)
         src["probe"] = (
-            snap._key_probe(
-                keys,
-                [
-                    tuple(r)
-                    for r in source.select(*keys).distinct().collect()
-                    if all(v is not None for v in r)  # NULL never equi-matches
-                ],
-            )
-            if not src["all_null"] and int(b["_ndk"] or 0) <= key_probe_limit
+            snap._key_probe(keys, probe)
+            if probe is not None and not nan
             else None
         )
 
@@ -1254,13 +1369,11 @@ def snapshot_merge(
         if int(e.get("rows", 0)) == 0:
             return False  # an empty file (no stats either) never matches
         st = e.get("stats") or {}
-        b = src["b"]
         # range test: every key's file range must intersect the
         # source batch's [min, max] (missing stats → must read)
         if not all(
-            snap._overlaps(st, k, ">=", b[f"_min_{k}"])
-            and snap._overlaps(st, k, "<=", b[f"_max_{k}"])
-            for k in keys
+            snap._overlaps(st, k, ">=", lo) and snap._overlaps(st, k, "<=", hi)
+            for k, (lo, hi) in src["range"].items()
         ):
             return False
         # point sharpening: keep the file only if at least one source
@@ -1278,9 +1391,9 @@ def snapshot_merge(
             # a conflict, and the retry merges into what it created
             head = {"version": 0, "files": [], "partition_by": partition_by}
         version = head["version"]
-        if version and not src:
+        if (version or validate_source_keys) and not src:
             _probe_source()
-        if src.get("empty"):
+        if version and src["empty"]:
             return _zero(version)  # empty batch
         tbl_cols = source.columns
         evo_cols: list[tuple[str, str]] = []
@@ -1340,10 +1453,7 @@ def snapshot_merge(
                 note=merge_note, stats_cols=stats_cols, bloom_cols=bloom_cols,
             )
             res = _zero(out["version"])
-            res["inserted"] = sum(
-                int(e.get("rows", 0))
-                for e in _staged(path, out["version"], carried)
-            )
+            res["inserted"] = out["counts"]["insert"]
             res["files_carried"] = len(carried)
             return res
 
@@ -1354,38 +1464,34 @@ def snapshot_merge(
         )
         for c, t in evo_cols:
             target_df = target_df.withColumn(c, F.lit(None).cast(t))
-        resolved = resolve_merge_actions(
-            target_df, source, keys, **clauses,
-            passthrough_cols=["_file", "_pos"] if lineage else None,
-        ).persist()
-        try:
-            counts = {
-                r["_action"]: r["n"]
-                for r in resolved.groupBy("_action")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
-            # updated/deleted target rows mask their origin; dropped
-            # source rows (unmatched under 'ignore') are never written
-            action = F.col("_action")
-            frame = resolved.select(
-                "*",
-                action.isin("update", "delete", "drop").alias("_mask"),
-                action.isin("insert", "update").alias("_emit"),
-            ).drop("_action")
-            out = _dml_commit(
-                spark, root, head, touched, carried, frame, dv_threshold,
-                note=merge_note, stats_cols=stats_cols, bloom_cols=bloom_cols,
+        action = F.col("_action")
+        # updated/deleted target rows mask their origin; dropped source
+        # rows (unmatched under 'ignore') are never written
+        frame = (
+            resolve_merge_actions(
+                target_df, source, keys, **clauses,
+                passthrough_cols=["_file", "_pos"] if lineage else None,
             )
-        finally:
-            resolved.unpersist()
-        out.pop("rows_matched", None)
+            .filter(action != "drop")
+            .select(
+                "*",
+                action.isin("update", "delete").alias("_mask"),
+                action.isin("insert", "update").alias("_emit"),
+            )
+            .drop("_action")
+        )
+        out = _dml_commit(
+            spark, root, head, touched, carried, frame, dv_threshold,
+            note=merge_note, stats_cols=stats_cols, bloom_cols=bloom_cols,
+            extra_rows=src.get("rows", 0),
+        )
+        counts = out.pop("counts")
         return {
             "version": out.pop("version"),
-            "inserted": counts.get("insert", 0),
-            "updated": counts.get("update", 0),
-            "deleted": counts.get("delete", 0),
-            "kept": counts.get("keep", 0),
+            "inserted": counts["insert"],
+            "updated": counts["update"],
+            "deleted": counts["delete"],
+            "kept": counts["keep"],
             **out,
         }
 
@@ -1727,6 +1833,7 @@ def compact_snapshot_partitions(
                 **({"clustered_by": sorted(sort_cols)} if sort_cols else {}),
             },
             carry_kmv=True,  # layout migration: same logical rows
+            target_bytes=None,  # arranged per partition above
         )["version"]
         return {
             "version": v,
@@ -1875,6 +1982,7 @@ def compact_snapshot_masks(
             # fold applies masks: live rows unchanged, NDV of the
             # pre-fold sketch stays a sound upper bound
             carry_kmv=True,
+            target_bytes=None,  # arranged above
         )["version"]
         return {
             "version": v,

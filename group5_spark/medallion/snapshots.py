@@ -814,11 +814,15 @@ def snapshot_commit(
     # pure-DV deletes or empty micro-batches would otherwise litter
     # thousands of stub entries every reader must open. The files are
     # unlinked too (a mixed dir stays referenced by its non-empty
-    # siblings, so the sweep would never reclaim a lingering stub).
+    # siblings, so the sweep would never reclaim a lingering stub), and
+    # a dir left with no staged file at all (a pure deletion-vector
+    # commit) goes with them: no manifest will ever reference it.
     empty_staged = [e for e in staged if not e["rows"]]
     for e in empty_staged:
         (root / e["path"]).unlink(missing_ok=True)
     staged = [e for e in staged if e["rows"]]
+    if not staged:
+        shutil.rmtree(data_dir, ignore_errors=True)
 
     # Table CHECK constraints (Delta-style): inherited from the head
     # manifest, updated by this commit's ``constraints`` dict (a None

@@ -330,7 +330,16 @@ def stream_upsert_snapshot(
       converges to the same table.
 
     Within a batch, rows are deduplicated per key keeping the highest
-    sequence (a single MERGE must see one row per key). The key
+    sequence (a single MERGE must see one row per key). The
+    deduplicated batch is persisted until its commit returns, so the
+    batch's source files are scanned ONCE per micro-batch: the
+    emptiness test, the MERGE's key probe and its write all read the
+    cached rows (a batch the denylist empties commits nothing). The
+    dedup's shuffle hashes the keys into one partition per input
+    split, not per shuffle partition: a cached plan's partitioning is
+    fixed (AQE cannot coalesce it), so a small batch would otherwise
+    be cached — and re-read by every job — as hundreds of near-empty
+    partitions. The key
     columns get manifest min/max stats on every commit (inside
     ``snapshot_merge``), so each batch prunes its candidate files
     from kilobytes of metadata — the CDC batch is priced by the keys
@@ -398,48 +407,55 @@ def stream_upsert_snapshot(
         dl_key = keys[0]
 
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        batch = _apply_denylist(batch, denylist_path, dl_key)
         app = app_id or _checkpoint_query_id(checkpoint_dir)
         if app is not None:
             done = snap.last_committed_batch(table_path, app)
             if done is not None and done >= batch_id:
                 return  # this app already durably merged this batch
+        # one cached, key-partitioned copy per batch (see docstring)
+        splits = batch.rdd.getNumPartitions()
+        batch = _apply_denylist(batch, denylist_path, dl_key)
         order = (
             [F.col(sequence_col).desc()] if sequence_col else []
         ) + [F.struct(*[F.col(c) for c in batch.columns]).desc()]
         w = Window.partitionBy(*keys).orderBy(*order)
         deduped = (
-            batch.withColumn("_rn", F.row_number().over(w))
+            batch.repartition(max(1, splits), *keys)
+            .withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
             .drop("_rn")
+            .persist()
         )
-        if eq_mode:
-            snapshot_eq_upsert(
+        try:
+            if deduped.coalesce(1).isEmpty():
+                return  # nothing to apply: no commit
+            if eq_mode:
+                snapshot_eq_upsert(
+                    batch.sparkSession,
+                    table_path,
+                    deduped,
+                    keys,
+                    # batch already deduped to one row per key above
+                    note={"app_id": app, "batch_id": batch_id},
+                    schema_evolution=schema_evolution,
+                )
+                return
+            snapshot_merge(
                 batch.sparkSession,
                 table_path,
                 deduped,
                 keys,
-                # batch already deduped to one row per key above
+                sequence_col=sequence_col,
+                partition_by=partition_by,
+                stats_cols=stats_cols,
+                bloom_cols=bloom_cols,
+                validate_source_keys=False,  # dedup above guarantees it
                 note={"app_id": app, "batch_id": batch_id},
+                dv_threshold=dv_threshold,
                 schema_evolution=schema_evolution,
             )
-            return
-        snapshot_merge(
-            batch.sparkSession,
-            table_path,
-            deduped,
-            keys,
-            sequence_col=sequence_col,
-            partition_by=partition_by,
-            stats_cols=stats_cols,
-            bloom_cols=bloom_cols,
-            validate_source_keys=False,  # dedup above guarantees it
-            note={"app_id": app, "batch_id": batch_id},
-            dv_threshold=dv_threshold,
-            schema_evolution=schema_evolution,
-        )
+        finally:
+            deduped.unpersist()
 
     query = (
         df.writeStream.foreachBatch(apply_batch)

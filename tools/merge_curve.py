@@ -144,7 +144,9 @@ def _clone(tbl: Path, name: str) -> str:
 def _staged_bytes(path: str, version: int, sidecars: bool = False) -> int:
     """Bytes commit `version` staged: data files absent from its parent
     version, plus — with `sidecars` — every deletion-vector and
-    equality-delete sidecar its manifest references."""
+    equality-delete sidecar directory its manifest references, each
+    counted once (one commit's DV sidecar is shared by every file it
+    masks)."""
     from group5_spark.medallion.snapshots import snapshot_manifest
 
     m = snapshot_manifest(path, version)
@@ -152,10 +154,13 @@ def _staged_bytes(path: str, version: int, sidecars: bool = False) -> int:
     staged = sum(int(e["bytes"]) for e in m["files"] if e["path"] not in parent)
     if not sidecars:
         return staged
-    dirs = [Path(path) / e["dv"]["sidecar"] for e in m["files"] if e.get("dv")]
-    dirs += [Path(path) / d["sidecar"] for d in m.get("eq_deletes") or []]
+    dirs = {e["dv"]["sidecar"] for e in m["files"] if e.get("dv")}
+    dirs |= {d["sidecar"] for d in m.get("eq_deletes") or []}
     return staged + sum(
-        f.stat().st_size for d in dirs if d.is_dir() for f in d.rglob("*.parquet")
+        f.stat().st_size
+        for d in map(Path(path).joinpath, dirs)
+        if d.is_dir()
+        for f in d.rglob("*.parquet")
     )
 
 
