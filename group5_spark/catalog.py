@@ -89,11 +89,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # apply, and so the advisor can plan from the same manifest's
     # write-time statistics with zero extra scans (auto-discovered in
     # queries._manifest_stats; spark.group5.advisor.stats_dir overrides)
-    from pathlib import Path
+    from group5_spark.medallion.snapshots import (
+        is_snapshot_table,
+        snapshot_read,
+    )
 
-    if (Path(sf_dir) / name / "_manifests").is_dir():
-        from group5_spark.medallion.snapshots import snapshot_read
-
+    if is_snapshot_table(f"{sf_dir}/{name}"):
         return snapshot_read(spark, f"{sf_dir}/{name}")
     path = f"{sf_dir}/{name}.parquet"
     if name == "events":

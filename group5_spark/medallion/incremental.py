@@ -69,15 +69,16 @@ def replace_partitions(
     snapshot route — its commit point is a single put-if-absent
     chain-link object (see ``snapshots.py`` commit protocol notes).
     """
+    from group5_spark.medallion.snapshots import (
+        is_snapshot_table,
+        snapshot_commit,
+        snapshot_manifest,
+    )
+
     root = Path(target_path)
     if snapshot is None:
-        snapshot = (root / "_manifests").exists()
+        snapshot = is_snapshot_table(root)
     if snapshot:
-        from group5_spark.medallion.snapshots import (
-            snapshot_commit,
-            snapshot_manifest,
-        )
-
         v = snapshot_commit(
             fresh,
             target_path,

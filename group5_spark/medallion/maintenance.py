@@ -822,8 +822,6 @@ def table_health(path: str, target_file_bytes: int = DEFAULT_TARGET_BYTES) -> di
     eq_sidecars, eq_masked_keys, clustering_overlap,
     recommendations: [...]}``.
     """
-    import json as _json
-
     from group5_spark.medallion import snapshots as snap
 
     root = Path(path)
@@ -833,11 +831,8 @@ def table_health(path: str, target_file_bytes: int = DEFAULT_TARGET_BYTES) -> di
     needed = max(1, math.ceil(nbytes / target_file_bytes))
     versions = snap.snapshot_versions(path)
     chained = {v["version"] for v in versions}
-    all_slots = [
-        int(m.stem[1:])
-        for m in (root / snap._MANIFEST_DIR).glob("v*.json")
-    ]
-    orphans = sorted(set(all_slots) - chained)
+    slots = snap._slot_manifests(root)
+    orphans = sorted(set(slots) - chained)
     with_stats = sum(1 for e in files if e.get("stats"))
     recs: list[str] = []
     if len(files) > max(needed * 2, 4):
@@ -861,36 +856,12 @@ def table_health(path: str, target_file_bytes: int = DEFAULT_TARGET_BYTES) -> di
     # references — a writer died before claiming a manifest slot.
     # Invisible to readers, pure disk leak; snapshot_expire sweeps
     # them past its grace window.
-    referenced = {
-        ld
-        for e in files
-        if (ld := snap._root_local_dir(root, e["path"])) is not None
-    }
-    for v in all_slots:
-        try:
-            vm = _json.loads(snap._manifest_path(root, v).read_text())
-        except (OSError, ValueError):
-            continue
-        for e in vm.get("files", []):
-            if (ld := snap._root_local_dir(root, e["path"])) is not None:
-                referenced.add(ld)
-            if e.get("dv"):
-                if (
-                    ld := snap._root_local_dir(root, e["dv"]["sidecar"])
-                ) is not None:
-                    referenced.add(ld)
-        for d in vm.get("eq_deletes") or []:
-            if (ld := snap._root_local_dir(root, d["sidecar"])) is not None:
-                referenced.add(ld)
     orphan_staging = [
         d.name
-        for pat in ("data-*", "dv-*", "eq-*")
-        for d in root.glob(pat)
-        if d.is_dir()
-        and d.name not in referenced
+        for d in snap._orphan_staging_dirs(root, slots.values())
         # husks (no data files) are swept by the next expire free of
         # charge; only dirs actually holding bytes are worth a rec
-        and any(d.rglob("*.parquet"))
+        if any(d.rglob("*.parquet"))
     ]
     if orphan_staging:
         recs.append(
@@ -1498,6 +1469,47 @@ def snapshot_merge(
     return _retry_on_conflict(attempt)
 
 
+def _eq_append(
+    path: str, batch, key_rows, keys: list[str], **commit
+) -> tuple[int, int]:
+    """The equality-delete append under :func:`snapshot_eq_upsert` and
+    :func:`snapshot_eq_delete`: write the distinct ``keys`` tuples of
+    ``key_rows`` that are not all-NULL (equality never matches one) as
+    an ``eq-*`` sidecar, count them from the footers, and append
+    ``batch`` with the sidecar registered. Written BEFORE the commit;
+    reclaimed if the commit never lands. Returns ``(version, key
+    tuples)``."""
+    from group5_spark.medallion import snapshots as snap
+
+    root = Path(path)
+    eq_dir = f"eq-{uuid.uuid4().hex[:8]}"
+    # outside the try: a refused write ("error" mode on an existing
+    # dir) must never reclaim a dir this call did not create
+    (
+        key_rows.select(*keys)
+        .na.drop(how="all", subset=keys)
+        .dropDuplicates(keys)
+        .write.mode("error")
+        .parquet(str(root / eq_dir))
+    )
+    try:
+        n_keys = sum(
+            snap._file_rows(f)
+            for f in sorted((root / eq_dir).rglob("*.parquet"))
+        )
+        v = snap.snapshot_commit(
+            batch,
+            path,
+            mode="append",
+            eq_add={"sidecar": eq_dir, "keys": list(keys), "rows": n_keys},
+            **commit,
+        )
+    except BaseException:
+        shutil.rmtree(root / eq_dir, ignore_errors=True)
+        raise
+    return v, n_keys
+
+
 def snapshot_eq_upsert(
     spark: SparkSession,
     path: str,
@@ -1587,42 +1599,25 @@ def snapshot_eq_upsert(
             .drop("_eq_rn")
         )
 
-    # the sidecar: one row per distinct key tuple with any non-NULL
-    # component (equality can never match an all-NULL tuple). Written
-    # BEFORE the commit; reclaimed if the commit never lands.
-    eq_dir = f"eq-{uuid.uuid4().hex[:8]}"
-    del_keys = (
-        source.select(*keys)
-        .na.drop(how="all", subset=keys)
-        .dropDuplicates(keys)
-    )
-    del_keys.write.mode("error").parquet(str(root / eq_dir))
-    n_keys = sum(
-        snap._file_rows(f) for f in sorted((root / eq_dir).rglob("*.parquet"))
-    )
-    try:
-        v = snap.snapshot_commit(
-            source,
-            path,
-            mode="append",
-            # follow the table's existing layout: a partitioned CDC
-            # table keeps Hive dirs + manifest partition values on the
-            # appended batch (the append-mode spec guard requires it)
-            partition_by=head.get("partition_by"),
-            eq_add={"sidecar": eq_dir, "keys": list(keys), "rows": n_keys},
-            note={"op": "eq_upsert", **(note or {})},
-            # re-sketch the columns the table already tracks so the
-            # append-path merge keeps the stored NDV honest for the
-            # batch's new keys (the advisor's multiplicity estimate
-            # reads it) — one min-k pass over the BATCH, not the table
-            ndv_cols=sorted(
-                c for c in head.get("kmv") or {} if c in source.columns
-            )
-            or None,
+    v, n_keys = _eq_append(
+        path,
+        source,
+        source,
+        keys,
+        # follow the table's existing layout: a partitioned CDC table
+        # keeps Hive dirs + manifest partition values on the appended
+        # batch (the append-mode spec guard requires it)
+        partition_by=head.get("partition_by"),
+        note={"op": "eq_upsert", **(note or {})},
+        # re-sketch the columns the table already tracks so the
+        # append-path merge keeps the stored NDV honest for the batch's
+        # new keys (the advisor's multiplicity estimate reads it) — one
+        # min-k pass over the BATCH, not the table
+        ndv_cols=sorted(
+            c for c in head.get("kmv") or {} if c in source.columns
         )
-    except BaseException:
-        shutil.rmtree(root / eq_dir, ignore_errors=True)
-        raise
+        or None,
+    )
     new_m = snap.snapshot_manifest(path, v)
     appended = sum(
         int(e.get("rows", 0))
@@ -1666,32 +1661,15 @@ def snapshot_eq_delete(
             "eq-delete needs a manifest schema to synthesize the "
             "empty append (legacy pre-schema table — rewrite it once)"
         )
-    eq_dir = f"eq-{uuid.uuid4().hex[:8]}"
-    dk = (
-        delete_keys.select(*keys)
-        .na.drop(how="all", subset=keys)
-        .dropDuplicates(keys)
+    v, n_keys = _eq_append(
+        path,
+        spark.createDataFrame([], StructType.fromJson(head["schema"])),
+        delete_keys,
+        keys,
+        partition_by=head.get("partition_by"),
+        note={"op": "eq_delete", **(note or {})},
+        carry_kmv=True,  # pure mask commit: no data rows added
     )
-    dk.write.mode("error").parquet(str(root / eq_dir))
-    n_keys = sum(
-        snap._file_rows(f) for f in sorted((root / eq_dir).rglob("*.parquet"))
-    )
-    empty = spark.createDataFrame(
-        [], StructType.fromJson(head["schema"])
-    )
-    try:
-        v = snap.snapshot_commit(
-            empty,
-            path,
-            mode="append",
-            partition_by=head.get("partition_by"),
-            eq_add={"sidecar": eq_dir, "keys": keys, "rows": n_keys},
-            note={"op": "eq_delete", **(note or {})},
-            carry_kmv=True,  # pure mask commit: no data rows added
-        )
-    except BaseException:
-        shutil.rmtree(root / eq_dir, ignore_errors=True)
-        raise
     return {"version": v, "delete_keys": n_keys}
 
 

@@ -29,9 +29,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .snapshots import (
-    _lineage,
-    _manifest_path,
     _current_version,
+    _lineage,
+    _manifest_file,
     snapshot_manifest,
 )
 
@@ -94,11 +94,7 @@ def snapshot_files_df(
     Spark (explicit schema + ``explode``, executor-side) instead of
     the driver — pass ``0`` to force the Spark path, a huge value to
     force the driver path; both return identical rows."""
-    root = Path(path)
-    v = version if version is not None else _current_version(root)
-    mp = _manifest_path(root, v)
-    if not mp.exists():
-        raise FileNotFoundError(f"no snapshot v{v} at {path}")
+    v, mp = _manifest_file(path, version)
     if mp.stat().st_size <= spark_manifest_bytes:
         m = snapshot_manifest(path, v)
         rows = [

@@ -76,6 +76,59 @@ def _manifest_path(root: Path, version: int) -> Path:
     return root / _MANIFEST_DIR / f"v{version:05d}.json"
 
 
+def _read_manifest(root: Path, version: int) -> dict:
+    """Parse manifest slot ``version`` — the ONE reader of the manifest
+    format. Deliberately uncached: expiry reclaims an orphan slot and
+    the next commit claims the same number with different content, so
+    a ``(root, version)`` memo could serve the reclaimed orphan. A
+    caller that needs the manifest twice passes the parsed dict on.
+    Raises OSError for a missing slot, ValueError for a torn one."""
+    return json.loads(_manifest_path(root, version).read_text())
+
+
+def _slots(root: Path) -> list[int]:
+    """Every claimed manifest slot, published or orphan, ascending."""
+    return sorted(
+        int(m.stem[1:]) for m in (root / _MANIFEST_DIR).glob("v*.json")
+    )
+
+
+def _slot_manifests(
+    root: Path, known: dict[int, dict] | None = None
+) -> dict[int, dict | None]:
+    """Every slot → its parsed manifest (None when torn or gone),
+    reusing ``known``'s already-parsed slots so no slot parses twice
+    (a torn one is tried again: its writer may have finished)."""
+    out: dict[int, dict | None] = {}
+    for v in _slots(root):
+        if known and known.get(v) is not None:
+            out[v] = known[v]
+            continue
+        try:
+            out[v] = _read_manifest(root, v)
+        except (OSError, ValueError):
+            out[v] = None
+    return out
+
+
+def is_snapshot_table(path) -> bool:
+    """Does ``path`` hold a snapshot table (a manifest directory)?"""
+    return (Path(path) / _MANIFEST_DIR).is_dir()
+
+
+def _manifest_file(path: str, version: int | None = None) -> tuple[int, Path]:
+    """``(version, file)`` of a version's manifest (latest by default),
+    for readers that size or scan the raw file (``meta``'s Spark-side
+    parse of very large manifests). Raises FileNotFoundError when the
+    slot is absent."""
+    root = Path(path)
+    v = version if version is not None else _current_version(root)
+    mp = _manifest_path(root, v)
+    if not mp.exists():
+        raise FileNotFoundError(f"no snapshot v{v} at {path}")
+    return v, mp
+
+
 def _chain_path(root: Path, parent: int) -> Path:
     return root / _MANIFEST_DIR / f"c{parent:05d}"
 
@@ -85,6 +138,12 @@ def _read_pointer(root: Path) -> int:
     if not p.exists():
         return 0
     return int(p.read_text().strip())
+
+
+def _write_pointer(root: Path, version: int) -> None:
+    tmp = root / _MANIFEST_DIR / f"_ptr.{uuid.uuid4().hex[:8]}"
+    tmp.write_text(str(version))
+    tmp.replace(root / _MANIFEST_DIR / _POINTER)  # atomic swap
 
 
 def _chain_next(root: Path, version: int) -> int | None:
@@ -121,7 +180,7 @@ def _lineage(root: Path, head: int):
     v = head
     while v > 0:
         try:
-            m = json.loads(_manifest_path(root, v).read_text())
+            m = _read_manifest(root, v)
             parent = int(m.get("parent", 0))
         except (OSError, ValueError):
             return
@@ -467,7 +526,7 @@ def _root_local_dir(root: Path, p: str) -> str | None:
     every in-root reference to root-relative (see ``wap.py``), so
     current publishes never produce absolute aliases — but pre-rebase
     manifests and foreign clones can still carry them, and the orphan
-    sweeps must count their dirs as referenced. None for paths outside
+    sweep must count their dirs as referenced. None for paths outside
     root (a clone's foreign references own no local dir)."""
     pp = Path(p)
     if not pp.is_absolute():
@@ -478,6 +537,53 @@ def _root_local_dir(root: Path, p: str) -> str | None:
         return None
 
 
+def _map_refs(m: dict, fn) -> dict:
+    """The ONE reference walk: ``m`` with every path it names — each
+    file entry's data file and deletion-vector sidecar, and each
+    equality-delete sidecar — replaced by ``fn(path)``. Clone and WAP
+    publish rebase paths with it; :func:`_ref_paths` lists them."""
+    files = []
+    for e in m.get("files", []):
+        ne = dict(e, path=fn(e["path"]))
+        if e.get("dv"):
+            ne["dv"] = dict(e["dv"], sidecar=fn(e["dv"]["sidecar"]))
+        files.append(ne)
+    out = {**m, "files": files}
+    if m.get("eq_deletes"):
+        out["eq_deletes"] = [
+            dict(d, sidecar=fn(d["sidecar"])) for d in m["eq_deletes"]
+        ]
+    return out
+
+
+def _ref_paths(m: dict) -> list[str]:
+    """Every path manifest ``m`` names (data files and sidecars): the
+    file closure that expiry keeps live or reclaims."""
+    paths: list[str] = []
+    _map_refs(m, paths.append)  # the rebuilt copy is discarded
+    return paths
+
+
+def _orphan_staging_dirs(root: Path, manifests) -> list[Path]:
+    """Staging dirs (``data-*``/``dv-*``/``eq-*``) under ``root`` that
+    none of ``manifests`` (None for a torn slot) reaches — what a
+    writer killed before claiming a manifest slot leaves behind.
+    Absolute same-root references count (:func:`_root_local_dir`)."""
+    referenced = {
+        ld
+        for m in manifests
+        if m
+        for p in _ref_paths(m)
+        if (ld := _root_local_dir(root, p)) is not None
+    }
+    return [
+        d
+        for pattern in ("data-*", "dv-*", "eq-*")
+        for d in sorted(root.glob(pattern))
+        if d.is_dir() and d.name not in referenced
+    ]
+
+
 def _property_note(note: dict | None) -> dict:
     """The table-property subset of a manifest note (see
     :data:`_EPHEMERAL_NOTE_KEYS`)."""
@@ -485,6 +591,36 @@ def _property_note(note: dict | None) -> dict:
         k: v
         for k, v in (note or {}).items()
         if k not in _EPHEMERAL_NOTE_KEYS
+    }
+
+
+#: the table contract a metadata-only republish carries beside the
+#: files, schema and property note (:func:`_republish`)
+_CONTRACT_KEYS = (
+    "partition_by", "partition_history", "kmv", "constraints", "eq_deletes",
+)
+
+
+def _republish(
+    m: dict, parent: int, version: int, note: dict, head_seq: int = 0
+) -> dict:
+    """The manifest that re-publishes ``m``'s content on ``parent`` as
+    a metadata-only commit (clone, rollback, WAP publish, constraint
+    changes): its files and its whole table contract — schema,
+    property note keys (``note`` wins on collision), partition spec and
+    history, KMV sketch, CHECK constraints and equality-delete
+    sidecars. The write-sequence counter is the larger of ``m``'s and
+    ``head_seq`` (the parent's), so later commits never reuse a
+    sequence either side already stamped."""
+    return {
+        "version": version,
+        "parent": parent,
+        "ts": time.time(),
+        "schema": m.get("schema"),
+        "note": {**_property_note(m.get("note")), **note},
+        "files": m["files"],
+        **{k: m[k] for k in _CONTRACT_KEYS if m.get(k)},
+        "last_seq": max(_last_seq(m), head_seq),
     }
 
 
@@ -703,6 +839,20 @@ def snapshot_commit(
         )
     root = Path(path)
     (root / _MANIFEST_DIR).mkdir(parents=True, exist_ok=True)
+    # the parent this commit extends: under ``expected_parent`` exactly
+    # that version, read directly (build refuses a moved head anyway,
+    # and a reclaimed slot means the head moved); else the head
+    pv_now = (
+        _current_version(root) if expected_parent is None else expected_parent
+    )
+    try:
+        _head_manifest = _read_manifest(root, pv_now) if pv_now else {}
+    except FileNotFoundError:
+        if expected_parent is None:
+            raise
+        raise SnapshotConflict(
+            f"expected parent v{expected_parent} is gone at {path}"
+        ) from None
 
     # stage data files once — immutable, so a commit retry never
     # rewrites them (dir name is uuid-unique, not version-bound)
@@ -733,12 +883,6 @@ def snapshot_commit(
     # it never drops 'ts'). Harvested from the parent manifest's file
     # entries; the partition column's synthetic min==max stat is
     # re-derived from the layout, not inherited.
-    pv_now = _current_version(root)
-    _head_manifest = (
-        json.loads(_manifest_path(root, pv_now).read_text())
-        if pv_now
-        else {}
-    )
     if pv_now:
         pfiles = _head_manifest["files"]
         inherited_stats = {
@@ -929,11 +1073,7 @@ def snapshot_commit(
             # staged rows were already validated against are
             # re-validated before this commit may publish them.
             pv_now = parent
-            _head_manifest = (
-                json.loads(_manifest_path(root, parent).read_text())
-                if parent
-                else {}
-            )
+            _head_manifest = _read_manifest(root, parent) if parent else {}
             rebased_rules = _derive_rules(_head_manifest)
             _validate_staged(
                 {
@@ -1127,7 +1267,7 @@ def latest_note(path: str) -> dict | None:
     v = _current_version(root)
     if not v:
         return None
-    return json.loads(_manifest_path(root, v).read_text()).get("note", {})
+    return _read_manifest(root, v).get("note", {})
 
 
 def last_committed_batch(path: str, app_id: str) -> int | None:
@@ -1157,12 +1297,8 @@ def last_committed_batch(path: str, app_id: str) -> int | None:
 def snapshot_manifest(path: str, version: int | None = None) -> dict:
     """The raw manifest dict for a version (latest by default) —
     file entries with byte sizes and stats, schema, parent, note."""
-    root = Path(path)
-    v = version if version is not None else _current_version(root)
-    m = _manifest_path(root, v)
-    if not m.exists():
-        raise FileNotFoundError(f"no snapshot v{v} at {path}")
-    return json.loads(m.read_text())
+    v, _ = _manifest_file(path, version)
+    return _read_manifest(Path(path), v)
 
 
 def snapshot_versions(path: str) -> list[dict]:
@@ -1665,11 +1801,8 @@ def snapshot_tag(
     existing name requires ``overwrite=True`` (retagging is an
     explicit act — silent moves would un-freeze someone's dataset).
     """
-    root = Path(path)
-    v = int(version) if version is not None else _current_version(root)
-    if not _manifest_path(root, v).exists():
-        raise FileNotFoundError(f"no manifest for version {v} at {path}")
-    ref = _ref_path(root, name)
+    v, _ = _manifest_file(path, None if version is None else int(version))
+    ref = _ref_path(Path(path), name)
     if ref.exists() and not overwrite:
         raise FileExistsError(f"tag {name!r} exists (overwrite=True to move)")
     ref.parent.mkdir(parents=True, exist_ok=True)
@@ -1759,61 +1892,31 @@ def snapshot_clone(
     if ref is not None:
         version = resolve_ref(src_path, ref)
     m = snapshot_manifest(src_path, version)
-    entries = []
-    for e in m["files"]:
-        ne = dict(e, path=str((src_root / e["path"]).resolve()))
-        if e.get("dv"):
-            # the DV sidecar is part of the file's identity: a clone
-            # reading the source's bytes must mask the same positions
-            ne["dv"] = dict(
-                e["dv"],
-                sidecar=str((src_root / e["dv"]["sidecar"]).resolve()),
-            )
-        entries.append(ne)
+    # every reference absolutized into the source root — data files,
+    # DV sidecars (part of a file's identity: the clone must mask the
+    # same positions) and eq sidecars (their key tuples need no
+    # rebasing). The republish inherits the source's write-sequence
+    # counter, so the clone's own future sidecars postdate every
+    # inherited entry even though its VERSION numbers restart at 1.
+    m = _map_refs(m, lambda p: str((src_root / p).resolve()))
     root = Path(dst_path)
     (root / _MANIFEST_DIR).mkdir(parents=True, exist_ok=True)
-    manifest = {
-        "parent": 0,
-        "schema": m.get("schema"),
-        # the source's PROPERTY note keys travel with the clone —
-        # e.g. a persisted index's pinned parameters and centroids; a
-        # clone that loses them is not usable as what it was cloned
-        # from. Ephemeral keys are deliberately dropped: inheriting
-        # the source's streaming (app_id, batch_id) marker would make
-        # a stream writing to the clone silently skip its first
-        # batches as "already committed".
-        "note": {
-            **_property_note(m.get("note")),
-            "cloned_from": str(src_root.resolve()),
-            "src_version": m["version"],
-        },
-        "files": entries,
-    }
-    if m.get("partition_by"):
-        manifest["partition_by"] = m["partition_by"]
-    if m.get("partition_history"):
-        manifest["partition_history"] = m["partition_history"]
-    if m.get("kmv"):
-        manifest["kmv"] = m["kmv"]
-    if m.get("constraints"):
-        manifest["constraints"] = m["constraints"]
-    # equality-delete masks travel with the clone (sidecars
-    # absolutized like DV sidecars — key tuples inside need no
-    # rebasing, unlike DV (file,pos) rows); the source's write-
-    # sequence counter is inherited so the clone's own future
-    # sidecars postdate every inherited entry even though its
-    # VERSION numbers restart at 1
-    if m.get("eq_deletes"):
-        manifest["eq_deletes"] = [
-            dict(d, sidecar=str((src_root / d["sidecar"]).resolve()))
-            for d in m["eq_deletes"]
-        ]
-    manifest["last_seq"] = _last_seq(m)
 
     def build(parent: int, new_version: int) -> dict:
         if parent:
             raise ValueError(f"clone target {dst_path} is already a table")
-        return {"version": new_version, "ts": time.time(), **manifest}
+        # ephemeral note keys are dropped: inheriting the source's
+        # streaming (app_id, batch_id) marker would make a stream
+        # writing to the clone silently skip its first batches
+        return _republish(
+            m,
+            0,
+            new_version,
+            {
+                "cloned_from": str(src_root.resolve()),
+                "src_version": m["version"],
+            },
+        )
 
     return _metadata_commit(root, build, create=True)
 
@@ -1867,36 +1970,15 @@ def snapshot_rollback(
             )
         if parent == version:
             return None  # restoring the head restores nothing
-        manifest = {
-            "version": new_version,
-            "parent": parent,
-            "ts": time.time(),
-            "schema": target.get("schema"),
-            # restore the TARGET's table properties along with its
-            # files (a restored index must keep its pinned model)
-            "note": {
-                **_property_note(target.get("note")),
-                "op": "rollback",
-                "restored_version": version,
-            },
-            "files": target["files"],
-        }
-        if target.get("partition_by"):
-            manifest["partition_by"] = target["partition_by"]
-        if target.get("partition_history"):
-            manifest["partition_history"] = target["partition_history"]
-        if target.get("kmv"):
-            manifest["kmv"] = target["kmv"]
-        if target.get("constraints"):
-            manifest["constraints"] = target["constraints"]
-        # the restored content's equality-delete masks are part of it;
         # the write-sequence counter stays monotonic from the HEAD so
         # post-restore commits never collide with restored sequences
-        if target.get("eq_deletes"):
-            manifest["eq_deletes"] = target["eq_deletes"]
-        parent_m = json.loads(_manifest_path(root, parent).read_text())
-        manifest["last_seq"] = max(_last_seq(parent_m), _last_seq(target))
-        return manifest
+        return _republish(
+            target,
+            parent,
+            new_version,
+            {"op": "rollback", "restored_version": version},
+            head_seq=_last_seq(_read_manifest(root, parent)),
+        )
 
     return _metadata_commit(root, build)
 
@@ -1919,11 +2001,7 @@ def _metadata_commit(
         parent = _current_version(root)
         if not parent and not create:
             raise ValueError(f"{root} is not a snapshot table")
-        taken = [
-            int(m.stem[1:])
-            for m in (root / _MANIFEST_DIR).glob("v*.json")
-        ]
-        new_version = max([parent, *taken], default=0) + 1
+        new_version = max([parent, *_slots(root)]) + 1
         manifest = build_manifest(parent, new_version)
         if manifest is None:
             return parent
@@ -1945,9 +2023,7 @@ def _metadata_commit(
     # old commit from regressing the hint; a lost update here only
     # means a longer chain walk, not a wrong read.
     if new_version > _read_pointer(root):
-        tmp = root / _MANIFEST_DIR / f"_ptr.{uuid.uuid4().hex[:8]}"
-        tmp.write_text(str(new_version))
-        tmp.replace(root / _MANIFEST_DIR / _POINTER)
+        _write_pointer(root, new_version)
     return new_version
 
 
@@ -1981,7 +2057,7 @@ def snapshot_add_constraint(
         raise ConstraintViolation(path, {name: bad})
 
     def build(parent: int, new_version: int) -> dict | None:
-        prior = json.loads(_manifest_path(root, parent).read_text())
+        prior = _read_manifest(root, parent)
         rules = dict(prior.get("constraints", {}))
         if rules.get(name) == expr:
             return None  # idempotent re-add
@@ -1993,19 +2069,12 @@ def snapshot_add_constraint(
                 "constraint validation; re-run snapshot_add_constraint"
             )
         rules[name] = expr
-        manifest = dict(prior)
-        manifest.update(
-            version=new_version,
-            parent=parent,
-            ts=time.time(),
-            note={
-                **_property_note(prior.get("note")),
-                "op": "add_constraint",
-                "constraint": name,
-            },
-            constraints=rules,
+        return _republish(
+            {**prior, "constraints": rules},
+            parent,
+            new_version,
+            {"op": "add_constraint", "constraint": name},
         )
-        return manifest
 
     return _metadata_commit(root, build)
 
@@ -2018,27 +2087,17 @@ def snapshot_drop_constraint(path: str, name: str) -> int:
     root = Path(path)
 
     def build(parent: int, new_version: int) -> dict | None:
-        prior = json.loads(_manifest_path(root, parent).read_text())
+        prior = _read_manifest(root, parent)
         rules = dict(prior.get("constraints", {}))
         if name not in rules:
             return None
         rules.pop(name)
-        manifest = dict(prior)
-        manifest.update(
-            version=new_version,
-            parent=parent,
-            ts=time.time(),
-            note={
-                **_property_note(prior.get("note")),
-                "op": "drop_constraint",
-                "constraint": name,
-            },
+        return _republish(
+            {**prior, "constraints": rules},
+            parent,
+            new_version,
+            {"op": "drop_constraint", "constraint": name},
         )
-        if rules:
-            manifest["constraints"] = rules
-        else:
-            manifest.pop("constraints", None)
-        return manifest
 
     return _metadata_commit(root, build)
 
@@ -2085,75 +2144,56 @@ def snapshot_expire(
         keep_versions.update(
             v for v, m in lineage.items() if m.get("ts", 0) >= keep_since
         )
-    manifests = sorted((root / _MANIFEST_DIR).glob("v*.json"))
+    # each slot parses once: the lineage walk above parsed the
+    # published ones, this the orphans
+    slots = _slot_manifests(root, lineage)
     now = time.time()
-    keep, drop = [], []
-    for m in manifests:
-        version = int(m.stem[1:])
+    keep: dict[int, dict | None] = {}
+    drop: dict[int, dict | None] = {}
+    for version, m in slots.items():
         if version in keep_versions:
-            keep.append(m)
+            keep[version] = m
         elif version in lineage:
-            drop.append(m)  # published history beyond the window
+            drop[version] = m  # published history beyond the window
         else:
             # orphan: deleted only after the grace window so expire
             # never races a commit between manifest write and publish
-            try:
-                ts = json.loads(m.read_text()).get("ts", 0)
-            except (ValueError, json.JSONDecodeError):
-                ts = m.stat().st_mtime
-            (drop if now - ts > orphan_grace_s else keep).append(m)
+            ts = (
+                m.get("ts", 0)
+                if m is not None
+                else _manifest_path(root, version).stat().st_mtime
+            )
+            (drop if now - ts > orphan_grace_s else keep)[version] = m
     # the live set holds RESOLVED paths: a WAP publish can reference a
     # file absolutely while a dropped pre-publish manifest references
     # the same bytes relatively — comparing raw path strings would
-    # alias them apart and delete a live file
+    # alias them apart and delete a live file. A retained version's
+    # deletion-vector AND equality-delete sidecars are part of its
+    # file closure: dropping one would silently RESURRECT the masked
+    # rows for time-travel readers.
     def _res(p: str) -> str:
         return str((root / p).resolve())
 
-    live = set()
-    for m in keep:
-        km = json.loads(m.read_text())
-        kept_entries = km["files"]
-        live.update(_res(e["path"]) for e in kept_entries)
-        # a retained version's deletion-vector AND equality-delete
-        # sidecars are part of its file closure: dropping one would
-        # silently RESURRECT the masked rows for time-travel readers
-        live.update(
-            _res(e["dv"]["sidecar"]) for e in kept_entries if e.get("dv")
-        )
-        live.update(
-            _res(d["sidecar"]) for d in km.get("eq_deletes") or []
-        )
+    root_res = root.resolve()
+    live = {_res(p) for m in keep.values() if m for p in _ref_paths(m)}
     deleted = 0
-    for m in drop:
-        try:
-            dropped_m = json.loads(m.read_text())
-            entries = dropped_m["files"]
-        except (ValueError, json.JSONDecodeError, KeyError):
-            dropped_m, entries = {}, []
-        for e in entries:
-            p = root / e["path"]
-            # containment guard: a CLONED table's entries reference the
-            # SOURCE table's files by absolute path — expire on the
-            # clone must never reach outside its own root (the source
-            # owns those bytes; its own expire reclaims them)
-            if not p.resolve().is_relative_to(root.resolve()):
+    for version, m in drop.items():
+        for p in _ref_paths(m or {}):
+            rp = _res(p)
+            # containment guard: a CLONED table references the SOURCE
+            # table's files and sidecars by absolute path — expire on
+            # the clone must never reach outside its own root (the
+            # source owns those bytes; its own expire reclaims them)
+            if rp in live or not Path(rp).is_relative_to(root_res):
                 continue
-            if _res(e["path"]) not in live and p.exists():
-                p.unlink()
+            fp = root / p
+            if fp.is_dir():  # a DV / equality-delete sidecar
+                deleted += sum(1 for _ in fp.rglob("*.parquet"))
+                shutil.rmtree(fp)
+            elif fp.exists():
+                fp.unlink()
                 deleted += 1
-        dropped_sidecars = [
-            e["dv"]["sidecar"] for e in entries if e.get("dv")
-        ] + [d["sidecar"] for d in dropped_m.get("eq_deletes") or []]
-        for sc in dropped_sidecars:
-            if _res(sc) in live:
-                continue
-            sp = root / sc
-            if not sp.resolve().is_relative_to(root.resolve()):
-                continue  # cloned sidecar: the source owns it
-            if sp.exists():
-                deleted += sum(1 for _ in sp.rglob("*.parquet"))
-                shutil.rmtree(sp)
-        m.unlink()
+        _manifest_path(root, version).unlink()
         # NOTE: the dropped version's outgoing chain link (c<v>) is
         # deliberately KEPT. Links are the linearization history: a
         # reader holding a stale pointer hint below the retention
@@ -2166,9 +2206,7 @@ def snapshot_expire(
     # fine *because* links survive: a reader that grabbed the old hint
     # mid-expire walks retained links to the head regardless.
     if head:
-        tmp = root / _MANIFEST_DIR / f"_ptr.{uuid.uuid4().hex[:8]}"
-        tmp.write_text(str(head))
-        tmp.replace(root / _MANIFEST_DIR / _POINTER)
+        _write_pointer(root, head)
     # remove emptied data dirs
     for d in root.glob("data-*"):
         if d.is_dir() and not any(d.iterdir()):
@@ -2177,44 +2215,24 @@ def snapshot_expire(
     # data-*/dv-*/eq-* dir and creating its manifest leaves bytes NO
     # manifest references — neither the kept set (whose closure is
     # `live`) nor a dropped one (reclaimed above). Sweep any staging
-    # dir no remaining manifest reaches, past the same grace window
-    # that protects in-flight commits.
-    referenced: set[str] = set()
-    for m in (root / _MANIFEST_DIR).glob("v*.json"):
-        try:
-            km = json.loads(m.read_text())
-        except (ValueError, json.JSONDecodeError):
-            continue
-        for e in km.get("files", []):
-            if (ld := _root_local_dir(root, e["path"])) is not None:
-                referenced.add(ld)
-            if e.get("dv"):
-                if (
-                    ld := _root_local_dir(root, e["dv"]["sidecar"])
-                ) is not None:
-                    referenced.add(ld)
-        for d_ in km.get("eq_deletes") or []:
-            if (ld := _root_local_dir(root, d_["sidecar"])) is not None:
-                referenced.add(ld)
-    for pattern in ("data-*", "dv-*", "eq-*"):
-        for d in root.glob(pattern):
-            if not d.is_dir() or d.name in referenced:
-                continue
-            n_parquet = sum(1 for _ in d.rglob("*.parquet"))
-            # a husk — _SUCCESS present but no data files (its
-            # version's files were already expired) — can never be an
-            # in-flight write (_SUCCESS lands last): remove
-            # immediately. A parquet-less dir WITHOUT _SUCCESS is NOT
-            # proof of abandonment: a racing Spark write holds only
-            # _temporary/ between job setup and its first task opening
-            # a part file, and its manifest doesn't exist yet, so it
-            # is unreferenced exactly like a crash orphan. Everything
-            # non-husk waits out the same grace window that protects
-            # in-flight commits.
-            is_husk = n_parquet == 0 and (d / "_SUCCESS").exists()
-            if is_husk or now - d.stat().st_mtime > orphan_grace_s:
-                deleted += n_parquet
-                shutil.rmtree(d)
+    # dir no remaining manifest reaches (slots claimed since the scan
+    # above parse now, once), past the same grace window that
+    # protects in-flight commits.
+    for d in _orphan_staging_dirs(root, _slot_manifests(root, keep).values()):
+        n_parquet = sum(1 for _ in d.rglob("*.parquet"))
+        # a husk — _SUCCESS present but no data files (its version's
+        # files were already expired) — can never be an in-flight
+        # write (_SUCCESS lands last): remove immediately. A
+        # parquet-less dir WITHOUT _SUCCESS is NOT proof of
+        # abandonment: a racing Spark write holds only _temporary/
+        # between job setup and its first task opening a part file,
+        # and its manifest doesn't exist yet, so it is unreferenced
+        # exactly like a crash orphan. Everything non-husk waits out
+        # the same grace window that protects in-flight commits.
+        is_husk = n_parquet == 0 and (d / "_SUCCESS").exists()
+        if is_husk or now - d.stat().st_mtime > orphan_grace_s:
+            deleted += n_parquet
+            shutil.rmtree(d)
     return {"versions_dropped": len(drop), "files_deleted": deleted}
 
 

@@ -63,9 +63,9 @@ from pathlib import Path
 from .snapshots import (
     SnapshotConflict,
     _current_version,
-    _last_seq,
+    _map_refs,
     _metadata_commit,
-    _property_note,
+    _republish,
     snapshot_clone,
     snapshot_drop_tag,
     snapshot_manifest,
@@ -126,22 +126,6 @@ def wap_begin(src_path: str, audit_path: str) -> int:
     return 1
 
 
-def _norm(src_res: Path, p: str) -> tuple[str, str | None]:
-    """Publish-time path normalization: returns ``(new_path,
-    audit_local_dir_to_move)``. Relative paths are audit-local — their
-    top-level staging dir moves into the main root and the path string
-    stays valid verbatim. Absolute paths that resolve inside the main
-    root rebase to root-relative; foreign absolute paths
-    (clone-of-clone) pass through."""
-    pp = Path(p)
-    if not pp.is_absolute():
-        return p, pp.parts[0]
-    try:
-        return str(pp.resolve().relative_to(src_res)), None
-    except ValueError:
-        return p, None
-
-
 def wap_publish(
     src_path: str, audit_path: str, *, keep_audit: bool = False
 ) -> int:
@@ -192,35 +176,30 @@ def wap_publish(
             f"main head moved {wap['src_version']} → {head_now} at "
             f"{src_path} since wap_begin — re-begin and replay"
         )
-    m = snapshot_manifest(str(audit_root))
-
-    entries: list[dict] = []
+    # every main-root reference rebases to root-relative — the
+    # published manifest survives a table relocation and never aliases
+    # a file against pre-publish (relative) manifests. A DV written in
+    # the audit against an inherited file keyed its sidecar rows on the
+    # clone's ABSOLUTE path; read_entries' keymap matches masks under
+    # every path form the entry could have had (see _sidecar_keys), so
+    # the rebase is safe.
     move: set[str] = set()
-    for e in m["files"]:
-        ne = dict(e)
-        dv = e.get("dv")
-        # every main-root reference rebases to root-relative — the
-        # published manifest survives a table relocation and never
-        # aliases a file against pre-publish (relative) manifests. A
-        # DV written in the audit against an inherited file keyed its
-        # sidecar rows on the clone's ABSOLUTE path; read_entries'
-        # keymap matches masks under every path form the entry could
-        # have had (see _sidecar_keys), so the rebase is safe.
-        ne["path"], mv = _norm(src_res, e["path"])
-        if dv is not None:
-            nsc, mv2 = _norm(src_res, dv["sidecar"])
-            ne["dv"] = dict(dv, sidecar=nsc)
-            if mv2 is not None:
-                move.add(mv2)
-        if mv is not None:
-            move.add(mv)
-        entries.append(ne)
-    eq: list[dict] = []
-    for d in m.get("eq_deletes") or []:
-        nsc, mv = _norm(src_res, d["sidecar"])
-        if mv is not None:
-            move.add(mv)
-        eq.append(dict(d, sidecar=nsc))
+
+    def rebase(p: str) -> str:
+        """Relative paths are audit-local: their top-level staging dir
+        moves into the main root and the path stays valid verbatim.
+        Absolute paths inside the main root rebase to root-relative;
+        foreign ones (clone-of-clone) pass through."""
+        pp = Path(p)
+        if not pp.is_absolute():
+            move.add(pp.parts[0])
+            return p
+        try:
+            return str(pp.resolve().relative_to(src_res))
+        except ValueError:
+            return p
+
+    m = _map_refs(snapshot_manifest(str(audit_root)), rebase)
 
     moved: list[str] = []
     try:
@@ -261,33 +240,15 @@ def wap_publish(
                     f"main head moved {wap['src_version']} → {parent} "
                     f"at {src_path} during publish"
                 )
-            manifest = {
-                "version": new_version,
-                "parent": parent,
-                "ts": time.time(),
-                "schema": m.get("schema"),
-                "note": {
-                    **_property_note(m.get("note")),
-                    "op": "wap_publish",
-                    "audit_version": m["version"],
-                },
-                "files": entries,
-            }
-            for k in (
-                "partition_by",
-                "partition_history",
-                "kmv",
-                "constraints",
-            ):
-                if m.get(k):
-                    manifest[k] = m[k]
-            if eq:
-                manifest["eq_deletes"] = eq
             # the audit inherited the main's write-sequence counter at
             # begin and only grew it; the main head is OCC-frozen at
             # the begin version, so the audit's counter is the max
-            manifest["last_seq"] = _last_seq(m)
-            return manifest
+            return _republish(
+                m,
+                parent,
+                new_version,
+                {"op": "wap_publish", "audit_version": m["version"]},
+            )
 
         version = _metadata_commit(src_root, build)
     except BaseException:

@@ -506,7 +506,7 @@ def snapshot_side_stats(
     from group5_spark.medallion import snapshots as snap
 
     path = Path(root_dir) / table
-    if not (path / snap._MANIFEST_DIR).is_dir():
+    if not snap.is_snapshot_table(path):
         return None
     try:
         return stats_from_snapshot(str(path), key)
