@@ -16,8 +16,13 @@ copy-on-write (every touched file rewritten) or, with
 ``dv_threshold``, merge-on-read (per touched file: rewrite, or carry
 byte-untouched under a deletion vector). Files the manifest proves
 untouched carry into the new version by reference, so DML cost tracks
-the rows it touches, not the table. :func:`table_health` and
-:func:`apply_health` turn the manifest into maintenance decisions.
+the rows it touches, not the table. The three compactions differ only
+in which entries they rewrite; all of them commit through one
+compaction core (:func:`_compact_commit`) with one file-sizing rule:
+each rewritten partition gets ``ceil(live bytes / target)`` files,
+built in one scan and one shuffle (:func:`_files_for`).
+:func:`table_health` and :func:`apply_health` turn the manifest into
+maintenance decisions.
 
 **Hive-layout Parquet tables** — :func:`compact` rewrites fragmented
 partitions of a plain directory table into files near a target size
@@ -95,20 +100,6 @@ def _split_by_predicates(head: dict, predicates: list[tuple]):
     touched = snap._prune(head["files"], predicates)
     paths = {e["path"] for e in touched}
     return touched, [e for e in head["files"] if e["path"] not in paths]
-
-
-def _staged(path: str, version: int, carried: list[dict]) -> list[dict]:
-    """The entries commit ``version`` staged: every entry of its
-    manifest not carried by reference (footer row counts — metadata,
-    no Spark job)."""
-    from group5_spark.medallion import snapshots as snap
-
-    paths = {e["path"] for e in carried}
-    return [
-        e
-        for e in snap.snapshot_manifest(path, version)["files"]
-        if e["path"] not in paths
-    ]
 
 
 DEFAULT_TARGET_BYTES = 128 * 1024 * 1024
@@ -311,6 +302,7 @@ def _dml_commit(
                 bloom_cols=bloom_cols,
                 note=note,
                 carry_kmv=carry_kmv,
+                _parent=head,
             )
         except snap.SnapshotConflict:
             if dv_dir is not None:
@@ -332,21 +324,145 @@ def _dml_commit(
     return res
 
 
-class _MigrateGroupType:
-    """Sentinel key for the previous-spec migrate group in
-    :func:`compact_snapshot_partitions` — deliberately NOT a string,
-    so a real partition literally named ``__previous_spec__`` keeps
-    its own slot instead of being silently overwritten (round-6
-    ADVICE: a string key collision dropped that partition's entries
-    from the new manifest)."""
+def _by_partition(head: dict, entries: list[dict]) -> tuple[dict, list]:
+    """``(groups, migrate)``: ``entries`` grouped by their partition
+    value under the head's current spec (one ``None`` group for an
+    unpartitioned table), and the entries written under a previous
+    spec. Partition evolution leaves those with a value of ANOTHER
+    column (or none), so value grouping is unsound for them."""
+    from group5_spark.medallion import snapshots as snap
 
-    def __str__(self) -> str:  # manifest note rendering only
-        return "__previous_spec__"
+    part_col, groups, migrate = head.get("partition_by"), {}, []
+    for e in entries:
+        if part_col and snap._entry_old_spec(e, part_col):
+            migrate.append(e)
+        else:
+            groups.setdefault(part_col and e.get("partition"), []).append(e)
+    return groups, migrate
 
-    __repr__ = __str__
+
+def _files_for(entries: list[dict], target_bytes: int, live: bool = True) -> int:
+    """The one file-sizing rule: ``ceil(live bytes / target)``, where
+    live bytes are the entries' manifest bytes scaled by
+    ``entry_rows / rows`` — rows a deletion vector masks are not
+    rewritten, so they do not count. ``live=False`` counts raw
+    manifest bytes (the compactions' "is it fragmented" test)."""
+    from group5_spark.medallion import snapshots as snap
+
+    nbytes = sum(
+        int(e.get("bytes", 0))
+        * (snap.entry_rows(e) / max(int(e.get("rows", 0)), 1) if live else 1)
+        for e in entries
+    )
+    return max(1, math.ceil(nbytes / target_bytes))
 
 
-_MIGRATE_GROUP = _MigrateGroupType()
+def _compact_commit(
+    spark: SparkSession,
+    root: Path,
+    head: dict,
+    rewrite: list[dict],
+    carried: list[dict],
+    target_file_bytes: int,
+    *,
+    note: dict,
+    sort_cols: list[str] | None = None,
+    zorder_cols: list[str] | None = None,
+    stats_cols: list[str] | None = None,
+    bloom_cols: list[str] | None = None,
+) -> tuple[int, int]:
+    """The one compaction core under :func:`compact_snapshot`,
+    :func:`compact_snapshot_partitions` and
+    :func:`compact_snapshot_masks`: read ``head``'s ``rewrite``
+    entries through :func:`snapshots.read_entries` (deletion vectors
+    and equality deletes applied — a raw-file read would resurrect
+    masked rows, so this is also how every compaction FOLDS masks),
+    arrange them by one rule, and commit them with ``carried`` by
+    reference as one version under ``expected_parent`` = ``head``.
+    Call it inside :func:`_retry_on_conflict`. Returns
+    ``(version, files_after)``.
+
+    The arrangement, sized by :func:`_files_for`:
+
+    - unpartitioned: ``coalesce`` (or a range shuffle on ``sort_cols``
+      or the Morton value of ``zorder_cols``) into
+      ``ceil(live / target)`` files;
+    - partitioned, current spec: each partition p needs
+      ``N_p = ceil(live_p / target)`` files. The partitions with
+      ``N_p > 1`` take one range shuffle on (partition column, key)
+      into ``N = Σ N_p`` tasks, the key being the sort columns, the
+      Morton value or a row hash. Range tasks are contiguous, so they
+      write at most ``N + |P| − 1`` files, and a partition many times
+      the target spreads over many tasks instead of one. The
+      partitions with ``N_p = 1`` hash by the partition column, one
+      task per value: exactly one file each;
+    - entries written under a previous spec (the migrate group): the
+      manifest holds no per-partition bytes for them under the current
+      spec, so they join that hash, with ``ceil(live / target)`` more
+      tasks — one file per value per task, never
+      ``needed × |values|``.
+
+    At most two scans (ranged and hashed), whatever the number of
+    partitions, unioned into one write. The clustered columns join
+    ``stats_cols`` (tight stats nobody records are worthless); the
+    table's layout and NDV sketches carry over (same logical rows, new
+    files).
+    """
+    from functools import reduce
+
+    from pyspark.sql import functions as F
+
+    from group5_spark.medallion import snapshots as snap
+
+    part_col = head.get("partition_by")
+    lead = [part_col] if part_col else []
+    key = ["_zval"] if zorder_cols else list(sort_cols or [])
+    groups, migrate = _by_partition(head, rewrite)
+    need = {p: _files_for(es, target_file_bytes) for p, es in groups.items()}
+    single = {p for p, n in need.items() if part_col and n == 1}
+
+    def arranged(entries: list[dict], n: int, hashed: bool):
+        df = snap.read_entries(spark, root, head, entries)
+        if zorder_cols:
+            df = _with_zval(df, zorder_cols)
+        if hashed:
+            df = df.repartition(n, part_col)
+        elif part_col:
+            hashable = [
+                f.name for f in df.schema.fields
+                if "map<" not in f.dataType.simpleString()
+            ]
+            df = df.repartitionByRange(
+                n, part_col, *(key or [F.xxhash64(*hashable)])
+            )
+        else:
+            df = df.repartitionByRange(n, *key) if key else df.coalesce(n)
+        if key:
+            df = df.sortWithinPartitions(*lead, *key)
+        return df.drop("_zval")
+
+    ranged = [e for p, es in groups.items() if p not in single for e in es]
+    hashed = migrate + [e for p in single for e in groups[p]]
+    pieces = []
+    if ranged or not hashed:
+        n = sum(n for p, n in need.items() if p not in single)
+        pieces.append(arranged(ranged, max(n, 1), False))
+    if hashed:
+        n = len(single) + (_files_for(migrate, target_file_bytes) if migrate else 0)
+        pieces.append(arranged(hashed, n, True))
+    v = _dml_commit(
+        spark, root, head, rewrite, carried,
+        _emit_all(reduce(lambda a, b: a.unionByName(b), pieces)), None,
+        note=note,
+        stats_cols=sorted(
+            set(stats_cols or []) | set(sort_cols or zorder_cols or [])
+        ) or None,
+        bloom_cols=bloom_cols,
+        carry_kmv=True,  # same logical rows, new layout
+        target_bytes=None,  # arranged above
+    )["version"]
+    # the new manifest is the carried entries plus the staged files
+    return v, len(snap.snapshot_manifest(str(root), v)["files"]) - len(carried)
 
 
 def _data_files(d: Path) -> list[Path]:
@@ -446,9 +562,10 @@ def compact_snapshot(
     stats-less table records stats on every file (commit-time
     coverage inheritance plus any ``stats_cols`` passed here).
 
-    Reads the current snapshot, rewrites it into ``ceil(bytes/target)``
-    files, and commits the result as a new overwrite version (the
-    ``note`` marks it as compaction). Nothing is deleted: prior
+    Reads the current snapshot, rewrites all of it through the
+    compaction core (:func:`_compact_commit`: ``ceil(live/target)``
+    files per partition), and commits the result as a new overwrite
+    version (the ``note`` marks it as compaction). Nothing is deleted: prior
     versions still resolve to their original small files and
     concurrent readers of any version are undisturbed. Because a
     compaction is a read-modify-write, it commits with
@@ -477,15 +594,12 @@ def compact_snapshot(
     if sort_cols and zorder_cols:
         raise ValueError("pass sort_cols or zorder_cols, not both")
     cluster_cols = list(sort_cols or zorder_cols or [])
-    if cluster_cols:
-        stats_cols = sorted(set(stats_cols or []) | set(cluster_cols))
     root = Path(path)
 
     def attempt() -> dict:
-        manifest = snap.snapshot_manifest(path)
-        files = manifest["files"]
-        nbytes = sum(e.get("bytes", 0) for e in files)
-        needed = max(1, math.ceil(nbytes / target_file_bytes))
+        head = snap.snapshot_manifest(path)
+        files = head["files"]
+        needed = _files_for(files, target_file_bytes, live=False)
         if (
             not cluster_cols
             and not force
@@ -493,25 +607,17 @@ def compact_snapshot(
             # the full rewrite below FOLDS them (reads run masked,
             # the new manifest drops the sidecars — see the eq GC in
             # snapshot_commit), ending the per-read anti-join rent
-            and not manifest.get("eq_deletes")
+            and not head.get("eq_deletes")
             and len(files) <= max(needed, min_files_to_compact)
         ):
             return {}
-        before = snap.read_entries(spark, root, manifest, files)
-        if sort_cols:
-            arranged = before.repartitionByRange(
-                needed, *sort_cols
-            ).sortWithinPartitions(*sort_cols)
-        elif zorder_cols:
-            arranged = zorder_arranged(before, zorder_cols, n_files=needed)
-        else:
-            arranged = before.coalesce(needed)
         # every file is touched and nothing carries; the core keeps
-        # the table's partition layout (a rewrite without it would
-        # silently DE-PARTITION the table) — compaction changes file
+        # the table's partition layout — compaction changes file
         # sizes, never the table contract
-        res = _dml_commit(
-            spark, root, manifest, files, [], _emit_all(arranged), None,
+        v, files_after = _compact_commit(
+            spark, root, head, files, [], target_file_bytes,
+            sort_cols=sort_cols,
+            zorder_cols=zorder_cols,
             stats_cols=stats_cols,
             bloom_cols=bloom_cols,
             note={
@@ -519,17 +625,8 @@ def compact_snapshot(
                 "files_before": len(files),
                 **({"clustered_by": cluster_cols} if cluster_cols else {}),
             },
-            carry_kmv=True,  # same logical rows, new layout
-            target_bytes=None,  # arranged above
         )
-        return {
-            "files_before": len(files),
-            # actual count from the committed manifest: a partitioned
-            # rewrite fans each task across its partition dirs, so
-            # the file count is NOT simply `needed`
-            "files_after": len(_staged(path, res["version"], [])),
-            "version": res["version"],
-        }
+        return {"files_before": len(files), "files_after": files_after, "version": v}
 
     return _retry_on_conflict(attempt)
 
@@ -588,6 +685,18 @@ def zorder_arranged(
     rectangles, not bit resolution, bound skipping precision).
     Numeric columns only — hash or dictionary-encode strings first.
     """
+    z = _with_zval(df, cols, bits)
+    out = (
+        z.repartitionByRange(n_files, "_zval")
+        if n_files
+        else z.repartitionByRange("_zval")
+    )
+    return out.sortWithinPartitions("_zval").drop("_zval")
+
+
+def _with_zval(df, cols: list[str], bits: int = 16):
+    """``df`` plus its Morton value ``_zval`` over ``cols`` (see
+    :func:`zorder_arranged`)."""
     from pyspark.sql import functions as F
 
     k = len(cols)
@@ -614,13 +723,7 @@ def zorder_arranged(
         f"(acc, b) -> acc | shiftleft((({s}) >> b) & 1L, b * {k} + {i})))"
         for i, s in enumerate(scaled)
     ]
-    z = df.withColumn("_zval", F.expr(" | ".join(terms)))
-    out = (
-        z.repartitionByRange(n_files, "_zval")
-        if n_files
-        else z.repartitionByRange("_zval")
-    )
-    return out.sortWithinPartitions("_zval").drop("_zval")
+    return df.withColumn("_zval", F.expr(" | ".join(terms)))
 
 
 def write_zorder(
@@ -1086,6 +1189,7 @@ def snapshot_merge(
     key_probe_limit: int = 4096,
     dv_threshold: float | None = None,
     schema_evolution: bool = False,
+    _head: dict | None = None,
 ) -> dict:
     """MERGE INTO a snapshot table — the upsert the reference's
     warehouse runs as its core DML (Snowflake MERGE in the silver
@@ -1158,6 +1262,10 @@ def snapshot_merge(
     them unless updated, and pre-evolution files — carried by
     reference — surface NULL on read; source batches missing TABLE
     columns are still rejected (dropping data is never implicit).
+
+    ``_head``: the table's published head manifest when the caller
+    already parsed it (the CDC sink's idempotency check); the first
+    attempt merges against it instead of reading it again.
     """
     from pyspark.sql import functions as F
 
@@ -1354,8 +1462,12 @@ def snapshot_merge(
         )
 
     def attempt() -> dict:
+        # the caller's parsed head serves the first attempt only: a
+        # conflict retry must read the head that beat it
+        nonlocal _head
+        head, _head = _head, None
         try:
-            head = snap.snapshot_manifest(path)
+            head = head or snap.snapshot_manifest(path)
         except FileNotFoundError:
             # absent table: the merge IS the initial load (every row
             # inserts); committing on parent 0 makes a racing creator
@@ -1687,8 +1799,11 @@ def compact_snapshot_partitions(
     reference. The 100 TB correction to :func:`compact_snapshot`'s
     whole-table rewrite — a streaming sink that fragments today's
     partition triggers a rewrite priced at today's volume, not the
-    table's. Unpartitioned tables fall back to
-    :func:`compact_snapshot`.
+    table's. An unpartitioned table is one partition. Entries written
+    under a previous partition spec are ALWAYS rewritten (the migrate
+    group), landing under the current layout — which is what
+    re-enables ``replace_partitions`` after an evolution. The rewrite
+    is the compaction core's (:func:`_compact_commit`).
 
     Same commit discipline as the DML ops: OCC under
     ``expected_parent`` (a racing append retries the whole
@@ -1705,119 +1820,48 @@ def compact_snapshot_partitions(
     volume. Only rewritten partitions change layout; pass no
     ``sort_cols`` for a plain coalesce.
     """
-    from pyspark.sql.types import StructType
-
     from group5_spark.medallion import snapshots as snap
 
     root = Path(path)
 
     def attempt() -> dict:
         head = snap.snapshot_manifest(path)
-        part_col = head.get("partition_by")
-        if not part_col:
-            out = compact_snapshot(
-                spark, path,
-                target_file_bytes=target_file_bytes,
-                min_files_to_compact=min_files_to_compact,
-                sort_cols=sort_cols,
+        groups, migrate = _by_partition(head, head["files"])
+        fragmented = [
+            part
+            for part, entries in groups.items()
+            if len(entries) > max(
+                _files_for(entries, target_file_bytes, live=False),
+                min_files_to_compact,
             )
-            if out:
-                out.setdefault("partitions_compacted", 1)
-            return out
-        by_part: dict = {}
-        migrate: list = []
-        for e in head["files"]:
-            # partition evolution: an entry written under a previous
-            # spec has a 'partition' value from ANOTHER column (or
-            # none) — value grouping is unsound for it. Migration is
-            # this function's job: old-spec entries are ALWAYS
-            # rewritten, landing under the current layout, which is
-            # what re-enables replace_partitions after an evolution.
-            if snap._entry_old_spec(e, part_col):
-                migrate.append(e)
-            else:
-                by_part.setdefault(e.get("partition"), []).append(e)
-        fragmented = {}
-        for part, entries in by_part.items():
-            nbytes = sum(int(e.get("bytes", 0)) for e in entries)
-            needed = max(1, math.ceil(nbytes / target_file_bytes))
-            if len(entries) > max(needed, min_files_to_compact):
-                fragmented[part] = (entries, needed)
-        if migrate:
-            nbytes = sum(int(e.get("bytes", 0)) for e in migrate)
-            # non-colliding sentinel (round-6 ADVICE): a real partition
-            # literally named "__previous_spec__" must keep its own
-            # fragmented[] slot — a string key would be overwritten here
-            # and its entries neither carried nor rewritten (data loss)
-            fragmented[_MIGRATE_GROUP] = (
-                migrate,
-                max(1, math.ceil(nbytes / target_file_bytes)),
-            )
-        if not fragmented:
+            # pending equality deletes on an unpartitioned table always
+            # warrant its (whole-table) rewrite, as in compact_snapshot
+            or (part is None and head.get("eq_deletes"))
+        ]
+        if not fragmented and not migrate:
             return {}
+        touched = [e for p in fragmented for e in groups[p]] + migrate
         carried = [
-            e
-            for part, entries in by_part.items()
-            if part not in fragmented
+            e for p, entries in groups.items() if p not in fragmented
             for e in entries
         ]
-        schema = (
-            StructType.fromJson(head["schema"])
-            if head.get("schema") is not None
-            else None
-        )
-        pieces = []
-        for part, (entries, needed) in sorted(
-            fragmented.items(), key=lambda kv: str(kv[0])
-        ):
-            # read_entries applies any deletion vectors: a compaction
-            # that read the raw files would RESURRECT masked rows —
-            # this is also how per-partition compaction FOLDS a
-            # partition's DVs back into plain files
-            df = snap.read_entries(spark, root, head, entries)
-            if part is _MIGRATE_GROUP:
-                # the migrate group spans MANY partition values — hash
-                # them together so the final partitionBy write emits
-                # ~needed files per value actually present, not
-                # needed × |values|. This wins over the generic range
-                # branch even when clustering: a repartitionByRange on
-                # sort_cols alone would spread every partition value
-                # across all `needed` tasks and re-create the blow-up.
-                df = df.repartition(needed, part_col)
-                if sort_cols:
-                    df = df.sortWithinPartitions(*sort_cols)
-            elif sort_cols:
-                df = df.repartitionByRange(
-                    needed, *sort_cols
-                ).sortWithinPartitions(*sort_cols)
-            else:
-                df = df.coalesce(needed)
-            pieces.append(df)
-        rewritten = pieces[0]
-        for p in pieces[1:]:
-            rewritten = rewritten.unionByName(p)
-        if schema is not None:
-            rewritten = rewritten.select(*[f.name for f in schema.fields])
-        touched = [e for entries, _ in fragmented.values() for e in entries]
-        v = _dml_commit(
-            spark, root, head, touched, carried, _emit_all(rewritten), None,
-            # sort_cols=None leaves stats to parent-coverage
-            # inheritance; a clustering rewrite must record stats on
-            # its sort key or the tight layout is invisible
-            stats_cols=sorted(sort_cols) if sort_cols else None,
+        v, files_after = _compact_commit(
+            spark, root, head, touched, carried, target_file_bytes,
+            sort_cols=sort_cols,
             note={
                 "compaction": "partitions",
-                "partitions": sorted(map(str, fragmented)),
+                "partitions": sorted(
+                    [*map(str, fragmented)]
+                    + (["__previous_spec__"] if migrate else [])
+                ),
                 **({"clustered_by": sorted(sort_cols)} if sort_cols else {}),
             },
-            carry_kmv=True,  # layout migration: same logical rows
-            target_bytes=None,  # arranged per partition above
-        )["version"]
+        )
         return {
             "version": v,
-            "partitions_compacted": len(fragmented),
+            "partitions_compacted": len(fragmented) + bool(migrate),
             "files_before": len(touched),
-            "files_after": len(_staged(path, v, carried)),
+            "files_after": files_after,
         }
 
     return _retry_on_conflict(attempt)
@@ -1852,10 +1896,9 @@ def compact_snapshot_masks(
     table whose eq batches touch one key region folds at the cost of
     that region, not of every pre-sidecar file.
 
-    The rewrite reads the masked entries through
-    :func:`snapshots.read_entries` (DV positions anti-joined, eq key
-    sets anti-joined — raw-file reads would resurrect masked rows) and
-    commits them as plain files. Sidecar GC is then automatic in
+    The masked entries go through the compaction core
+    (:func:`_compact_commit`): read with their masks applied, sized
+    per partition by their LIVE bytes, committed as plain files. Sidecar GC is then automatic in
     :func:`snapshots.snapshot_commit`: every carried entry's sequence
     postdates every sidecar (clean ones by construction, proven ones
     by the re-stamp) and rewritten entries get a fresh sequence, so no
@@ -1929,18 +1972,6 @@ def compact_snapshot_masks(
                 clean.append(e)
         if not masked and not restamp:
             return {}
-        nbytes = sum(int(e.get("bytes", 0)) for e in masked)
-        needed = max(1, math.ceil(nbytes / target_file_bytes))
-        part_col = head.get("partition_by")
-        df = snap.read_entries(spark, root, head, masked)
-        # hash by the partition column (one file per value — the
-        # migrate-group pattern) so the partitionBy write below never
-        # fans a range task across values; unpartitioned folds coalesce
-        df = (
-            df.repartition(needed, part_col)
-            if part_col
-            else df.coalesce(needed)
-        )
         # proven-disjoint entries promote ABOVE every sidecar: the
         # commit below stamps its staged files base_last_seq + 1, and
         # the expected_parent guard pins base == head, so this is the
@@ -1949,19 +1980,17 @@ def compact_snapshot_masks(
         carried = clean + [
             {**e, "seq": snap._last_seq(head) + 1} for e in restamp
         ]
-        v = _dml_commit(
-            spark, root, head, masked, carried, _emit_all(df), None,
+        # the fold applies masks: live rows unchanged, so the pre-fold
+        # NDV sketch (carried by the core) stays a sound upper bound
+        v, _ = _compact_commit(
+            spark, root, head, masked, carried, target_file_bytes,
             note={
                 "compaction": "masks",
                 "files_folded": len(masked),
                 "files_restamped": len(restamp),
                 "eq_sidecars_folded": len(eq_all),
             },
-            # fold applies masks: live rows unchanged, NDV of the
-            # pre-fold sketch stays a sound upper bound
-            carry_kmv=True,
-            target_bytes=None,  # arranged above
-        )["version"]
+        )
         return {
             "version": v,
             "files_folded": len(masked),
@@ -2094,27 +2123,19 @@ def apply_health(
                 # (commit-time inheritance), else every scalar
                 # schema column — a never-stats'd table has nothing
                 # to inherit from.
-                from group5_spark.medallion.snapshots import (
-                    snapshot_manifest,
-                )
+                from group5_spark.medallion.snapshots import snapshot_manifest
 
                 m = snapshot_manifest(path)
-                covered = {
-                    c
-                    for e in m["files"]
-                    for c in (e.get("stats") or {})
-                }
-                cols = sorted(covered - {m.get("partition_by")}) or [
+                part_col = m.get("partition_by")
+                covered = {c for e in m["files"] for c in (e.get("stats") or {})}
+                cols = sorted(covered - {part_col}) or [
                     f["name"]
                     for f in (m.get("schema") or {}).get("fields", [])
-                    if isinstance(f.get("type"), str)
-                    and f["name"] != m.get("partition_by")
+                    if isinstance(f.get("type"), str) and f["name"] != part_col
                 ]
                 res = compact_snapshot(
-                    spark, path,
-                    target_file_bytes=target_file_bytes,
-                    stats_cols=cols or None,
-                    force=True,
+                    spark, path, target_file_bytes=target_file_bytes,
+                    stats_cols=cols or None, force=True,
                 )
             act["result"] = res
         actions.append(act)

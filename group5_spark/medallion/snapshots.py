@@ -169,18 +169,19 @@ def _current_version(root: Path) -> int:
     return v
 
 
-def _lineage(root: Path, head: int):
+def _lineage(root: Path, head: int, known: dict | None = None):
     """Published ``(version, manifest)`` pairs, newest first, by
     following each manifest's recorded parent from ``head`` down. This
     — not filename order — is the table's history: a manifest outside
     the lineage is an orphan from a commit that lost its chain-claim
     race or crashed. A generator that parses each manifest once, so a
     caller that stops early (``last_committed_batch``) never reads the
-    older history."""
+    older history; ``known`` is ``head``'s manifest when the caller
+    already parsed it."""
     v = head
     while v > 0:
         try:
-            m = _read_manifest(root, v)
+            m = known if known is not None and v == head else _read_manifest(root, v)
             parent = int(m.get("parent", 0))
         except (OSError, ValueError):
             return
@@ -719,6 +720,7 @@ def snapshot_commit(
     eq_add: dict | None = None,
     evolve_partitioning: bool = False,
     carry_kmv: bool = False,
+    _parent: dict | None = None,
 ) -> int:
     """Write ``df`` as the next version of the table at ``path`` and
     return the new version number.
@@ -807,6 +809,12 @@ def snapshot_commit(
     upsert) must instead sketch their batch via ``ndv_cols`` so the
     append-path merge keeps the sketch honest.
 
+    ``_parent``: the parsed manifest of the parent this commit
+    extends, when the caller already holds it (the DML core does). A
+    published manifest never changes, so it is not read again; if the
+    head moved meanwhile, the chain claim still raises
+    :class:`SnapshotConflict` under ``expected_parent``.
+
     The commit protocol is stage → claim manifest slot → claim chain
     link (the atomic commit point); a crash before the chain claim
     leaves the staged files invisible and the previous version intact
@@ -846,7 +854,13 @@ def snapshot_commit(
         _current_version(root) if expected_parent is None else expected_parent
     )
     try:
-        _head_manifest = _read_manifest(root, pv_now) if pv_now else {}
+        _head_manifest = (
+            {}
+            if not pv_now
+            else _parent
+            if _parent is not None and _parent.get("version") == pv_now
+            else _read_manifest(root, pv_now)
+        )
     except FileNotFoundError:
         if expected_parent is None:
             raise
@@ -1270,7 +1284,9 @@ def latest_note(path: str) -> dict | None:
     return _read_manifest(root, v).get("note", {})
 
 
-def last_committed_batch(path: str, app_id: str) -> int | None:
+def last_committed_batch(
+    path: str, app_id: str, *, _head: dict | None = None
+) -> int | None:
     """Max streaming ``batch_id`` this ``app_id`` has durably committed
     to the table, scanning the PUBLISHED lineage's notes (Delta
     txnAppId/txnVersion pattern). Keying on the pair — not the latest
@@ -1285,9 +1301,13 @@ def last_committed_batch(path: str, app_id: str) -> int | None:
     query gets a fresh id), so the newest note from this app carries
     its max batch id. Without the early return the check re-parses
     the whole lineage every micro-batch — O(history²) metadata bytes
-    over a long-running append stream."""
+    over a long-running append stream. ``_head``: the published head
+    manifest when the caller already parsed it (the CDC sink hands the
+    same manifest on to its merge), so the walk does not read it
+    again."""
     root = Path(path)
-    for _, m in _lineage(root, _current_version(root)):
+    head = _head["version"] if _head else _current_version(root)
+    for _, m in _lineage(root, head, _head):
         note = m.get("note") or {}
         if note.get("app_id") == app_id and note.get("batch_id") is not None:
             return int(note["batch_id"])

@@ -408,8 +408,18 @@ def stream_upsert_snapshot(
 
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
         app = app_id or _checkpoint_query_id(checkpoint_dir)
+        head = None
         if app is not None:
-            done = snap.last_committed_batch(table_path, app)
+            # parsed once: the idempotency check and the merge share it
+            try:
+                head = snap.snapshot_manifest(table_path)
+            except FileNotFoundError:
+                head = None  # no table yet: nothing committed
+            done = (
+                None
+                if head is None
+                else snap.last_committed_batch(table_path, app, _head=head)
+            )
             if done is not None and done >= batch_id:
                 return  # this app already durably merged this batch
         # one cached, key-partitioned copy per batch (see docstring)
@@ -453,6 +463,7 @@ def stream_upsert_snapshot(
                 note={"app_id": app, "batch_id": batch_id},
                 dv_threshold=dv_threshold,
                 schema_evolution=schema_evolution,
+                _head=head,
             )
         finally:
             deduped.unpersist()
@@ -755,19 +766,6 @@ def _note_versions(
             parent = int(m.get("parent") or 0)
             return int(v), parent or None  # parent 0 = created the table
     return None
-
-
-def _note_parent_version(
-    path: str, app_id: str | None, batch_id: int
-) -> int | None:
-    """The snapshot version the ORIGINAL run of streaming batch
-    ``(app_id, batch_id)`` committed ON TOP OF (see
-    :func:`_note_versions`). None when that commit created the table
-    (no parent — the pre-batch state is "absent") or when the note is
-    not found (expired lineage); use :func:`_note_versions` where
-    those two cases must not be conflated."""
-    found = _note_versions(path, app_id, batch_id)
-    return found[1] if found else None
 
 
 def stream_containment_dedup(

@@ -1209,3 +1209,132 @@ def test_rmw_retries_past_racing_append(spark, tmp_path, monkeypatch, op, dv):
     else:
         assert len(got) == 101
     assert _unreferenced_staging(t) == []
+
+
+@pytest.fixture(scope="module")
+def dv_partitioned_tables(spark, tmp_path_factory):
+    """``{2: (path, rows), 16: (path, rows)}``: the same 1,920 rows
+    over 2 or 16 partitions, written by 8 single-file appends per
+    partition (every partition fragmented), then a quarter of the rows
+    deleted under deletion vectors (every file partly masked)."""
+    from pyspark.sql import functions as F
+
+    from group5_spark.medallion.maintenance import snapshot_delete
+    from group5_spark.medallion.snapshots import snapshot_commit, snapshot_read
+
+    out = {}
+    for n_parts in (2, 16):
+        t = str(tmp_path_factory.mktemp("sizing") / f"p{n_parts}")
+        for i in range(8):
+            df = spark.range(i * 240, (i + 1) * 240).select(
+                "id",
+                (F.col("id") % n_parts).cast("string").alias("p"),
+                F.sha2(F.col("id").cast("string"), 256).alias("s"),
+                ((F.col("id") / 32).cast("long") % 4).alias("q"),
+            )
+            snapshot_commit(
+                df.repartition(1, "p"), t, mode="append" if i else "overwrite",
+                partition_by="p", stats_cols=["id"],
+            )
+        snapshot_delete(spark, t, [("q", "=", 0)], dv_threshold=0.9)
+        out[n_parts] = t, sorted(map(tuple, snapshot_read(spark, t).collect()))
+    return out
+
+
+class _Planned(Exception):
+    """Raised in place of the commit once the frame is captured."""
+
+
+@pytest.mark.parametrize(
+    "op", ["force", "sort_cols", "zorder_cols", "partitions", "masks"]
+)
+def test_compactions_share_one_per_partition_sizing_rule(
+    spark, tmp_path, monkeypatch, dv_partitioned_tables, op
+):
+    """Every compaction sizes each rewritten partition by its own live
+    bytes (manifest bytes scaled by unmasked rows): at most
+    Σ_p ceil(live_p / target) + |P| new files — a rewrite whose tasks
+    span every partition value writes up to tasks × |P| — and, with
+    each partition holding ~4× the target, more than one file per
+    partition (hashing a partition to one task writes one oversized
+    file). Same rows before and after. The frame handed to the commit
+    core scans as many relations for 16 rewritten partitions as for 2
+    (no per-partition union branch); the 2-partition run stops at the
+    commit, once planned."""
+    import math
+    import shutil
+
+    from group5_spark.medallion import maintenance as mt
+    from group5_spark.medallion.snapshots import (
+        entry_rows,
+        snapshot_manifest,
+        snapshot_read,
+    )
+
+    real = mt._dml_commit
+
+    def live(entries) -> float:
+        return sum(e["bytes"] * entry_rows(e) / e["rows"] for e in entries)
+
+    def compaction(t: str, n_parts: int, commit: bool):
+        frames = []
+
+        def capture(spark_, root, head, touched, carried, frame, *a, **kw):
+            frames.append(frame)
+            if not commit:
+                raise _Planned
+            return real(spark_, root, head, touched, carried, frame, *a, **kw)
+
+        target = math.ceil(live(snapshot_manifest(t)["files"]) / (4 * n_parts))
+        monkeypatch.setattr(mt, "_dml_commit", capture)
+        out = None
+        try:
+            if op == "partitions":
+                out = mt.compact_snapshot_partitions(
+                    spark, t, target_file_bytes=target
+                )
+            elif op == "masks":
+                out = mt.compact_snapshot_masks(
+                    spark, t, target_file_bytes=target
+                )
+            else:
+                kw = {
+                    "force": {"force": True},
+                    "sort_cols": {"sort_cols": ["id"]},
+                    "zorder_cols": {"zorder_cols": ["id", "q"]},
+                }[op]
+                out = mt.compact_snapshot(
+                    spark, t, target_file_bytes=target, **kw
+                )
+        except _Planned:
+            pass
+        finally:
+            monkeypatch.setattr(mt, "_dml_commit", real)
+        assert len(frames) == 1
+        plan = frames[0]._jdf.queryExecution().analyzed().toString()
+        return out, target, plan.count("Relation [")
+
+    _, _, scans2 = compaction(dv_partitioned_tables[2][0], 2, commit=False)
+
+    base, rows = dv_partitioned_tables[16]
+    t = str(tmp_path / "t")
+    shutil.copytree(base, t)
+    before = snapshot_manifest(t)
+    out, target, scans16 = compaction(t, 16, commit=True)
+    assert scans2 == scans16 > 0, (scans2, scans16)
+
+    after = snapshot_manifest(t, out["version"])
+    kept = {e["path"] for e in after["files"]}
+    rewritten: dict = {}
+    for e in before["files"]:
+        if e["path"] not in kept:
+            rewritten.setdefault(e["partition"], []).append(e)
+    assert len(rewritten) == 16
+    new = [e for e in after["files"] if e["seq"] == after["last_seq"]]
+    bound = sum(
+        math.ceil(live(es) / target) for es in rewritten.values()
+    ) + len(rewritten)
+    assert 0 < len(new) <= bound, (len(new), bound)
+    per_part = {p: sum(e["partition"] == p for e in new) for p in rewritten}
+    assert min(per_part.values()) > 1, per_part
+    assert sorted(map(tuple, snapshot_read(spark, t).collect())) == rows

@@ -1556,7 +1556,7 @@ def test_note_parent_version_resolves_pre_batch_state(spark, tmp_path):
     original run elected against. A table-creating commit resolves to
     None (pre-batch state is 'absent'), as does an unknown note."""
     from group5_spark.medallion.snapshots import snapshot_commit
-    from group5_spark.streaming.jobs import _note_parent_version
+    from group5_spark.streaming.jobs import _note_versions
 
     path = str(tmp_path / "t")
     df = spark.createDataFrame([(1, "a")], ["doc_id", "text"])
@@ -1569,11 +1569,11 @@ def test_note_parent_version_resolves_pre_batch_state(spark, tmp_path):
     snapshot_commit(
         df, path, mode="append", note={"app_id": "app", "batch_id": 2}
     )
-    assert _note_parent_version(path, "app", 0) is None  # created table
-    assert _note_parent_version(path, "app", 1) == v1
-    assert _note_parent_version(path, "app", 2) == v2
-    assert _note_parent_version(path, "app", 99) is None
-    assert _note_parent_version(path, "other", 1) is None
+    assert _note_versions(path, "app", 0)[1] is None  # created table
+    assert _note_versions(path, "app", 1)[1] == v1
+    assert _note_versions(path, "app", 2)[1] == v2
+    assert _note_versions(path, "app", 99) is None
+    assert _note_versions(path, "other", 1) is None
 
 
 def test_stream_containment_then_offline_compaction_lifecycle(
